@@ -44,14 +44,16 @@ IDLE_LOADAVG_MAX = 1.0
 IDLE_STEAL_PCT_MAX = 2.0
 
 
-def _cpu_jiffies() -> tuple[int, int] | None:
-    """(steal, total) jiffies from /proc/stat, or None off-Linux."""
+def _cpu_jiffies(stat_path: str = "/proc/stat") -> tuple[int, int] | None:
+    """(steal, total) jiffies from /proc/stat, or None off-Linux. The
+    total sums the first eight fields (user .. steal): guest and
+    guest_nice are already counted inside user and nice."""
     try:
-        with open("/proc/stat") as fh:
+        with open(stat_path) as fh:
             parts = fh.readline().split()
         vals = [int(x) for x in parts[1:]]
         steal = vals[7] if len(vals) > 7 else 0
-        return steal, sum(vals)
+        return steal, sum(vals[:8])
     except (OSError, ValueError, IndexError):
         return None
 

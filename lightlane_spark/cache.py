@@ -1,18 +1,17 @@
-"""Library cache registry — the composition contract for persists.
+"""Session-scoped state: the library cache registry and session memos.
+This module is the one holder of state that outlives a single call.
 
-Several operators persist an intermediate that is read more than once
-(shingle relations, LSH buckets, fan-out inputs). Each site is
-deliberately NOT unpersisted inline: the returned plan is lazy, so an
-eager unpersist would empty the cache before the caller's action ever
-runs. That leaves lifecycle management to the caller — and a user
-composing many queries in one long-lived session would otherwise
+**Cache registry.** Several operators persist an intermediate that is
+read more than once (shingle relations, LSH buckets, fan-out inputs).
+Each site is deliberately NOT unpersisted inline: the returned plan is
+lazy, so an eager unpersist would empty the cache before the caller's
+action ever runs. That leaves lifecycle management to the caller — and
+a user composing many queries in one long-lived session would otherwise
 accumulate corpus-sized cached frames until LRU eviction / GC pressure
-does the cleanup for them (VERDICT r5/r6 ask).
-
-This module is that lifecycle contract:
+does the cleanup for them.
 
 - every library persist goes through :func:`tracked_persist`, which
-  registers the frame in a module-level registry;
+  registers the frame in the module-level registry ``_TRACKED``;
 - :func:`unpersist_all` releases every tracked frame (and only
   tracked frames — a user's own ``df.persist()`` is never touched);
 - :func:`cache_scope` wraps a unit of composition (one query, one
@@ -23,21 +22,33 @@ The registry holds strong references on purpose: Spark's SQL
 CacheManager keys cached data by canonicalized plan, not by the
 Python wrapper, so a garbage-collected wrapper would orphan the cache
 entry with no handle left to unpersist it.
+
+**Session memos.** :func:`session_memo` caches values that are valid for
+one SparkContext — parsed expression Columns, inferred schemas, the
+shipped-package flag. Entries are keyed weakly by the context object,
+so a stopped and dropped context takes its entries with it.
+
+Thread contract: cache scopes are per-thread. A scope releases only
+the frames persisted on its own thread while it was the innermost open
+scope there, so pipelines on different threads sharing one session
+never release each other's frames. :func:`unpersist_all` is
+process-wide: it releases every tracked frame, whichever thread
+persisted it. The registry and the memos are changed under one lock.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
 from contextlib import contextmanager
-from typing import Iterator
+from typing import Any, Callable, Iterator
 
 from pyspark.sql import DataFrame
 
+_LOCK = threading.RLock()
 _TRACKED: list[DataFrame] = []
-# identities of registered frames — dedup guard so loop-heavy callers
-# (e.g. cms_estimate probing the same pinned sketch per call) don't
-# grow the registry by one strong reference per call (ADVICE r8).
-# id() is stable here because the registry holds the strong ref.
-_TRACKED_IDS: set[int] = set()
+_SCOPES = threading.local()  # .stack: this thread's open scopes, innermost last
+_MEMOS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
@@ -47,25 +58,24 @@ def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
     calling ``persist()`` directly, so :func:`unpersist_all` /
     :func:`cache_scope` can release library-held cache without
     touching caller-owned persists. Re-registering the same frame is
-    a no-op (it stays at its FIRST registration point, so a nested
-    :func:`cache_scope` never releases a frame an outer scope pinned).
+    a no-op (it stays with the scope that FIRST registered it, so a
+    nested :func:`cache_scope` never releases a frame an outer scope
+    pinned, and loop-heavy callers such as ``cms_estimate`` re-pinning
+    one sketch do not grow the registry).
     """
     out = df.persist(storage_level) if storage_level is not None else df.persist()
-    if id(out) not in _TRACKED_IDS:
-        _TRACKED.append(out)
-        _TRACKED_IDS.add(id(out))
+    with _LOCK:
+        if not any(t is out for t in _TRACKED):
+            _TRACKED.append(out)
+            stack = getattr(_SCOPES, "stack", None)
+            if stack:
+                stack[-1].append(out)
     return out
 
 
-def unpersist_all(blocking: bool = False) -> int:
-    """Unpersist every frame the library has persisted; returns the
-    number released. Caller-owned persists are untouched. Idempotent —
-    frames already unpersisted (or whose session is gone) are skipped
-    silently."""
+def _unpersist(frames: list[DataFrame], blocking: bool) -> int:
     released = 0
-    while _TRACKED:
-        df = _TRACKED.pop()
-        _TRACKED_IDS.discard(id(df))
+    for df in reversed(frames):
         try:
             df.unpersist(blocking)
             released += 1
@@ -74,26 +84,58 @@ def unpersist_all(blocking: bool = False) -> int:
     return released
 
 
+def unpersist_all(blocking: bool = False) -> int:
+    """Unpersist every frame the library has persisted, on any thread;
+    returns the number released. Caller-owned persists are untouched.
+    Idempotent — frames already unpersisted (or whose session is gone)
+    are skipped silently."""
+    with _LOCK:
+        frames = _TRACKED[:]
+        del _TRACKED[:]
+    return _unpersist(frames, blocking)
+
+
 @contextmanager
 def cache_scope(blocking: bool = False) -> Iterator[None]:
-    """Scope a unit of composition: frames persisted by library code
-    inside the ``with`` block are unpersisted on exit (success or
-    error). Scopes nest in the ordinary LIFO ``with`` discipline; an
-    inner scope releases only the frames persisted after it opened.
+    """Scope a unit of composition: frames persisted by library code on
+    this thread inside the ``with`` block are unpersisted on exit
+    (success or error). Scopes nest in the ordinary LIFO ``with``
+    discipline; an inner scope releases only the frames persisted while
+    it was open.
 
     >>> with cache_scope():
     ...     dedup_minhash(docs).count()   # persists shingles/buckets
     ... # exiting: those frames are unpersisted, the session is clean
     """
-    mark = len(_TRACKED)
+    if not hasattr(_SCOPES, "stack"):
+        _SCOPES.stack = []
+    mine: list[DataFrame] = []
+    _SCOPES.stack.append(mine)
     try:
         yield
     finally:
-        tail = _TRACKED[mark:]
-        del _TRACKED[mark:]
-        for df in reversed(tail):
-            _TRACKED_IDS.discard(id(df))
-            try:
-                df.unpersist(blocking)
-            except Exception:  # noqa: BLE001 — session may be stopped
-                pass
+        _SCOPES.stack.pop()
+        ours = {id(df) for df in mine}  # stable: ``mine`` holds the refs
+        with _LOCK:
+            # frames unpersist_all already took are no longer ours
+            released = [t for t in _TRACKED if id(t) in ours]
+            _TRACKED[:] = [t for t in _TRACKED if id(t) not in ours]
+        _unpersist(released, blocking)
+
+
+def session_memo(spark, key: Any, build: Callable[[], Any]) -> Any:
+    """``build()``'s value for ``key``, computed once per SparkContext.
+
+    ``spark`` is a SparkSession or a SparkContext. Entries live as long
+    as the context object does: a stopped context's entries go with it
+    once it is garbage-collected. With no context (``None``) nothing
+    is memoized. ``build`` runs under the lock, so concurrent callers
+    of one key build it once."""
+    sc = getattr(spark, "sparkContext", spark)
+    if sc is None:
+        return build()
+    with _LOCK:
+        memo = _MEMOS.setdefault(sc, {})
+        if key not in memo:
+            memo[key] = build()
+        return memo[key]

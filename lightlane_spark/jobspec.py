@@ -49,6 +49,7 @@ caller's session privileges, same trust model as the reference's
 
 from __future__ import annotations
 
+from types import MappingProxyType
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -124,7 +125,7 @@ def _t_lm_score(
     return df.join(scores, on=id_col, how="left")
 
 
-_TRANSFORMS: dict[str, Any] = {
+_TRANSFORMS: MappingProxyType[str, Any] = MappingProxyType({
     "filter": _t_filter,
     "select": _t_select,
     "with_column": _t_with_column,
@@ -135,11 +136,11 @@ _TRANSFORMS: dict[str, Any] = {
     "sql": _t_sql,
     "url_dedup": _t_url_dedup,
     "lm_score": _t_lm_score,
-}
+})
 
 # Pipeline-method transforms (corpus stages) — dispatched by name with
 # the remaining spec keys as kwargs.
-_PIPELINE_STAGES = {"dedup_exact_text", "dedup_fuzzy", "quota_sample"}
+_PIPELINE_STAGES = frozenset({"dedup_exact_text", "dedup_fuzzy", "quota_sample"})
 
 
 def build_pipeline(spark: SparkSession, spec: dict) -> Pipeline:

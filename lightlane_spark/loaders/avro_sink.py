@@ -36,6 +36,7 @@ import json
 import os
 import struct
 from collections.abc import Iterator
+from types import MappingProxyType
 
 import pandas as pd
 
@@ -49,7 +50,7 @@ _MAGIC = b"Obj\x01"
 # schema mapping
 # ---------------------------------------------------------------------------
 
-_SPARK_TO_AVRO = {
+_SPARK_TO_AVRO = MappingProxyType({
     T.BooleanType: "boolean",
     T.IntegerType: "int",
     T.ShortType: "int",
@@ -59,7 +60,7 @@ _SPARK_TO_AVRO = {
     T.DoubleType: "double",
     T.StringType: "string",
     T.BinaryType: "bytes",
-}
+})
 
 
 def _avro_type(dt: T.DataType):

@@ -104,6 +104,14 @@ def merge_upsert(
     return kept.unionByName(staging)
 
 
+def fs_path(spark: SparkSession, path_str: str):
+    """(FileSystem, Path) for ``path_str``'s scheme via the JVM
+    Hadoop API — local paths resolve against the default FS."""
+    sc = spark.sparkContext
+    path = sc._jvm.org.apache.hadoop.fs.Path(path_str)
+    return path.getFileSystem(sc._jsc.hadoopConfiguration()), path
+
+
 @dataclass
 class Loader:
     """Write a DataFrame to a parquet table path under a load mode.
@@ -174,7 +182,7 @@ class Loader:
         write + a rename swap through the Hadoop FileSystem API — so
         the same code works on file://, HDFS, and S3A paths, not just
         the driver-local filesystem."""
-        fs, table = self._fs_path(self.table_path)
+        fs, table = fs_path(self.spark, self.table_path)
         if not fs.exists(table):
             staging.write.mode("overwrite").format(self.fmt).save(self.table_path)
             return
@@ -186,7 +194,7 @@ class Loader:
             schema_evolution=self.schema_evolution,
         )
         reconcile = self._sibling_tmp_path()
-        _, rec = self._fs_path(reconcile)
+        _, rec = fs_path(self.spark, reconcile)
         try:
             merged.write.mode("overwrite").format(self.fmt).save(reconcile)
             # Swap, mirroring the reference's rename dance
@@ -194,7 +202,7 @@ class Loader:
             # reconcile dir into place, drop the old. If the second
             # rename fails, restore the retired dir so the table path
             # is never left missing.
-            _, retired = self._fs_path(self.table_path + ".old-" + uuid.uuid4().hex[:8])
+            _, retired = fs_path(self.spark, self.table_path + ".old-" + uuid.uuid4().hex[:8])
             if not fs.rename(table, retired):
                 raise IOError(f"MERGE swap: could not retire {self.table_path}")
             if not fs.rename(rec, table):
@@ -205,14 +213,6 @@ class Loader:
             if fs.exists(rec):
                 fs.delete(rec, True)
             raise
-
-    def _fs_path(self, path_str: str):
-        """(FileSystem, Path) for ``path_str``'s scheme via the JVM
-        Hadoop API — local paths resolve against the default FS."""
-        jvm = self.spark.sparkContext._jvm
-        hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf), path
 
     def _sibling_tmp_path(self) -> str:
         # Scheme-preserving sibling path (os.path would mangle URIs).

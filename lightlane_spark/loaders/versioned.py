@@ -24,9 +24,26 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from lightlane_spark.loaders.loader import merge_upsert
+from lightlane_spark.loaders.loader import fs_path, merge_upsert
 
 _POINTER = "_LATEST"
+
+
+def _read_small(fs, path) -> str:
+    """The text of a small ASCII file (pointer, commit marker), read
+    byte-at-a-time via the no-arg ``read()`` overload — the only
+    FSDataInputStream.read signature py4j can call without a Java
+    byte[]. At most 64 bytes are read."""
+    stream = fs.open(path)
+    try:
+        data = bytearray()
+        b = stream.read()
+        while b != -1 and len(data) < 64:
+            data.append(b)
+            b = stream.read()
+    finally:
+        stream.close()
+    return data.decode("ascii").strip()
 
 
 class VersionedTable:
@@ -88,7 +105,7 @@ class VersionedTable:
 
     def versions(self) -> list[int]:
         """All version numbers present on storage, ascending."""
-        fs, base = self._fs_path(self.base_path)
+        fs, base = fs_path(self.spark, self.base_path)
         if not fs.exists(base):
             return []
         out = []
@@ -107,23 +124,11 @@ class VersionedTable:
         ``_write_pointer``, or a crash between those two calls), fall
         back to the newest version on storage — readers must never see
         an intact table as missing."""
-        fs, ptr = self._fs_path(f"{self.base_path}/{_POINTER}")
+        fs, ptr = fs_path(self.spark, f"{self.base_path}/{_POINTER}")
         if not fs.exists(ptr):
             vs = self.versions()
             return vs[-1] if vs else None
-        stream = fs.open(ptr)
-        try:
-            # byte-at-a-time via the no-arg read() overload — the only
-            # FSDataInputStream.read signature py4j can call without a
-            # Java byte[]; the pointer is a handful of ASCII digits.
-            data = bytearray()
-            b = stream.read()
-            while b != -1 and len(data) < 64:
-                data.append(b)
-                b = stream.read()
-        finally:
-            stream.close()
-        return int(bytes(data).decode("ascii").strip())
+        return int(_read_small(fs, ptr))
 
     def read_asof(self, ts: float) -> DataFrame:
         """Time travel by TIMESTAMP: read the newest version whose
@@ -145,21 +150,12 @@ class VersionedTable:
         """(version, commit_epoch_seconds) for every marked version,
         ascending by version."""
         out = []
-        fs, _ = self._fs_path(self.base_path)
+        fs, _ = fs_path(self.spark, self.base_path)
         for v in self.versions():
-            _, marker = self._fs_path(f"{self._version_path(v)}/_COMMIT_TS")
+            _, marker = fs_path(self.spark, f"{self._version_path(v)}/_COMMIT_TS")
             if not fs.exists(marker):
                 continue
-            stream = fs.open(marker)
-            try:
-                data = bytearray()
-                b = stream.read()
-                while b != -1 and len(data) < 64:
-                    data.append(b)
-                    b = stream.read()
-            finally:
-                stream.close()
-            out.append((v, float(bytes(data).decode("ascii").strip())))
+            out.append((v, float(_read_small(fs, marker))))
         return out
 
     # -- manage -------------------------------------------------------
@@ -184,10 +180,10 @@ class VersionedTable:
         vs = self.versions()
         keep = set(vs[-keep_last:]) | ({current} if current is not None else set())
         removed = []
-        fs, _ = self._fs_path(self.base_path)
+        fs, _ = fs_path(self.spark, self.base_path)
         for v in vs:
             if v not in keep:
-                _, p = self._fs_path(self._version_path(v))
+                _, p = fs_path(self.spark, self._version_path(v))
                 fs.delete(p, True)
                 removed.append(v)
         return removed
@@ -198,7 +194,7 @@ class VersionedTable:
         return f"{self.base_path}/v={n}"
 
     def _write_commit_marker(self, n: int) -> None:
-        fs, marker = self._fs_path(f"{self._version_path(n)}/_COMMIT_TS")
+        fs, marker = fs_path(self.spark, f"{self._version_path(n)}/_COMMIT_TS")
         out = fs.create(marker, True)
         try:
             out.write(bytearray(repr(float(self._clock())).encode("ascii")))
@@ -209,9 +205,9 @@ class VersionedTable:
         """Atomic pointer flip: write a temp file, rename over the old
         pointer (rename replaces atomically on HDFS/local; on S3A it
         is copy+delete — pair with a lock there)."""
-        fs, ptr = self._fs_path(f"{self.base_path}/{_POINTER}")
-        _, tmp = self._fs_path(
-            f"{self.base_path}/.{_POINTER}.tmp-{uuid.uuid4().hex[:8]}"
+        fs, ptr = fs_path(self.spark, f"{self.base_path}/{_POINTER}")
+        _, tmp = fs_path(
+            self.spark, f"{self.base_path}/.{_POINTER}.tmp-{uuid.uuid4().hex[:8]}"
         )
         out = fs.create(tmp, True)
         try:
@@ -222,12 +218,6 @@ class VersionedTable:
             fs.delete(ptr, False)
         if not fs.rename(tmp, ptr):
             raise IOError(f"could not update {_POINTER} at {self.base_path}")
-
-    def _fs_path(self, path_str: str):
-        jvm = self.spark.sparkContext._jvm
-        hconf = self.spark.sparkContext._jsc.hadoopConfiguration()
-        path = jvm.org.apache.hadoop.fs.Path(path_str)
-        return path.getFileSystem(hconf), path
 
     # -- governance ---------------------------------------------------
 

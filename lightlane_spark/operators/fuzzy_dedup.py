@@ -35,19 +35,7 @@ from pyspark.sql import functions as F
 from lightlane_spark.functions.hashing import h32
 from lightlane_spark.operators.text import fingerprint_md5, tokenize
 
-from lightlane_spark.cache import tracked_persist
-
-# session-scoped memo of the signature-build expression columns
-# (see minhash_signature_arrays): {(applicationId, num_hashes):
-# (proj_cols, min_cols, array_col)} — parsed Columns are immutable
-# expression trees, reusable across plans. The applicationId key
-# scopes entries to the live context; stale-session entries are
-# EVICTED on every memo miss via memo.evict_stale (ADVICE r13 — a
-# miss under a new appId is when a session cycled, and one process
-# has one active context, so other appIds' entries are dead).
-_SIG_EXPR_MEMO: dict = {}
-_BAND_EXPR_MEMO: dict = {}
-_PAIR_EXPR_MEMO: dict = {}
+from lightlane_spark.cache import session_memo, tracked_persist
 
 
 # ---------------------------------------------------------------------------
@@ -153,13 +141,7 @@ def minhash_signature_arrays(
     """
     from lightlane_spark.functions.hashing import H32_SPACE
 
-    sess = shingles.sparkSession
-    key = (sess.sparkContext.applicationId, num_hashes)
-    cols = _SIG_EXPR_MEMO.get(key)
-    if cols is None:
-        from lightlane_spark.memo import evict_stale
-
-        evict_stale(_SIG_EXPR_MEMO, key[0])
+    def build():
         d = "md5(sh)"
         proj = [
             F.expr(
@@ -178,9 +160,11 @@ def minhash_signature_arrays(
         arr = F.expr(
             "array(" + ", ".join(f"m{i}" for i in range(num_hashes)) + ") as sig"
         )
-        cols = (proj, mins, arr)
-        _SIG_EXPR_MEMO[key] = cols
-    proj, mins, arr = cols
+        return proj, mins, arr
+
+    proj, mins, arr = session_memo(
+        shingles.sparkSession, ("minhash_sig", num_hashes), build
+    )
     hm = shingles.select(F.col(id_col), *proj)
     return hm.groupBy(id_col).agg(*mins).select(F.col(id_col), arr)
 
@@ -215,18 +199,11 @@ def lsh_band_keys(
         # concat_ws nodes — ~0.2 s of py4j construction per build at
         # (4, 4), paid by every LSH-family query. Parsed Columns are
         # immutable expression trees, so memoize per session (the
-        # _SIG_EXPR_MEMO / hyperplane_bits precedent).
-        key = (
-            df.sparkSession.sparkContext.applicationId,
-            bands,
-            rows_per_band,
-        )
-        band_structs = _BAND_EXPR_MEMO.get(key)
-        if band_structs is None:
-            from lightlane_spark.memo import evict_stale
-
-            evict_stale(_BAND_EXPR_MEMO, key[0])
-            band_structs = F.array(
+        # minhash_signature_arrays / hyperplane_bits precedent).
+        band_structs = session_memo(
+            df.sparkSession,
+            ("lsh_bands", bands, rows_per_band),
+            lambda: F.array(
                 *[
                     F.struct(
                         F.lit(b).alias("band"),
@@ -242,8 +219,8 @@ def lsh_band_keys(
                     )
                     for b in range(bands)
                 ]
-            )
-            _BAND_EXPR_MEMO[key] = band_structs
+            ),
+        )
         return df.select(
             F.col(id_col), F.explode(band_structs).alias("__b")
         ).select(id_col, F.col("__b.band").alias("band"), F.col("__b.band_sig").alias("band_sig"))
@@ -274,14 +251,11 @@ def _pairs_from_buckets(buckets: DataFrame, max_bucket_size: int | None) -> Data
     if max_bucket_size is not None:
         buckets = buckets.filter(F.size("ids") <= max_bucket_size)
     # memoized per session: two nested lambda conversions cost ~0.1 s
-    # of py4j per build (same rationale as _BAND_EXPR_MEMO)
-    key = buckets.sparkSession.sparkContext.applicationId
-    pairs = _PAIR_EXPR_MEMO.get(key)
-    if pairs is None:
-        from lightlane_spark.memo import evict_stale
-
-        evict_stale(_PAIR_EXPR_MEMO, key)
-        pairs = F.flatten(
+    # of py4j per build (same rationale as the lsh_band_keys memo)
+    pairs = session_memo(
+        buckets.sparkSession,
+        "bucket_pairs",
+        lambda: F.flatten(
             F.transform(
                 F.col("ids"),
                 lambda x, i: F.transform(
@@ -289,8 +263,8 @@ def _pairs_from_buckets(buckets: DataFrame, max_bucket_size: int | None) -> Data
                     lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
                 ),
             )
-        )
-        _PAIR_EXPR_MEMO[key] = pairs
+        ),
+    )
     return (
         buckets.select(F.explode(pairs).alias("p"))
         .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))

@@ -230,7 +230,7 @@ BLOCKHASH_SCHEMA = "doc_id bigint, sig bigint"
 # so exact band-key matching is a LOSSLESS candidate filter for
 # distance ≤ 3 (same argument as MinHash-LSH banding).
 BLOCKHASH_CHUNKS = 14
-BLOCKHASH_BANDS = [(0, 16), (16, 16), (32, 12), (44, 12)]  # (bit offset, width)
+BLOCKHASH_BANDS = ((0, 16), (16, 16), (32, 12), (44, 12))  # (bit offset, width)
 
 
 def blockhash_signatures(

@@ -22,15 +22,12 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark import SparkContext
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lightlane_spark.cache import tracked_persist
+from lightlane_spark.cache import session_memo, tracked_persist
 from lightlane_spark.sources.localrel import local_df
-
-# session-scoped memo of parsed hyperplane-bucket expressions
-# (see hyperplane_bits): {(applicationId, sql): Column}
-_HP_EXPR_MEMO: dict = {}
 
 
 def _vec_double(col: Column | str) -> Column:
@@ -174,7 +171,7 @@ def topk_bruteforce_arrow(
         for rb in batches:
             if rb.num_rows == 0:
                 continue
-            col = rb.column(1)
+            col = rb.column("cv")
             # Arrow list<double> is ONE contiguous values buffer plus
             # offsets (guide §4.2): when every row is a full D-length
             # non-null vector — the operator's contract, and what the
@@ -198,7 +195,7 @@ def topk_bruteforce_arrow(
                 cm = vals[offs[0] : offs[-1]].reshape(len(widths), widths[0])
             else:  # ragged/null rows: defensive per-row fallback
                 cm = np.array(col.to_pylist(), dtype=np.float64)
-            cids = np.asarray(rb.column(0), dtype=np.int64)
+            cids = np.asarray(rb.column("cid"), dtype=np.int64)
             cn = np.sqrt((cm * cm).sum(axis=1))
             dots = qm @ cm.T  # Q×B
             valid = np.isfinite(dots)
@@ -327,18 +324,10 @@ def hyperplane_bits(
     # Parse once per session (r13): Catalyst parses this ~6 KB
     # expression in ~50 ms, and a multi-table LSH query builds 8 of
     # them PER RUN — ~0.4 s of pure driver-side parsing. The parsed
-    # Column is an immutable expression tree, reusable across plans;
-    # the applicationId key drops memo entries from a stopped context.
-    sess = SparkSession.getActiveSession()
-    key = (sess.sparkContext.applicationId if sess else None, sql)
-    col = _HP_EXPR_MEMO.get(key)
-    if col is None:
-        from lightlane_spark.memo import evict_stale
-
-        evict_stale(_HP_EXPR_MEMO, key[0])
-        col = F.expr(sql)
-        _HP_EXPR_MEMO[key] = col
-    return col
+    # Column is an immutable expression tree, reusable across plans.
+    return session_memo(
+        SparkContext._active_spark_context, ("hyperplane", sql), lambda: F.expr(sql)
+    )
 
 
 def _table_salt(t: int) -> str:

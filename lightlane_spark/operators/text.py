@@ -24,6 +24,7 @@ Design notes per operator:
 from __future__ import annotations
 
 from collections.abc import Sequence
+from types import MappingProxyType
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -35,12 +36,12 @@ from lightlane_spark.cache import tracked_persist
 # Tiny built-in stopword lexicons (top function words). Good enough to
 # separate the languages the corpus declares; swap for a real lexicon
 # in production.
-STOPWORDS = {
-    "en": ["the", "a", "of", "and", "to", "in", "is", "it"],
-    "de": ["der", "die", "das", "und", "ist", "ein", "zu", "von"],
-    "es": ["el", "la", "de", "que", "y", "en", "un", "es"],
-    "fr": ["le", "la", "de", "et", "un", "est", "que", "en"],
-}
+STOPWORDS = MappingProxyType({
+    "en": ("the", "a", "of", "and", "to", "in", "is", "it"),
+    "de": ("der", "die", "das", "und", "ist", "ein", "zu", "von"),
+    "es": ("el", "la", "de", "que", "y", "en", "un", "es"),
+    "fr": ("le", "la", "de", "et", "un", "est", "que", "en"),
+})
 
 BPE_ISH_TOKEN_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -101,7 +102,7 @@ def quality_score(text: Column | str) -> Column:
     return 0.25 * len_ok + 0.25 * alpha_ratio + 0.25 * sw_ok + 0.25 * wlen_ok
 
 
-GOPHER_STOPWORDS = ["the", "be", "to", "of", "and", "that", "have", "with"]
+GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
 
 
 def gopher_rules(

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from lightlane_spark.cache import tracked_persist
+from lightlane_spark.cache import cache_scope, tracked_persist
 
 
 def json_extract(
@@ -154,12 +154,10 @@ def quarantine(
 def fan_out(df: DataFrame, sinks: list[Callable[[DataFrame], Any]]) -> None:
     """OP-20: one scan, many outputs (reference ``call_handlers``,
     ``dumper/worker.py:19-23``). Persist once, write N times."""
-    cached = df.transform(tracked_persist)
-    try:
+    with cache_scope():
+        cached = df.transform(tracked_persist)
         for sink in sinks:
             sink(cached)
-    finally:
-        cached.unpersist()
 
 
 def chunk_text_udtf(chunk_size: int = 32, stride: int = 24):

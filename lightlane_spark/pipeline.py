@@ -36,7 +36,7 @@ from lightlane_spark.operators.transform import quarantine
 from lightlane_spark.sources.jdbc import read_jdbc
 from lightlane_spark.sources.parquet import read_table
 
-from lightlane_spark.cache import tracked_persist
+from lightlane_spark.cache import cache_scope, tracked_persist
 
 
 @dataclass
@@ -175,15 +175,13 @@ class Pipeline:
         self._require_df()
         if not self._sinks and self._bad_sink is None:
             raise ValueError("pipeline has no sinks; add to_*/load first")
-        cached = self._df.transform(tracked_persist)
-        try:
+        with cache_scope():
+            cached = self._df.transform(tracked_persist)
             for sink in self._sinks:
                 sink(cached)
             if self._bad_df is not None and self._bad_sink is not None:
                 self._bad_sink(self._bad_df)
             return self.metrics.results()
-        finally:
-            cached.unpersist(blocking=False)
 
     def dataframe(self) -> DataFrame:
         """The current (lazy) stage output — for ad-hoc inspection."""

@@ -21,6 +21,8 @@ similarities (reduction-order variance, ≤1e-15) and moments past the
 
 from __future__ import annotations
 
+from types import MappingProxyType
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -4478,3 +4480,7 @@ ORACLE["neardup_dedup_quality"] = f"""
     )
     SELECT doc_id FROM pick WHERE r = 1
 """
+
+# the registries are complete: read-only from here on
+QUERIES = MappingProxyType(QUERIES)
+ORACLE = MappingProxyType(ORACLE)

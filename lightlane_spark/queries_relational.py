@@ -12,6 +12,7 @@ double (deterministic in both engines).
 from __future__ import annotations
 
 import os
+from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -986,7 +987,7 @@ def q_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prof.crossJoin(canary)
 
 
-_Z_SPECS_SPARK = [
+_Z_SPECS_SPARK = (
     (
         "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', "
         "CAST(ts AS TIMESTAMP_NTZ))",
@@ -994,11 +995,11 @@ _Z_SPECS_SPARK = [
         1893456000,  # 2030-01-01
     ),
     ("user_id", 0, 1000000),
-]
-_Z_SPECS_DUCK = [
+)
+_Z_SPECS_DUCK = (
     ("CAST(floor(epoch(ts)) AS BIGINT)", 1577836800, 1893456000),
     ("user_id", 0, 1000000),
-]
+)
 
 
 def q_zorder_key(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5101,3 +5102,7 @@ ORACLE["rfm_segmentation"] = """
            CAST(SUM(monetary) AS DOUBLE) AS cell_revenue
     FROM scored GROUP BY 1, 2, 3 ORDER BY 1, 2, 3
 """
+
+# the registries are complete: read-only from here on
+QUERIES = MappingProxyType(QUERIES)
+ORACLE = MappingProxyType(ORACLE)

@@ -13,6 +13,8 @@ everything else here is integers, timestamps, or per-row doubles
 
 from __future__ import annotations
 
+from types import MappingProxyType
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1483,3 +1485,7 @@ ORACLE["cohort_ltv"] = """
     FROM daily d JOIN sizes s USING (cohort_day)
     ORDER BY 1, 2
 """
+
+# the registries are complete: read-only from here on
+QUERIES = MappingProxyType(QUERIES)
+ORACLE = MappingProxyType(ORACLE)

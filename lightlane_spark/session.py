@@ -10,12 +10,13 @@ callers override per cluster. Local test runs use ``local[N]``.
 from __future__ import annotations
 
 import os
+from types import MappingProxyType
 
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the local[32] test harness; on a real cluster the
 # caller passes explicit conf (shuffle partitions ~ 2-3x total cores).
-_DEFAULT_CONF = {
+_DEFAULT_CONF = MappingProxyType({
     # Runtime re-planning: coalesces small shuffle partitions, splits
     # skewed ones, and flips sort-merge joins to broadcast when the
     # runtime size drops under the threshold. Essential at 100 TB where
@@ -95,7 +96,7 @@ _DEFAULT_CONF = {
     "spark.executorEnv.OPENBLAS_NUM_THREADS": "1",
     "spark.executorEnv.OMP_NUM_THREADS": "1",
     "spark.executorEnv.MKL_NUM_THREADS": "1",
-}
+})
 
 
 def get_spark(

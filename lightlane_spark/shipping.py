@@ -19,14 +19,14 @@ import os
 import tempfile
 import zipfile
 
-_SHIPPED: set[int] = set()
+from lightlane_spark.cache import session_memo
 
 
 def ensure_package_shipped(spark) -> None:
-    sc = spark.sparkContext
-    key = id(sc)
-    if key in _SHIPPED:
-        return
+    session_memo(spark, "package_shipped", lambda: _ship(spark.sparkContext))
+
+
+def _ship(sc) -> str:
     pkg_root = os.path.dirname(os.path.abspath(__file__))
     zpath = os.path.join(
         tempfile.gettempdir(), f"lightlane_spark_pkg_{os.getpid()}.zip"
@@ -41,4 +41,4 @@ def ensure_package_shipped(spark) -> None:
                     )
                     zf.write(full, rel)
     sc.addPyFile(zpath)
-    _SHIPPED.add(key)
+    return zpath

@@ -15,6 +15,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lightlane_spark.cache import session_memo
+
 TABLES = (
     "region",
     "nation",
@@ -27,17 +29,6 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-# Inferred-schema memo: (app_id, path, mtime_ns, size) -> StructType.
-# ``spark.read.parquet`` re-infers the schema on EVERY call — a
-# driver-side footer read + py4j roundtrip measured at ~100 ms per
-# call at local[32] (vs ~15 ms with an explicit schema); at cluster
-# scale schema inference samples footers over the object store, the
-# driver-side cost §6 of the optimization guide warns about. The memo
-# key carries mtime+size so a rewritten file re-infers; the VALUE is
-# only the schema (never data or results), so every action still
-# computes from the parquet input.
-_SCHEMA_MEMO: dict = {}
 
 
 def table_path(sf_dir: str, table: str) -> str:
@@ -77,32 +68,31 @@ def read_table(
     # already sets for bench/tests.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = table_path(sf_dir, table)
+    # Inferred-schema memo, per session: ``spark.read.parquet``
+    # re-infers the schema on EVERY call — a driver-side footer read +
+    # py4j roundtrip measured at ~100 ms per call at local[32] (vs
+    # ~15 ms with an explicit schema); at cluster scale schema
+    # inference samples footers over the object store, the driver-side
+    # cost §6 of the optimization guide warns about. The key carries
+    # mtime+size so a rewritten file re-infers; the VALUE is only the
+    # schema (never data or results), so every action still computes
+    # from the parquet input. Single-file tables only: a directory's
+    # stat does not change when a contained file is overwritten in
+    # place, so dir layouts always re-infer.
     try:
         st = os.stat(path)
-        # single-file tables only: a directory's stat does not change
-        # when a contained file is overwritten in place, so dir
-        # layouts always re-infer
         key = (
-            (
-                spark.sparkContext.applicationId,
-                os.path.abspath(path),
-                st.st_mtime_ns,
-                st.st_size,
-            )
+            ("parquet_schema", os.path.abspath(path), st.st_mtime_ns, st.st_size)
             if os.path.isfile(path)
             else None
         )
     except OSError:
         key = None
-    if key is not None and key in _SCHEMA_MEMO:
-        df = spark.read.schema(_SCHEMA_MEMO[key]).parquet(path)
-    else:
+    if key is None:
         df = spark.read.parquet(path)
-        if key is not None:
-            from lightlane_spark.memo import evict_stale
-
-            evict_stale(_SCHEMA_MEMO, key[0])
-            _SCHEMA_MEMO[key] = df.schema
+    else:
+        schema = session_memo(spark, key, lambda: spark.read.parquet(path).schema)
+        df = spark.read.schema(schema).parquet(path)
     if table == "events" and dict(df.dtypes).get("ts") == "bigint":
         # integer DIV — double division would lose precision on ~1e18 ns.
         # timestamp_micros yields TZ-ADJUSTED TimestampType; cast to

@@ -70,3 +70,15 @@ def test_promote_tool_guards(tmp_path):
     assert r.returncode == 2 and "sf" in r.stderr
     r = run(_detail(idle=True, failed=["q1"]))
     assert r.returncode == 2 and "failed" in r.stderr
+
+
+def test_cpu_jiffies_total_excludes_guest_fields(tmp_path):
+    """guest and guest_nice (fields 9-10) are already folded into user
+    and nice, so the total sums only user .. steal."""
+    from bench import _cpu_jiffies
+
+    stat = tmp_path / "stat"
+    #              user nice system idle iowait irq softirq steal guest guest_nice
+    stat.write_text("cpu  100 20 30 400 5 6 7 8 50 10\ncpu0 1 2 3 4 5 6 7 8 9 10\n")
+    assert _cpu_jiffies(str(stat)) == (8, 100 + 20 + 30 + 400 + 5 + 6 + 7 + 8)
+    assert _cpu_jiffies(str(tmp_path / "missing")) is None

@@ -8,6 +8,8 @@ on LRU eviction to eventually reclaim corpus-sized frames.
 
 from __future__ import annotations
 
+import threading
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -99,7 +101,7 @@ def test_tracked_persist_dedupes_registry(spark, docs):
     )
     assert cache.unpersist_all() == 1
     assert _cache_manager_empty(spark)
-    assert not cache._TRACKED_IDS
+    assert not cache._TRACKED
 
 
 def test_fresh_queries_run_leaves_no_cache_under_scope(spark, sf_dir):
@@ -117,3 +119,154 @@ def test_fresh_queries_run_leaves_no_cache_under_scope(spark, sf_dir):
             qs[name](spark, sf_dir).count()
     assert _cache_manager_empty(spark)
     assert _n_cached_rdds(spark) <= baseline
+
+
+def test_run_job_leaves_registry_unchanged(spark, sf_dir, tmp_path):
+    """A pipeline run releases AND deregisters its fan-out persist: the
+    registry must not gain one strong reference per run."""
+    from lightlane_spark.jobspec import run_job
+
+    before = len(cache._TRACKED)
+    for i in range(2):
+        run_job(spark, {
+            "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "nation"},
+            "sinks": [{"kind": "csv", "path": str(tmp_path / f"n{i}")}],
+        })
+    assert len(cache._TRACKED) == before
+
+
+class _FakeFrame:
+    """persist()/unpersist() stand-in: records whether it is cached."""
+
+    def __init__(self, name: str) -> None:
+        self.name, self.cached = name, False
+
+    def persist(self, *_):
+        self.cached = True
+        return self
+
+    def unpersist(self, *_):
+        self.cached = False
+        return self
+
+
+def test_interleaved_scopes_on_two_threads_release_only_their_own():
+    """Scope A opens on one thread and persists f1; scope B opens on
+    another and persists f2; A exits; B persists f3 and exits. A's exit
+    must leave f2 cached and tracked, and B's exit must release and
+    deregister f2 and f3."""
+    steps = [threading.Event() for _ in range(4)]
+    f1, f2, f3 = _FakeFrame("f1"), _FakeFrame("f2"), _FakeFrame("f3")
+    before = len(cache._TRACKED)
+
+    def scope_a():
+        with cache.cache_scope():
+            cache.tracked_persist(f1)
+            steps[0].set()
+            steps[1].wait()
+        steps[2].set()
+
+    def scope_b():
+        steps[0].wait()
+        with cache.cache_scope():
+            cache.tracked_persist(f2)
+            steps[1].set()
+            steps[2].wait()
+            assert f2.cached and any(t is f2 for t in cache._TRACKED)
+            cache.tracked_persist(f3)
+        steps[3].set()
+
+    errors = []
+
+    def run(fn):
+        try:
+            fn()
+        except BaseException as e:  # noqa: BLE001 — reraised below
+            errors.append(e)
+            for s in steps:
+                s.set()
+
+    threads = [threading.Thread(target=run, args=(fn,)) for fn in (scope_a, scope_b)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert not (f1.cached or f2.cached or f3.cached)
+    assert len(cache._TRACKED) == before
+
+
+def test_concurrent_pipelines_in_own_scopes(spark, sf_dir, tmp_path):
+    """Two jobspec pipelines on two threads against one session, each
+    inside its own cache_scope(): results equal the serial runs, and
+    scope A's exit leaves B's frame cached until B's own exit."""
+    from pyspark import StorageLevel
+
+    from lightlane_spark.jobspec import run_job
+
+    def spec(table, where, key, out):
+        return {
+            "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": table, "where": where},
+            "transforms": [{"op": "dedup", "keys": [key]}],
+            "sinks": [{"kind": "csv", "path": f"{out}_csv"}],
+            "load": {"path": out, "mode": "overwrite"},
+        }
+
+    jobs = {
+        "a": ("orders", "o_orderkey % 2 = 0", "o_orderkey"),
+        "b": ("lineitem", "l_quantity > 10", "l_orderkey"),
+    }
+
+    def rows(path):
+        return sorted(spark.read.parquet(path).collect())
+
+    serial = {}
+    for name, (table, where, key) in jobs.items():
+        out = str(tmp_path / f"serial_{name}")
+        run_job(spark, spec(table, where, key, out))
+        serial[name] = rows(out)
+
+    spark.catalog.clearCache()
+    cache.unpersist_all()
+    before = len(cache._TRACKED)
+    markers = {"a": spark.range(5), "b": spark.range(7)}
+    a_open, both_ran, a_closed = (threading.Event() for _ in range(3))
+    seen, errors = {}, []
+
+    def worker(name):
+        table, where, key = jobs[name]
+        try:
+            if name == "b":
+                a_open.wait()
+            with cache.cache_scope():
+                cache.tracked_persist(markers[name]).count()
+                if name == "a":
+                    a_open.set()
+                run_job(spark, spec(table, where, key, str(tmp_path / f"conc_{name}")))
+                if name == "a":
+                    both_ran.wait()
+                else:
+                    both_ran.set()
+                    a_closed.wait()
+            if name == "a":
+                seen["a_after_a"] = markers["a"].storageLevel
+                seen["b_after_a"] = markers["b"].storageLevel
+                a_closed.set()
+        except BaseException as e:  # noqa: BLE001 — reraised below
+            errors.append(e)
+            for ev in (a_open, both_ran, a_closed):
+                ev.set()
+
+    threads = [threading.Thread(target=worker, args=(n,)) for n in jobs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    none = StorageLevel(False, False, False, False)
+    assert seen["a_after_a"] == none
+    assert seen["b_after_a"] != none, "scope A released scope B's frame"
+    assert markers["b"].storageLevel == none
+    assert len(cache._TRACKED) == before
+    for name in jobs:
+        assert rows(str(tmp_path / f"conc_{name}")) == serial[name]

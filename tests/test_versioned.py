@@ -7,7 +7,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from lightlane_spark.loaders.loader import Loader, align_schemas, merge_upsert
+from lightlane_spark.loaders.loader import Loader, align_schemas, fs_path, merge_upsert
 from lightlane_spark.loaders.versioned import VersionedTable
 from lightlane_spark.sources.parquet import read_table
 
@@ -78,7 +78,7 @@ def test_latest_version_survives_missing_pointer(spark, tmp_path):
     vt = VersionedTable(spark, str(tmp_path / "mp"))
     vt.write_version(spark.range(5))
     vt.write_version(spark.range(7))
-    fs, ptr = vt._fs_path(f"{vt.base_path}/_LATEST")
+    fs, ptr = fs_path(vt.spark, f"{vt.base_path}/_LATEST")
     fs.delete(ptr, False)
     assert vt.latest_version() == 2
     assert vt.read().count() == 7
@@ -159,7 +159,7 @@ def test_read_asof_ignores_unmarked_versions(spark, tmp_path):
     vt = VersionedTable(spark, base, clock=lambda: 500.0)
     vt.write_version(spark.range(4))
     # simulate a legacy version: remove its marker
-    fs, marker = vt._fs_path(f"{vt._version_path(1)}/_COMMIT_TS")
+    fs, marker = fs_path(vt.spark, f"{vt._version_path(1)}/_COMMIT_TS")
     fs.delete(marker, False)
     vt2 = VersionedTable(spark, base, clock=lambda: 600.0)
     vt2.write_version(spark.range(5))
