@@ -49,6 +49,8 @@ caller's session privileges, same trust model as the reference's
 
 from __future__ import annotations
 
+import re
+import uuid
 from types import MappingProxyType
 from typing import Any
 
@@ -96,9 +98,21 @@ def _t_dedup(
 
 
 def _t_sql(df: DataFrame, query: str, **_: Any) -> DataFrame:
-    """Free-form SQL over the current stage, exposed as ``__this__``."""
-    df.createOrReplaceTempView("__this__")
-    return df.sparkSession.sql(query)
+    """Free-form SQL over the current stage, exposed as ``__this__``.
+
+    The stage is registered under a per-call unique view name, which
+    replaces ``__this__`` in the query, and the view is dropped once the
+    query is analyzed: concurrent calls never see each other's stage and
+    the caller's catalog is left as it was. The drop goes through the
+    session catalog, not ``spark.catalog.dropTempView``, which would
+    also uncache a persisted ``df``."""
+    spark = df.sparkSession
+    name = "__this_" + uuid.uuid4().hex
+    df.createTempView(name)
+    try:
+        return spark.sql(re.sub(r"\b__this__\b", name, query))
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(name)  # noqa: SLF001
 
 
 def _t_url_dedup(

@@ -78,6 +78,7 @@ def apply_changes(
     the r7 plan audit)."""
     from lightlane_spark.cache import tracked_persist
 
+    # kept (plan test pins the orders scans); cold A/B sf0.1 local[4]: on 0.46 s, off 0.49 s
     changes = tracked_persist(diff.filter(F.col(CHANGE_COL) != "unchanged"))
     dels = changes.filter(F.col(CHANGE_COL) == "delete").select(*primary_keys)
     ups = changes.filter(F.col(CHANGE_COL).isin("insert", "update")).drop(CHANGE_COL)
@@ -129,13 +130,9 @@ def scd2_apply(
     upd = updates.select(
         *[F.col(c).alias(f"__u_{c}") for c in pks + attr_cols]
     )
-    # dimension-sized by SCD2's premise (open slice ⋈ update batch) —
-    # materialized once: three consumers (keep_open, close_out,
-    # new_versions) would each re-run the join AND re-scan both
-    # inputs' lineage (r7 plan audit: 8 corpus scans in the
-    # point_in_time fixture before this)
     from lightlane_spark.cache import tracked_persist
 
+    # kept (off re-reads orders; three consumers); cold A/B sf0.1 local[4]: on 0.79 s, off 0.84 s
     joined = tracked_persist(
         open_rows.join(
             upd,

@@ -188,6 +188,8 @@ def connected_components(
     else:
         canon = _canonical_edges(edges, id_a, id_b)
     if driver_edge_cap:
+        # kept (feeds the probe and, above the cap, the checkpoint); cold A/B sf0.1 local[4]:
+        # neardup_dedup on 1.54 s, off 1.53 s; semantic_dedup on 0.69 s, off 0.59 s
         canon = canon.transform(tracked_persist)
         # ONE bounded action decides the regime AND fetches the edges
         # (r13, guide §1.2): the former count()-then-collect() pair

@@ -403,29 +403,16 @@ def dedup_minhash(
     """
     # Map-only (multiset) shingles: min over a multiset equals min over
     # the set, so signatures skip the full-corpus distinct shuffle; the
-    # verifier set-ifies only candidate-pair documents. Persisted (NOT
-    # unpersisted here — the returned plan is lazy and an eager
-    # unpersist would empty the cache before the caller's action runs).
-    # Lifecycle is the caller's, via the library cache contract:
-    # every persist in this package registers through
-    # lightlane_spark.cache.tracked_persist, and a composing session
-    # releases them with cache.unpersist_all() or by wrapping each
-    # unit of work in cache.cache_scope() (see lightlane_spark/
-    # cache.py and tests/test_cache_contract.py).
+    # verifier set-ifies only candidate-pair documents. Persisted, not
+    # unpersisted here: the returned plan is lazy, so lifecycle is the
+    # caller's (cache.unpersist_all / cache.cache_scope).
+    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 1.66 s, off 1.89 s
     sh = shingle(df, text_col, id_col, k, distinct=False).transform(tracked_persist)
     sig = minhash_signature_arrays(sh, id_col, num_hashes)
     keys = lsh_band_keys(sig, id_col, bands, num_hashes // bands)
-    # Buckets feed pair expansion AND the candidate-id list — persist
-    # so the bucket shuffle runs once; candidate ids come straight off
-    # the cached arrays (bands×|docs| bound, no extra exchange).
+    # kept (off reruns the signatures per consumer); cold A/B sf0.1 local[4]: on 1.38 s, off 1.57 s
     buckets = lsh_buckets(keys, id_col).transform(tracked_persist)
-    # Persist A/B'd (tools/ab_persist.py r7, sf0.1): cold one-shot
-    # runs are ~13% faster with this site off (3.25 s vs 3.72 s), but
-    # steady-state repeated execution — the bench.py shape, and what a
-    # composing caller (the near-dup graph family) actually hits —
-    # wins with it on via CacheManager plan-matching; kept, tradeoff
-    # recorded in SCALE.md.
-    cand = _pairs_from_buckets(buckets, max_bucket_size=1000).transform(tracked_persist)
+    cand = _pairs_from_buckets(buckets, max_bucket_size=1000)
     ids = bucket_candidate_ids(buckets, id_col, max_bucket_size=1000)
     return jaccard_verify(
         cand, sh, id_col, threshold, shingles_distinct=False, cand_ids=ids
@@ -486,8 +473,7 @@ def simhash_near_pairs(
     simhash computation and its corpus lineage (r7 plan audit, same
     finding as blockhash_near_pairs).
     """
-    from lightlane_spark.cache import tracked_persist
-
+    # kept (off reruns the simhash UDF per join side); cold A/B sf0.1 local[4]: on 1.18 s, off 3.38 s
     signatures = tracked_persist(signatures.select(id_col, "simhash"))
     bands = signatures.select(
         F.col(id_col),
@@ -562,12 +548,8 @@ def ngram_jaccard_pairs(
     # Per-doc retained-gram count attached as a window column and
     # CARRIED THROUGH the self-join (grouped along with the pair key):
     # the two pairs↔sizes re-joins of the naive plan — and their three
-    # exchanges — disappear. The annotated relation is persisted so
-    # the scan→explode→window chain runs once, not once per join side.
-    sh = (
-        sh.withColumn("__n", F.count("*").over(Window.partitionBy(id_col)))
-        .transform(tracked_persist)
-    )
+    # exchanges — disappear.
+    sh = sh.withColumn("__n", F.count("*").over(Window.partitionBy(id_col)))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("__n").alias("n_a"), "sh")
     b = sh.select(F.col(id_col).alias("id_b"), F.col("__n").alias("n_b"), "sh")
     return (
@@ -665,16 +647,11 @@ def minhash_join(
     lft = left.select((F.col(id_col) * 2).alias(id_col), F.col(text_col))
     rgt = right.select((F.col(id_col) * 2 + 1).alias(id_col), F.col(text_col))
     corpus = lft.unionByName(rgt)
+    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 1.40 s, off 1.62 s
     sh = shingle(corpus, text_col, id_col, k, distinct=False).transform(tracked_persist)
     sig = minhash_signature_arrays(sh, id_col, num_hashes)
     keys = lsh_band_keys(sig, id_col, bands, num_hashes // bands)
-    # Persist A/B'd (tools/ab_persist.py r7, sf0.1): under cold
-    # one-shot semantics the buckets persist costs ~15% (2.70 s off vs
-    # 3.16 s on), but under steady-state best-of-3 — repeated
-    # execution in one session, the shape bench.py measures and a
-    # composing caller hits — the CacheManager plan-match makes it a
-    # 1.0 s-class win; kept, with the tradeoff recorded in SCALE.md.
-    buckets = lsh_buckets(keys, id_col).transform(tracked_persist)
+    buckets = lsh_buckets(keys, id_col)
     # Cross-parity filter applied BEFORE verification (not after):
     # same-parity pairs are within-corpus duplicates this operator
     # discards by contract, and filtering candidates is a map-side
@@ -714,8 +691,8 @@ def _rare_first_docs(
     """Shared prefix-filter input: per-doc gram arrays in a GLOBAL
     rare-first total order (ascending document frequency, gram text as
     tie-break) with set size ``n`` and prefix length ``plen`` =
-    n − ⌈(num/den)·n⌉ + 1 in exact integer arithmetic. Persisted via
-    the library cache contract — both join sides read it."""
+    n − ⌈(num/den)·n⌉ + 1 in exact integer arithmetic. Both join
+    sides read it through one shared exchange (ReusedExchange)."""
     sh = shingle(df, text_col, id_col, k, distinct="inrow")
     sh = sh.withColumn("__df", F.count("*").over(Window.partitionBy("sh")))
     # Per-doc global-order gram array: array_sort on (df, gram) structs
@@ -732,7 +709,6 @@ def _rare_first_docs(
             "plen",
             F.col("n") - ((F.col("n") * num + den - 1) / den).cast("bigint") + 1,
         )
-        .transform(tracked_persist)
     )
 
 
@@ -768,7 +744,7 @@ def containment_join(
     the candidate join: the index side explodes every gram, so an
     inlined array would be duplicated ×n per doc — O(n²) bytes for a
     single document. Candidates travel as bare (id_a, id_b, n_a)
-    triples, dedup cheaply, and join BACK to the persisted docs
+    triples, dedup cheaply, and join BACK to the docs
     relation for both arrays before the in-row array_intersect verify
     (measured 2.1 → 1.0 s at sf0.1, identical pairs). Threshold is
     exact rational arithmetic; ``containment`` is the one
@@ -898,7 +874,7 @@ def prefix_filter_jaccard_join(
     structs — no extra shuffle) → SKINNY prefix explode (id, n, g
     only) + self-join on gram with the τ·|A| ≤ |B| ≤ |A|/τ length
     filter → distinct bare candidate pairs → two joins back to the
-    persisted docs relation fetch the gram arrays exactly once per
+    docs relation fetch the gram arrays exactly once per
     surviving pair for the in-row array_intersect verify. Prefix
     length uses exact rational arithmetic (⌈num·n/den⌉ as integer
     ops) — float ceil at a representability boundary would silently
@@ -919,7 +895,7 @@ def prefix_filter_jaccard_join(
     runtime with 42/103/19 s rep thrash from the spilling
     array-laden exchange; SCALE_RATIO.json). Candidates travel as
     bare (id_a, id_b, n_a, n_b) rows, aggregate cheaply, and join
-    BACK to the persisted docs relation before the in-row
+    BACK to the docs relation before the in-row
     array_intersect verify — re-measured 10×/1× ratio drops to
     ~linear and sf0.1 steady improves ~2× (same identical-pairs
     result the oracle pins).
@@ -936,8 +912,8 @@ def prefix_filter_jaccard_join(
 
     The two join-backs are HINTED ``shuffle_hash``: Catalyst's size
     estimate for the docs relation (output of an aggregate) is far
-    below its true array-laden size, so on first execution — before
-    the persisted relation's real stats exist — AQE broadcasts
+    below its true array-laden size, so before the relation's real
+    stats exist AQE broadcasts
     hundreds of MB of gram arrays to every task; the r13 isolation
     measured 104/177 s first-rep pathologies at 10× that settle to
     12 s once the cache teaches AQE better. The hint makes the

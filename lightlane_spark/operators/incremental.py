@@ -20,8 +20,6 @@ from pyspark.sql import functions as F
 
 from lightlane_spark.loaders.loader import Loader
 
-from lightlane_spark.cache import tracked_persist
-
 
 def high_watermark(df: DataFrame, col: str):
     """Max of the watermark column (None on empty input)."""
@@ -159,13 +157,7 @@ def incremental_agg_retract_merge(
     from lightlane_spark.operators.cdc import CHANGE_COL, snapshot_diff
 
     diff = snapshot_diff(old, new, primary_keys)
-    # persisted: BOTH semi-joins consume the changed-key set — without
-    # the pin each re-runs the full snapshot compare (measured 2
-    # extra exchanges + 2 SMJs in the plan). Lazy persist, reclaimed
-    # by LRU/ContextCleaner (same convention as dedup_minhash).
-    changed = (
-        diff.filter(F.col(CHANGE_COL) != "unchanged").select(*primary_keys).transform(tracked_persist)
-    )
+    changed = diff.filter(F.col(CHANGE_COL) != "unchanged").select(*primary_keys)
     retract = old.join(changed, on=primary_keys, how="left_semi").withColumn(
         "__w", F.lit(-1)
     )

@@ -291,6 +291,7 @@ def blockhash_near_pairs(sig_df: DataFrame, max_diff_chunks: int = 3) -> DataFra
     the count)."""
     from lightlane_spark.cache import tracked_persist
 
+    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 0.70 s, off 2.76 s
     sig_df = tracked_persist(sig_df.select("doc_id", "sig"))
     bands = []
     for band_id, (off, width) in enumerate(BLOCKHASH_BANDS):

@@ -110,12 +110,9 @@ def pq_fit(
     # count() pass disappears; when it does not fit, the probe
     # short-circuits after max+1 rows and the exact seeded-sample path
     # below runs unchanged.
-    df.sparkSession.conf.set(
-        "spark.sql.execution.arrow.pyspark.enabled", "true"
-    )
-    probe = v.limit(max_fit_rows + 1).toPandas()
-    if len(probe) <= max_fit_rows:
-        X = np.array(probe["__v"].tolist(), dtype=np.float64)
+    probe = v.limit(max_fit_rows + 1).toArrow()
+    if probe.num_rows <= max_fit_rows:
+        X = np.array(probe.column("__v").to_pylist(), dtype=np.float64)
     else:
         n_total = v.count()
         # oversample then cap for an exact bound (sample() is binomial)
@@ -123,8 +120,9 @@ def pq_fit(
         X = np.array(
             v.sample(fraction=frac, seed=seed)
             .limit(max_fit_rows)
-            .toPandas()["__v"]
-            .tolist(),
+            .toArrow()
+            .column("__v")
+            .to_pylist(),
             dtype=np.float64,
         )
     if X.size == 0:

@@ -141,20 +141,17 @@ def topk_bruteforce_arrow(
     # Arrow transfer for the probe set (guide §6): same rows, same
     # order, same float64 bits as the pickled-Row collect — only the
     # driver-boundary serialization changes.
-    corpus.sparkSession.conf.set(
-        "spark.sql.execution.arrow.pyspark.enabled", "true"
-    )
-    qpdf = queries.select(
+    qtab = queries.select(
         F.col(id_col).cast("long").alias("qid"),
         _vec_double(vec_col).alias("qv"),
-    ).toPandas()
-    if qpdf.empty:
+    ).toArrow()
+    if qtab.num_rows == 0:
         empty = corpus.sparkSession.createDataFrame(
             [], f"{query_id_col} long, {id_col} long, rank int, sim double"
         )
         return empty
-    qids = qpdf["qid"].to_numpy(dtype=np.int64)
-    qm = np.array(qpdf["qv"].tolist(), dtype=np.float64)  # Q×D
+    qids = qtab.column("qid").to_numpy().astype(np.int64)
+    qm = np.array(qtab.column("qv").to_pylist(), dtype=np.float64)  # Q×D
     qn = np.sqrt((qm * qm).sum(axis=1))
 
     c = corpus.select(
@@ -474,10 +471,9 @@ def kmeans_assign(
     # same partition-major order, same float64 bits, so the fitted
     # centroids are identical; at the 100k-row bound the pickle path
     # moves ~6M boxed Python floats.
-    spark = corpus.sparkSession
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
     X = np.array(
-        fit_src.limit(100_000).toPandas()["__cv"].tolist(), dtype=np.float64
+        fit_src.limit(100_000).toArrow().column("__cv").to_pylist(),
+        dtype=np.float64,
     )
     if X.size == 0:
         raise ValueError("kmeans_assign: corpus sample is empty")
@@ -538,6 +534,7 @@ def semantic_dedup(
         fit_fraction=fit_fraction,
         cluster_col="__cluster",
     )
+    # kept (off re-reads embeddings); cold A/B sf0.1 local[4]: on 0.71 s, off 0.93 s
     assigned = assigned.transform(tracked_persist)
     pairs = cosine_neardup_pairs(
         assigned,

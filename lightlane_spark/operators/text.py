@@ -357,9 +357,10 @@ def tfidf_topk(
     toks = df.select(
         F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("tok")
     )
+    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 0.58 s, off 0.49 s
     tf = toks.groupBy(id_col, "tok").agg(
         F.count(F.lit(1)).alias("tf")
-    ).transform(tracked_persist)  # read by the doc-frequency aggregate AND the score join
+    ).transform(tracked_persist)
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.countDistinct(F.col(id_col)).alias("__n"))
     scored = (
@@ -487,6 +488,7 @@ def dsir_log_weights(
         .otherwise(F.col("__t"))
     )
     g = base.select(F.col(id_col), "__is_t", grams_arr.alias("__g"))
+    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 2.55 s, off 2.41 s
     feats = (
         g.select(F.col(id_col), "__is_t", F.explode("__g").alias("gram"))
         .withColumn("bucket", (h32(F.col("gram")) % dims).cast("int"))
@@ -494,11 +496,7 @@ def dsir_log_weights(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .transform(tracked_persist)
     )
-    # dist is read twice inside the broadcast build (the tot scalar
-    # aggregate and the crossJoin's left side); without its own pin
-    # each read re-ran the bucket aggregation over the full feats
-    # cache — profiled as one extra 211k-row pass per run at sf0.1.
-    # ≤ dims rows, so the pin is a kilobyte.
+    # kept (off reruns the bucket aggregation per read); cold A/B sf0.1 local[4]: on 2.66 s, off 2.69 s
     dist = tracked_persist(
         feats.groupBy("bucket").agg(
             F.sum("cnt").alias("cq"),
@@ -1102,8 +1100,7 @@ def bm25_topk(
     postings relation (a new DataFrame per call, so repeated calls in
     a long session each pin a fresh cache entry). Callers looping
     over many invocations should run under
-    ``lightlane_spark.cache.cache_scope`` or call ``unpersist_all``
-    (bench.py and the sweep tools clear the cache per query).
+    ``lightlane_spark.cache.cache_scope`` or call ``unpersist_all``.
     """
     terms = [str(t) for t in query_terms]
     # token array materialized BEFORE size()/explode() reference it:
@@ -1116,11 +1113,8 @@ def bm25_topk(
         F.explode("__t").alias("tok"),
     )
     hits = toks.where(F.col("tok").isin(terms))
-    # persisted: read by the doc-frequency aggregate AND the score
-    # join below — query-term postings only, so it's small relative
-    # to the corpus, and the persist keeps the corpus at one
-    # postings tokenization pass (column pruning makes the two
-    # consumers' subtrees differ, so exchange reuse can't dedupe)
+    # kept (off re-reads documents: column pruning makes the two consumers'
+    # exchanges differ); cold A/B sf0.1 local[4]: on 0.49 s, off 0.24 s
     tf = hits.groupBy(id_col, "tok").agg(
         F.count(F.lit(1)).alias("tf"), F.first("__dl").alias("dl")
     ).transform(tracked_persist)
@@ -1461,8 +1455,7 @@ def bm25_multi(
 
     Cache lifecycle: each call ``tracked_persist``s the union-vocab
     postings (a fresh cache entry per invocation) — loop callers
-    should use ``cache_scope``/``unpersist_all``; bench.py and the
-    sweep tools clear the cache per query."""
+    should use ``cache_scope``/``unpersist_all``."""
     vocab = sorted({str(t) for ts in queries.values() for t in ts})
     qrows = [(qid, str(t)) for qid, ts in queries.items() for t in ts]
     from lightlane_spark.sources.localrel import local_df
@@ -1475,9 +1468,7 @@ def bm25_multi(
         F.explode("__t").alias("tok"),
     )
     hits = toks.where(F.col("tok").isin(vocab))
-    # persisted: union-vocab postings only; feeds the df aggregate
-    # and the score join without re-tokenizing the corpus (the
-    # single-postings-pass contract test_plan_quality pins)
+    # kept (off re-reads documents; plan test pins it); cold A/B sf0.1 local[4]: on 0.59 s, off 0.45 s
     tf = hits.groupBy(id_col, "tok").agg(
         F.count(F.lit(1)).alias("tf"), F.first("__dl").alias("dl")
     ).transform(tracked_persist)

@@ -32,11 +32,9 @@ from lightlane_spark.loaders.loader import Loader
 from lightlane_spark.loaders.text_sinks import write_csv, write_hive_text
 from lightlane_spark.observe import PipelineMetrics
 from lightlane_spark.operators.extract import range_partitioned_read
-from lightlane_spark.operators.transform import quarantine
+from lightlane_spark.operators.transform import fan_out, quarantine
 from lightlane_spark.sources.jdbc import read_jdbc
 from lightlane_spark.sources.parquet import read_table
-
-from lightlane_spark.cache import cache_scope, tracked_persist
 
 
 @dataclass
@@ -175,13 +173,10 @@ class Pipeline:
         self._require_df()
         if not self._sinks and self._bad_sink is None:
             raise ValueError("pipeline has no sinks; add to_*/load first")
-        with cache_scope():
-            cached = self._df.transform(tracked_persist)
-            for sink in self._sinks:
-                sink(cached)
-            if self._bad_df is not None and self._bad_sink is not None:
-                self._bad_sink(self._bad_df)
-            return self.metrics.results()
+        fan_out(self._df, self._sinks)
+        if self._bad_df is not None and self._bad_sink is not None:
+            self._bad_sink(self._bad_df)
+        return self.metrics.results()
 
     def dataframe(self) -> DataFrame:
         """The current (lazy) stage output — for ad-hoc inspection."""

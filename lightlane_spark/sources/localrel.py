@@ -6,7 +6,7 @@ downstream action then schedules one near-empty Python-worker task
 per core (measured ~0.5 s per action at local[32] for a 3-row
 relation — pure scheduling + pickling overhead, and at cluster scale
 the same shape wastes a full wave of executor tasks on bytes that fit
-in one Arrow batch). The pandas→Arrow path instead converts on the
+in one Arrow batch). The Arrow path instead converts on the
 driver and lands as few partitions as the data needs (one batch for
 anything small) with no Python worker in the loop (~0.1 s for the
 same action, guide §4/§6: move small data as one batch, not as a
@@ -31,26 +31,28 @@ def local_df(
     schema: str | StructType,
 ) -> DataFrame:
     """DataFrame from a driver-local list of row tuples via one
-    pandas→Arrow conversion (no pickled-RDD fan-out).
+    Arrow table (no pickled-RDD fan-out).
 
     ``schema`` is a DDL string (``"a: int, b: string"``) or a
     ``StructType`` — always explicit, never inferred, so the result's
     dtypes match the ``createDataFrame(list, schema)`` form exactly.
+    ``createDataFrame`` takes the Arrow table whatever the session's
+    ``spark.sql.execution.arrow.pyspark.enabled`` says, so the
+    caller's session is left as it was.
     """
-    import pandas as pd
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     st = (
         StructType.fromDDL(schema) if isinstance(schema, str) else schema
     )
     rows = list(rows)
     if not rows:
-        # empty pandas frames hit arrow edge cases; the classic path
-        # costs nothing at zero rows
+        # the classic path costs nothing at zero rows
         return spark.createDataFrame([], st)
-    # the arrow conversion honors the explicit schema; object dtype
-    # keeps None as None (a numeric pandas dtype would coerce to NaN)
-    pdf = pd.DataFrame(rows, columns=st.fieldNames(), dtype=object)
-    # runtime-settable; pinned here so a caller's plain session (the
-    # driver's correctness harness) takes the same arrow path
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    return spark.createDataFrame(pdf, st)
+    columns = list(zip(*rows))
+    table = pa.table(
+        {name: list(col) for name, col in zip(st.fieldNames(), columns)},
+        schema=to_arrow_schema(st),
+    )
+    return spark.createDataFrame(table, st)

@@ -346,6 +346,7 @@ def streaming_neardup_ingest(
         spark = batch_df.sparkSession
         to_unpersist = []
         try:
+            # kept (isEmpty + the batch's writes); cold A/B 4 sf0.1 batches local[4]: on 6.22 s, off 6.29 s
             batch_df = batch_df.transform(tracked_persist)
             to_unpersist.append(batch_df)
             if batch_df.isEmpty():
@@ -357,6 +358,7 @@ def streaming_neardup_ingest(
 
     def _ingest_batch_body(spark, batch_df: DataFrame, to_unpersist: list) -> None:
         sh = shingle(batch_df, text_col, id_col, k, distinct=False)
+        # kept (match + index write); cold A/B 4 sf0.1 batches local[4]: on 6.04 s, off 6.56 s
         sigs = minhash_signature_arrays(sh, id_col, num_hashes).transform(tracked_persist)
         to_unpersist.append(sigs)
         new_keys = lsh_band_keys(sigs, id_col, bands, rows_per_band)
@@ -411,6 +413,7 @@ def streaming_neardup_ingest(
             .select("id_new")
             .distinct()
         )
+        # kept (corpus write + index write); cold A/B 4 sf0.1 batches local[4]: on 5.81 s, off 6.44 s
         novel = batch_df.join(
             matched.withColumnRenamed("id_new", id_col), on=id_col, how="left_anti"
         ).transform(tracked_persist)

@@ -44,7 +44,7 @@ def test_cache_scope_releases_library_persists(spark, docs):
     # THIS scope adds nothing that survives it
     baseline = _n_cached_rdds(spark)
     with cache.cache_scope():
-        dedup_minhash(docs).count()  # persists shingles/buckets/cands
+        dedup_minhash(docs).count()  # persists shingles/buckets
         assert not _cache_manager_empty(spark), (
             "dedup_minhash should persist intermediates inside the scope"
         )
@@ -60,7 +60,7 @@ def test_unpersist_all_releases_and_reports(spark, docs):
     dedup_minhash(docs).count()
     assert not _cache_manager_empty(spark)
     released = cache.unpersist_all()
-    assert released >= 3  # shingles + buckets + candidate pairs
+    assert released >= 2  # shingles + buckets
     assert _cache_manager_empty(spark)
     # idempotent: nothing tracked, nothing released
     assert cache.unpersist_all() == 0

@@ -234,3 +234,66 @@ def test_lineage_cli_subcommand(spark, sf_dir, tmp_path, capsys):
         "leaf0.l_quantity",
     ]
     assert out["columns"]["l_orderkey"]["sources"] == ["leaf0.l_orderkey"]
+
+
+def _sql_spec(sf_dir, where):
+    return {
+        "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "orders"},
+        "transforms": [
+            {"op": "filter", "predicate": where},
+            {"op": "sql", "query": "SELECT o_orderkey FROM __this__"},
+        ],
+    }
+
+
+def test_sql_transform_leaves_catalog_alone(spark, sf_dir, tmp_path):
+    """The ``sql`` transform's stage view is gone once the job has run,
+    and a persisted input stays cached."""
+    before = {t.name for t in spark.catalog.listTables()}
+    spec = _sql_spec(sf_dir, "o_orderkey % 2 = 0")
+    spec["sinks"] = [{"kind": "parquet", "path": str(tmp_path / "out")}]
+    run_job(spark, spec)
+    after = {t.name for t in spark.catalog.listTables()}
+    assert after <= before
+    assert not [n for n in after if n.startswith("__this")]
+
+    from lightlane_spark.jobspec import _t_sql
+
+    pinned = read_table(spark, sf_dir, "orders").select("o_orderkey").persist()
+    try:
+        pinned.count()
+        n = _t_sql(pinned, "SELECT count(*) AS n FROM __this__").first().n
+        assert n == pinned.count()
+        cm = spark._jsparkSession.sharedState().cacheManager()  # noqa: SLF001
+        assert cm.lookupCachedData(pinned._jdf).isDefined()  # noqa: SLF001
+    finally:
+        pinned.unpersist()
+
+
+def test_sql_transforms_on_two_threads_read_their_own_stage(spark, sf_dir):
+    """Two threads run ``sql`` transforms over different frames at the
+    same time; each gets its own rows."""
+    import threading
+
+    preds = {"even": "o_orderkey % 2 = 0", "odd": "o_orderkey % 2 = 1"}
+    got: dict[str, set[int]] = {}
+    errors: list[BaseException] = []
+    barrier = threading.Barrier(len(preds))
+
+    def work(tag: str) -> None:
+        try:
+            barrier.wait()
+            for _ in range(3):
+                df = build_pipeline(spark, _sql_spec(sf_dir, preds[tag])).dataframe()
+                got.setdefault(tag, set()).update(r.o_orderkey for r in df.collect())
+        except BaseException as exc:  # noqa: BLE001 — re-raised below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=work, args=(t,)) for t in preds]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert got["even"] and all(k % 2 == 0 for k in got["even"])
+    assert got["odd"] and all(k % 2 == 1 for k in got["odd"])

@@ -643,3 +643,21 @@ def test_association_rules_single_fact_scan(spark, sf_dir):
     ps = plan_summary(df)
     assert ps.text.count("lineitem.parquet") == 1, ps.text[:1200]
     assert "CartesianProduct" not in ps.text
+
+
+def test_minhash_documents_scans_pinned(spark, sf_dir):
+    """dedup_minhash no longer persists its candidate pairs, nor
+    minhash_join its buckets; the documents scan counts stay at what
+    they were with those persists, so a removed persist can never
+    bring back a repeated corpus scan."""
+    import __spark_entry__ as m
+    from lightlane_spark.cache import unpersist_all
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    try:
+        self_join = plan_summary(dedup_minhash(docs)).text
+        cross_join = plan_summary(m.queries()["minhash_join"](spark, sf_dir)).text
+    finally:
+        unpersist_all()
+    assert self_join.count("documents.parquet") <= 1, self_join[:1200]
+    assert cross_join.count("documents.parquet") <= 2, cross_join[:1200]

@@ -276,3 +276,34 @@ def test_cosine_neardup_arrow_null_vectors_match_sql(spark):
         for r in cosine_neardup_pairs(df, "label", threshold=0.99, impl="sql").collect()
     )
     assert a == s == [(1, 2)]
+
+
+def test_arrow_boundary_ignores_session_arrow_flag(spark, sf_dir):
+    """``local_df`` and ``topk_bruteforce_arrow`` take the Arrow path
+    through the API, not the session flag: with the flag off they give
+    the same rows, and the flag is still off afterwards."""
+    from lightlane_spark.operators.similarity import topk_bruteforce_arrow
+    from lightlane_spark.sources.localrel import local_df
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    emb = read_table(spark, sf_dir, "embeddings")
+    queries = emb.filter("vec_id < 3")
+    rows = [(1, [0.5, 1.0]), (2, None), (3, [])]
+    schema = "id bigint, v array<double>"
+
+    def run():
+        topk = sorted(tuple(r) for r in topk_bruteforce_arrow(emb, queries, k=5).collect())
+        local = sorted(tuple(r) for r in local_df(spark, rows, schema).collect())
+        return topk, local
+
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        on = run()
+        spark.conf.set(key, "false")
+        off = run()
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, old)
+    assert off == on
+    assert off[1] == sorted(tuple(r) for r in spark.createDataFrame(rows, schema).collect())

@@ -78,9 +78,12 @@ def main() -> None:
         times = []
         for _ in range(3):
             t0 = time.perf_counter()
+            # noop sink, not count(): count() prunes every output
+            # column, so the persist-OFF arm would skip projections
+            # the persist-ON arm materializes into the cache
             qs[name](spark, os.environ.get(
                 "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-            )).count()
+            )).write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
             # Spark's cache lookup is PLAN-based: a rebuilt identical
             # plan in reps 2-3 of the persist-ON arm would hit rep 1's

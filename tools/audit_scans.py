@@ -11,7 +11,13 @@ relation. At sf0.01 that's invisible in wall time; at 100 TB each
 repeat is a full corpus read. The audit makes the class visible from
 the plan alone.
 
-Usage: python tools/audit_scans.py [--min-scans N]   (default 3)
+Usage: python tools/audit_scans.py [--min-scans N] [query ...]
+  (default 3). With query names, only those queries are audited, every
+  one is reported, and each is also RUN: ``executed=`` then counts the
+  table scans left in the final adaptive plan, where a ReusedExchange
+  stands in for a repeated subtree. A cached relation's plan is printed
+  at every read of it, so with persisted frames the count is an upper
+  bound on the scans that execute.
 
 Interpreting hits — not every repeat is a bug:
   - multi-TABLE joins (different files) are fine;
@@ -43,10 +49,34 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession
 
 
+def _final_plans(df) -> str:
+    """The executed plan after an action, with every adaptive plan's
+    "Initial Plan" section cut: what remains is the final plans (the
+    cached relations' ones included), one line per operator."""
+    text = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    kept, skip_below = [], None
+    for line in text.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-|"))
+        if skip_below is not None and depth >= skip_below:
+            continue
+        skip_below = None
+        if "== Initial Plan ==" in line:
+            skip_below = depth
+            continue
+        kept.append(line)
+    return "\n".join(kept)
+
+
 def main() -> None:
+    argv = sys.argv[1:]
     min_scans = 3
-    if "--min-scans" in sys.argv:
-        min_scans = int(sys.argv[sys.argv.index("--min-scans") + 1])
+    if "--min-scans" in argv:
+        i = argv.index("--min-scans")
+        min_scans = int(argv[i + 1])
+        del argv[i : i + 2]
+    names = argv
+    if names:
+        min_scans = 0
     sf = os.environ.get("SPARK_GRAFT_SWEEP_SF_DIR", "/root/testdata/sf0.01")
 
     spark = (
@@ -61,14 +91,21 @@ def main() -> None:
 
     qs = m.queries()
     rows = []
-    for name in sorted(qs):
+    for name in names or sorted(qs):
         if name.startswith("streaming"):
             continue  # executes during construction
         try:
-            ps = plan_summary(qs[name](spark, sf))
+            df = qs[name](spark, sf)
+            ps = plan_summary(df)
             tabs = collections.Counter(
                 re.findall(r"([a-z_0-9]+)\.parquet", ps.text)
             )
+            executed = None
+            if names:
+                df.collect()
+                executed = dict(collections.Counter(re.findall(
+                    r"([a-z_0-9]+)\.parquet", _final_plans(df)
+                )))
             worst = max(tabs.values(), default=0)
             # DISTINCT scan node ids: the formatted tree prints a
             # SHARED subtree with the same node id everywhere it
@@ -86,17 +123,18 @@ def main() -> None:
             if worst >= min_scans:
                 rows.append(
                     (worst, name, dict(tabs), ps.sortmerge_joins,
-                     distinct_ids, reused)
+                     distinct_ids, reused, executed)
                 )
         except Exception as exc:  # noqa: BLE001 — report, keep auditing
-            rows.append((-1, name, {"ERR": type(exc).__name__}, 0, 0, 0))
+            rows.append((-1, name, {"ERR": type(exc).__name__}, 0, 0, 0, None))
         finally:
             spark.catalog.clearCache()
     rows.sort(reverse=True)
-    for worst, name, tabs, smj, distinct_ids, reused in rows:
+    for worst, name, tabs, smj, distinct_ids, reused, executed in rows:
         print(
             f"{worst:3d}  {name:32s} {tabs} smj={smj} "
-            f"distinct_scan_nodes={distinct_ids} reused_exchange={reused}",
+            f"distinct_scan_nodes={distinct_ids} reused_exchange={reused}"
+            + ("" if executed is None else f" executed={executed}"),
             flush=True,
         )
     print(f"-- {len(rows)} queries at >= {min_scans} same-table scans", flush=True)

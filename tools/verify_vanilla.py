@@ -2,7 +2,9 @@
 PLAIN SparkSession (no lightlane session tuning) and compare against
 its oracle_sql() via DuckDB — exactly what the round driver does.
 
-Run from anywhere: python tools/verify_vanilla.py
+Run from anywhere: python tools/verify_vanilla.py [query ...]
+With query names, only those queries run (a per-change gate in
+seconds instead of the full sweep); an unknown name is reported bad.
 Env: SPARK_GRAFT_SWEEP_SF_DIR (default /root/testdata/sf0.01).
 """
 
@@ -28,8 +30,11 @@ qs, osql = m.queries(), m.oracle_sql()
 # fail FAST on driver-divergent oracle types (HUGEINT class, r7-r11
 # reds) before spending ~25 min running queries
 assert_oracle_dtypes(con, osql)
-bad = []
-for name in sorted(qs):
+names = sys.argv[1:] or sorted(qs)
+bad = [n for n in names if n not in qs]
+for n in bad:
+    print('UNKNOWN', n, flush=True)
+for name in (n for n in names if n in qs):
     try:
         sdf = qs[name](spark, sf)
         if name not in osql:
@@ -76,11 +81,11 @@ if record_path:
     rec = {
         'sf_dir': sf,
         'git_rev': rev,
-        'n_queries': len(qs),
+        'n_queries': len(names),
         'results': {
             name: ('fail' if name in bad else
                    'pass' if name in osql else 'no_oracle')
-            for name in sorted(qs)
+            for name in names
         },
     }
     with open(record_path, 'w') as fh:
