@@ -123,8 +123,9 @@ def q_minmax_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_range_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OP-12: 7-way range-partitioned scan unioned back — must equal the
-    full scan (closed last range, reference sql.py:144-148)."""
+    """OP-12: range-split read with 7 splits — the rows the reference's 7
+    range queries return (closed last range, reference sql.py:144-148),
+    read in one scan: every row with a non-NULL key."""
     df = read_table(spark, sf_dir, "lineitem", columns=["l_orderkey", "l_linenumber", "l_quantity"])
     return range_partitioned_read(df, "l_orderkey", 7)
 

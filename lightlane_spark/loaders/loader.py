@@ -222,9 +222,10 @@ class Loader:
 
     def _analyze(self) -> None:
         """OP-32: refresh stats. On a path-backed table the useful
-        equivalent is dropping any cached footer metadata; for
-        catalog tables run ANALYZE TABLE instead."""
-        self.spark.catalog.clearCache()
+        equivalent is dropping the cached file listing and any cached
+        data of this path only — the caller's other persisted frames
+        stay; for catalog tables run ANALYZE TABLE instead."""
+        self.spark.catalog.refreshByPath(self.table_path)
 
 
 HIVE_FILE_FORMATS = ("textfile", "sequencefile", "rcfile", "orc", "parquet")
@@ -254,10 +255,20 @@ def write_hive_table(
             f"unknown Hive file format {file_format!r}; known: {HIVE_FILE_FORMATS}"
         )
     writer = df.write.format("hive").option("fileFormat", fmt).mode(mode)
-    if partition_by:
-        # all partition values come from the data (the reference's
-        # dynamic insert, OP-24) — Hive's strict mode wants at least
-        # one static partition otherwise
-        df.sparkSession.conf.set("hive.exec.dynamic.partition.mode", "nonstrict")
-        writer = writer.partitionBy(*partition_by)
-    writer.saveAsTable(table)
+    if not partition_by:
+        writer.saveAsTable(table)
+        return
+    # all partition values come from the data (the reference's dynamic
+    # insert, OP-24) — Hive's strict mode wants at least one static
+    # partition otherwise. The mode is the caller's session setting:
+    # set it for this write only.
+    conf, key = df.sparkSession.conf, "hive.exec.dynamic.partition.mode"
+    previous = conf.get(key, None)
+    conf.set(key, "nonstrict")
+    try:
+        writer.partitionBy(*partition_by).saveAsTable(table)
+    finally:
+        if previous is None:
+            conf.unset(key)
+        else:
+            conf.set(key, previous)

@@ -1,5 +1,5 @@
 """Extract-side operators: projection, filter, boundary probe, and
-range-partitioned parallel scans.
+range-partitioned scans.
 
 Reference parity map (SURVEY §2.1):
   - OP-06 projection            -> ``select_columns``
@@ -8,26 +8,22 @@ Reference parity map (SURVEY §2.1):
   - OP-11 min/max boundary      -> ``min_max`` (single agg pass — the
     reference issues two ``ORDER BY … LIMIT 1`` queries,
     ``dumper/sql.py:59-68``; one partial+final aggregate is strictly
-    better and reads parquet footer stats when available)
-  - OP-12 range-partitioned scan -> ``split_ranges`` +
-    ``range_partitioned_read`` (reference ``dumper/sql.py:70-97,
-    132-159``). Semantics preserved exactly: ``splits`` contiguous
-    ranges over ``[min, max]``; every range is half-open
-    ``lo <= k < hi`` except the LAST which is closed ``lo <= k <= hi``
-    (``sql.py:144-148``); a NULL boundary (all-NULL or empty column)
-    falls back to a single serial scan (``sql.py:135-137``).
+    better)
+  - OP-12 range-partitioned scan -> ``range_partitioned_read``
+    (reference ``dumper/sql.py:70-97, 132-159``). The reference sends
+    one query per range of ``[min, max]`` so MySQL serves them in
+    parallel; here the same rows come from ONE scan, and Spark's split
+    planning of the file supplies the parallelism. A union of N
+    filtered rescans would decode every row group N times unless the
+    file happens to be clustered on the key.
 
-At scale: on JDBC sources this maps 1:1 onto Spark's
+On JDBC sources the range split maps 1:1 onto Spark's
 ``partitionColumn/lowerBound/upperBound/numPartitions`` (see
-``sources/jdbc.py``); on file sources Spark's own split planning makes
-manual ranges unnecessary, so ``range_partitioned_read`` exists for
-semantic parity and for pre-partitioning a skewed key range.
+``sources/jdbc.py::split_options``), which generates the reference's
+range predicates and runs them as parallel partitions.
 """
 
 from __future__ import annotations
-
-import datetime as dt
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -69,8 +65,10 @@ def min_max(df: DataFrame, column: str) -> tuple[object, object]:
     """OP-11: one-pass min/max boundary probe.
 
     The reference runs two full sorts with LIMIT 1
-    (``dumper/sql.py:59-68``); a partial+final aggregate is one scan,
-    no sort, and on parquet short-circuits to footer statistics.
+    (``dumper/sql.py:59-68``); a partial+final aggregate is one scan
+    and no sort. On parquet it is still a scan stage over the column:
+    Spark answers MIN/MAX from footer statistics only with
+    ``spark.sql.parquet.aggregatePushdown``, which is off by default.
     Returns ``(None, None)`` when the column is empty/all-NULL — the
     trigger for the serial fallback (``sql.py:135-137``).
     """
@@ -81,51 +79,6 @@ def min_max(df: DataFrame, column: str) -> tuple[object, object]:
     return (row["lo"], row["hi"])
 
 
-def split_ranges(start, end, splits: int) -> list[tuple[object, object]]:
-    """OP-12: split ``[start, end]`` into ``splits`` contiguous ranges.
-
-    Preserves the reference's granularity rules
-    (``dumper/sql.py:70-97``): ints split by integer division, dates by
-    whole days, datetimes by whole seconds; any remainder is absorbed
-    by a final appended range (``sql.py:94-95``). The returned ranges
-    are interpreted as ``lo <= k < hi`` for all but the last, which is
-    ``lo <= k <= hi`` (``sql.py:144-148``).
-    """
-    if splits <= 1:
-        return [(start, end)]
-    if isinstance(start, dt.datetime):
-        total = int((end - start).total_seconds())
-        step = total // splits
-        mk = lambda i: start + dt.timedelta(seconds=step * i)  # noqa: E731
-    elif isinstance(start, dt.date):
-        total = (end - start).days
-        step = total // splits
-        mk = lambda i: start + dt.timedelta(days=step * i)  # noqa: E731
-    else:
-        total = int(end) - int(start)
-        step = total // splits
-        mk = lambda i: start + step * i  # noqa: E731
-    if step <= 0:
-        # Degenerate domain smaller than the split count → one range.
-        return [(start, end)]
-    ranges = [(mk(i), mk(i + 1)) for i in range(splits)]
-    if ranges[-1][1] != end:
-        # Remainder range, as the reference appends (sql.py:94-95).
-        ranges.append((ranges[-1][1], end))
-    return ranges
-
-
-def range_predicates(column: str, ranges: list[tuple[object, object]]) -> list[Column]:
-    """Build the per-range predicates; last range closes the upper bound."""
-    col = F.col(column)
-    preds = []
-    for i, (lo, hi) in enumerate(ranges):
-        closed = i == len(ranges) - 1
-        upper = (col <= F.lit(hi)) if closed else (col < F.lit(hi))
-        preds.append((col >= F.lit(lo)) & upper)
-    return preds
-
-
 def range_partitioned_read(
     df: DataFrame,
     splitby: str,
@@ -133,18 +86,18 @@ def range_partitioned_read(
 ) -> DataFrame:
     """OP-12: range-partitioned scan of ``df`` on ``splitby``.
 
-    Probes min/max, builds ``splits`` disjoint range predicates, and
-    unions the per-range scans — the exact plan the reference ships as
-    N parallel SQL queries (``dumper/sql.py:132-159``). NULL bounds →
-    serial fallback: the plain scan (``sql.py:135-137``). Rows where
-    ``splitby`` IS NULL are excluded by the range predicates, matching
-    the reference (its generated ``>= AND <`` predicates drop NULLs).
+    Keeps the rows the reference's ``splits`` range queries return
+    (``dumper/sql.py:132-159``) from one scan: its ranges tile
+    ``[min, max]`` of the non-NULL keys with the last range closed, so
+    together they hold exactly the rows whose ``splitby`` is not NULL
+    (its ``>= AND <`` predicates drop NULLs). The min/max probe stays
+    for the reference's fallback: NULL bounds (an empty or all-NULL
+    column) return the plain scan, NULL-key rows included
+    (``sql.py:135-137``).
     """
     if splits <= 1:
         return df
     lo, hi = min_max(df, splitby)
     if lo is None or hi is None:
         return df  # serial fallback, reference sql.py:135-137
-    preds = range_predicates(splitby, split_ranges(lo, hi, splits))
-    parts = [df.filter(p) for p in preds]
-    return reduce(DataFrame.unionAll, parts)
+    return df.filter(F.col(splitby).isNotNull())

@@ -13,7 +13,6 @@ from lightlane_spark.operators.extract import (
     range_partitioned_read,
     schema_of,
     select_columns,
-    split_ranges,
     with_filter,
 )
 from lightlane_spark.sources.parquet import read_table, table_path
@@ -55,8 +54,9 @@ def test_min_max_all_null(spark):
 
 @pytest.mark.parametrize("splits", [1, 2, 3, 7])
 def test_range_split_lossless(spark, sf_dir, splits):
-    """Union of per-range scans == full scan; no dup/loss at boundaries
-    (closed last range, reference sql.py:144-148)."""
+    """The range-split read keeps every row of a non-NULL key: no
+    dup/loss at the range boundaries (closed last range, reference
+    sql.py:144-148)."""
     df = read_table(spark, sf_dir, "lineitem")
     split = range_partitioned_read(df, "l_orderkey", splits)
     assert split.count() == df.count()
@@ -71,21 +71,33 @@ def test_range_split_serial_fallback(spark):
     assert out.count() == 2  # serial fallback keeps NULL-key rows
 
 
-def test_split_ranges_int_remainder():
-    rs = split_ranges(0, 10, 3)  # 10//3=3 → [0,3),[3,6),[6,9),[9,10]
-    assert rs == [(0, 3), (3, 6), (6, 9), (9, 10)]
-
-
-def test_split_ranges_date_and_datetime():
-    d0, d1 = dt.date(2025, 1, 1), dt.date(2025, 1, 11)
-    rs = split_ranges(d0, d1, 2)
-    assert rs[0] == (d0, dt.date(2025, 1, 6)) and rs[-1][1] == d1
-    t0 = dt.datetime(2025, 1, 1, 0, 0, 0)
-    t1 = dt.datetime(2025, 1, 1, 0, 0, 10)
-    assert split_ranges(t0, t1, 5)[1] == (
-        dt.datetime(2025, 1, 1, 0, 0, 2),
-        dt.datetime(2025, 1, 1, 0, 0, 4),
-    )
+@pytest.mark.parametrize(
+    "ddl, keys",
+    [
+        ("k: bigint", [5, None, -3, 5, None, 10**12]),
+        (
+            "k: timestamp",
+            [
+                dt.datetime(2025, 1, 1, 0, 0, 0, 250000),
+                None,
+                dt.datetime(2025, 1, 1, 0, 0, 9, 999999),
+                dt.datetime(2024, 12, 31, 23, 59, 59),
+                None,
+            ],
+        ),
+    ],
+    ids=["bigint", "timestamp"],
+)
+def test_range_split_drops_only_null_keys(spark, ddl, keys):
+    """Mixed NULL and non-NULL keys: the reference's range predicates
+    drop the NULL-key rows and keep every other row once, the min and
+    max keys included."""
+    rows = [(k, i) for i, k in enumerate(keys)]
+    df = spark.createDataFrame(rows, f"{ddl}, v: bigint")
+    out = range_partitioned_read(df, "k", 4)
+    assert sorted(r.v for r in out.collect()) == [
+        i for i, k in enumerate(keys) if k is not None
+    ]
 
 
 def test_with_filter_and_select_passthrough(spark, sf_dir):

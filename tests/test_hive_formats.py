@@ -6,7 +6,8 @@ Spark's own jars, so none of these is environment-blocked.
 Runs in a SUBPROCESS: ``enableHiveSupport()`` must be set before the
 first SparkSession exists in a JVM, and the shared test session is
 not Hive-enabled. One fresh JVM covers all five formats plus a
-dynamic-partitioned Hive insert.
+dynamic-partitioned Hive insert, which must leave the caller's
+dynamic-partition mode as it found it.
 """
 
 from __future__ import annotations
@@ -43,8 +44,12 @@ for fmt in HIVE_FILE_FORMATS:
     assert back == src, fmt + " roundtrip mismatch"
     print("OK", fmt)
 
-# OP-24 against a real Hive catalog: dynamic-partitioned insert
+# OP-24 against a real Hive catalog: dynamic-partitioned insert; the
+# nonstrict mode it needs is set for the write only
+mode_key = "hive.exec.dynamic.partition.mode"
+mode_before = spark.conf.get(mode_key, None)
 write_hive_table(df, "t_part", file_format="parquet", partition_by=["p"])
+assert spark.conf.get(mode_key, None) == mode_before, spark.conf.get(mode_key, None)
 parts = spark.sql("SHOW PARTITIONS t_part").collect()
 assert len(parts) == 3, parts
 back = sorted(

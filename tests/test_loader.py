@@ -103,6 +103,26 @@ def test_partitioned_write(spark, tmp_path):
     assert spark.read.parquet(path).count() == 2
 
 
+def test_analyze_keeps_callers_cache(spark, tmp_path):
+    """OP-32 refreshes only the loaded path: a frame the caller
+    persisted keeps its storage level, and a cached read of the target
+    sees the new files."""
+    path = str(tmp_path / "a")
+    Loader(spark, path, "overwrite").execute(spark.range(3))
+    mine = spark.range(100).persist()
+    target = spark.read.parquet(path).persist()
+    try:
+        assert mine.count() == 100 and target.count() == 3
+        level = mine.storageLevel
+        Loader(spark, path, "overwrite", analyze=True).execute(spark.range(5))
+        assert mine.storageLevel == level
+        assert mine.is_cached and target.is_cached
+        assert target.count() == 5
+    finally:
+        mine.unpersist()
+        target.unpersist()
+
+
 def test_pre_post_sql_hooks(spark, tmp_path):
     path = str(tmp_path / "h")
     df = spark.createDataFrame([(1,)], "id: bigint")

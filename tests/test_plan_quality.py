@@ -661,3 +661,14 @@ def test_minhash_documents_scans_pinned(spark, sf_dir):
         unpersist_all()
     assert self_join.count("documents.parquet") <= 1, self_join[:1200]
     assert cross_join.count("documents.parquet") <= 2, cross_join[:1200]
+
+
+def test_range_split_read_scans_source_once(spark, sf_dir):
+    """OP-12 on a file source is ONE scan with a key IS NOT NULL
+    filter — never a union of per-range rescans of the same file."""
+    from lightlane_spark.operators.extract import range_partitioned_read
+
+    df = range_partitioned_read(read_table(spark, sf_dir, "lineitem"), "l_orderkey", 4)
+    ps = plan_summary(df)
+    assert ps.text.count("lineitem.parquet") == 1, ps.text[:1200]
+    assert "Union" not in ps.text

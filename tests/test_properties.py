@@ -3,44 +3,10 @@ logic — no Spark session needed, so these run fast and wide."""
 
 from __future__ import annotations
 
-import datetime as dt
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from lightlane_spark.operators.extract import split_ranges
 from lightlane_spark.sources.jdbc import split_options
-
-
-@given(
-    start=st.integers(min_value=-(10**12), max_value=10**12),
-    span=st.integers(min_value=0, max_value=10**12),
-    splits=st.integers(min_value=1, max_value=64),
-)
-@settings(max_examples=300)
-def test_split_ranges_cover_domain_exactly(start, span, splits):
-    """Ranges tile [start, end] with no gaps/overlaps: consecutive
-    bounds chain, first=start, last=end (closed upper on last)."""
-    end = start + span
-    rs = split_ranges(start, end, splits)
-    assert rs[0][0] == start and rs[-1][1] == end
-    for (_, hi), (lo, _) in zip(rs, rs[1:]):
-        assert hi == lo  # chained: k < hi on one side, k >= lo on next
-    assert all(lo <= hi for lo, hi in rs)
-
-
-@given(
-    start=st.dates(min_value=dt.date(1990, 1, 1), max_value=dt.date(2050, 1, 1)),
-    days=st.integers(min_value=0, max_value=20000),
-    splits=st.integers(min_value=1, max_value=32),
-)
-@settings(max_examples=200)
-def test_split_ranges_dates_chain(start, days, splits):
-    end = start + dt.timedelta(days=days)
-    rs = split_ranges(start, end, splits)
-    assert rs[0][0] == start and rs[-1][1] == end
-    for (_, hi), (lo, _) in zip(rs, rs[1:]):
-        assert hi == lo
 
 
 @given(

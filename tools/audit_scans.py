@@ -24,7 +24,7 @@ Interpreting hits — not every repeat is a bug:
   - fixture unions (docs ∪ mutated twins) scan the base per branch
     by construction;
   - recall-contract queries embed a second verifier chain on purpose;
-  - bucketed/range_split unions of disjoint scans ARE the operator;
+  - bucketed unions of disjoint scans ARE the operator;
   - consumers hash-partitioned on the SAME key share one exchange at
     runtime (ReusedExchange) — the "repeat" is already free.
 The bug smell is the SAME table repeated because a tiny intermediate
