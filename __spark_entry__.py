@@ -47,18 +47,8 @@ from lightlane_spark.operators.extract import (  # noqa: E402
 from lightlane_spark.sources.parquet import read_table  # noqa: E402
 from lightlane_spark import queries_m5 as m5_queries  # noqa: E402
 from lightlane_spark import queries_relational as rel_queries  # noqa: E402
+from lightlane_spark.queries_relational import _dec_sum  # noqa: E402
 from lightlane_spark import queries_temporal as temporal_queries  # noqa: E402
-
-
-def _dec_sum(col, alias: str, scale: int = 2):
-    """Order-independent SUM of a double expr (see module docstring).
-
-    ``scale`` must cover the expression's exact decimal scale (e.g. a
-    2dp-price × 2dp-discount product has 4 exact decimal digits) so the
-    per-row cast never lands on a rounding boundary — Spark and DuckDB
-    round boundary doubles differently.
-    """
-    return F.sum(col.cast(f"decimal(28,{scale})")).cast("double").alias(alias)
 
 
 # ---------------------------------------------------------------------------

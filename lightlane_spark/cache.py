@@ -51,7 +51,7 @@ _SCOPES = threading.local()  # .stack: this thread's open scopes, innermost last
 _MEMOS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
-def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
+def tracked_persist(df: DataFrame) -> DataFrame:
     """``df.persist()`` + registration in the library cache registry.
 
     Every persist site inside ``lightlane_spark`` uses this instead of
@@ -63,7 +63,7 @@ def tracked_persist(df: DataFrame, storage_level=None) -> DataFrame:
     pinned, and loop-heavy callers such as ``cms_estimate`` re-pinning
     one sketch do not grow the registry).
     """
-    out = df.persist(storage_level) if storage_level is not None else df.persist()
+    out = df.persist()
     with _LOCK:
         if not any(t is out for t in _TRACKED):
             _TRACKED.append(out)
@@ -96,7 +96,7 @@ def unpersist_all(blocking: bool = False) -> int:
 
 
 @contextmanager
-def cache_scope(blocking: bool = False) -> Iterator[None]:
+def cache_scope() -> Iterator[None]:
     """Scope a unit of composition: frames persisted by library code on
     this thread inside the ``with`` block are unpersisted on exit
     (success or error). Scopes nest in the ordinary LIFO ``with``
@@ -120,7 +120,7 @@ def cache_scope(blocking: bool = False) -> Iterator[None]:
             # frames unpersist_all already took are no longer ours
             released = [t for t in _TRACKED if id(t) in ours]
             _TRACKED[:] = [t for t in _TRACKED if id(t) not in ours]
-        _unpersist(released, blocking)
+        _unpersist(released, False)
 
 
 def session_memo(spark, key: Any, build: Callable[[], Any]) -> Any:

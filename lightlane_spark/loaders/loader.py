@@ -12,8 +12,8 @@ and then reconciles it into the target with one of three modes
     write to a reconcile table, atomic rename swap
     (``hive_loader.py:162-182``). Here:
     ``target.join(staging, pks, 'left_anti').unionByName(staging)``
-    staged to a temp path then atomically swapped — same reconcile-
-    and-swap commit the reference uses, minus the Hive DDL.
+    staged to a temp path then swapped in by two renames — same
+    reconcile-and-swap commit the reference uses, minus the Hive DDL.
 
 Validation rules preserved (``hive_loader.py:62-82``): mode must be
 one of the three; MERGE requires primary keys and forbids static
@@ -120,7 +120,9 @@ class Loader:
     ``mysql_loader.py``) collapse into this one class: staging tables
     become transient DataFrames (OP-29 — no DDL needed), bulk-load
     becomes the write itself (OP-22/23), and the commit protocol is
-    Spark's plus an atomic directory swap for MERGE/self-overwrite.
+    Spark's: OVERWRITE and APPEND are ``mode('overwrite')`` /
+    ``mode('append')``; MERGE adds a rename swap of a staged reconcile
+    directory (``_merge``).
     """
 
     spark: SparkSession
@@ -179,9 +181,11 @@ class Loader:
     def _merge(self, staging: DataFrame) -> None:
         """Reconcile-and-swap: the reference's MERGE commit
         (``hive_loader.py:166-179``) re-expressed as a staged parquet
-        write + a rename swap through the Hadoop FileSystem API — so
-        the same code works on file://, HDFS, and S3A paths, not just
-        the driver-local filesystem."""
+        write + a rename swap through the Hadoop FileSystem API, so it
+        runs on any Hadoop filesystem, not just the driver-local one.
+        Each rename is atomic on file:// and HDFS, and a failed second
+        rename restores the old directory; on an object store such as
+        S3A a rename is copy+delete, so the swap is not atomic there."""
         fs, table = fs_path(self.spark, self.table_path)
         if not fs.exists(table):
             staging.write.mode("overwrite").format(self.fmt).save(self.table_path)

@@ -243,23 +243,19 @@ def assign_components(
     id_col: str = "doc_id",
     id_a: str = "id_a",
     id_b: str = "id_b",
-    broadcast: bool | None = None,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Attach a ``component`` column to every row of ``df``; rows whose
     id is in no edge become singleton components (component = own id).
 
-    ``broadcast``: force (True) or forbid (False) broadcasting the
-    component map. Default None lets AQE decide from the map's actual
-    size — right at scale, where a heavily-duplicated corpus (web
-    crawl: 30%+ of docs in some pair) makes the map far too large to
-    broadcast even though it is tiny on clean corpora.
+    AQE picks the join strategy from the component map's actual size —
+    right at scale, where a heavily-duplicated corpus (web crawl: 30%+
+    of docs in some pair) makes the map far too large to broadcast
+    even though it is tiny on clean corpora.
     """
     cc = connected_components(
         edges, id_a, id_b, assume_canonical=assume_canonical
     ).withColumnRenamed("id", id_col)
-    if broadcast:
-        cc = F.broadcast(cc)
     return df.join(cc, on=id_col, how="left").withColumn(
         "component", F.coalesce(F.col("component"), F.col(id_col))
     )

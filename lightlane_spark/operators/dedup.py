@@ -30,23 +30,21 @@ def dedup_keep_first(
     df: DataFrame,
     keys: list[str],
     orderby: list[str | Column] | None = None,
-    deterministic: bool = True,
 ) -> DataFrame:
     """Keep exactly one row per ``keys`` group, first under ``orderby``.
 
     ``orderby=None`` → order by the keys themselves (the reference's
-    default, ``hive_loader.py:80-82``). With ``deterministic=True``
-    every remaining column is appended to the ordering so exact-tie
-    groups still yield stable output.
+    default, ``hive_loader.py:80-82``). Every remaining column is
+    appended to the ordering so exact-tie groups still yield stable
+    output.
     """
     if not keys:
         raise ValueError("dedup requires at least one key column")
     order = _order_cols(df, list(orderby) if orderby else list(keys))
-    if deterministic:
-        # Tie-break on every column not already named (string entries
-        # only — Column expressions can't be reliably introspected).
-        named = set(keys) | {o for o in (orderby or []) if isinstance(o, str)}
-        order += [F.col(c) for c in df.columns if c not in named]
+    # Tie-break on every column not already named (string entries
+    # only — Column expressions can't be reliably introspected).
+    named = set(keys) | {o for o in (orderby or []) if isinstance(o, str)}
+    order += [F.col(c) for c in df.columns if c not in named]
     w = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(*order)
     return (
         df.withColumn("__rnk", F.row_number().over(w))

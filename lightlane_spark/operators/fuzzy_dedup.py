@@ -181,62 +181,44 @@ def minhash_signatures(
 
 
 def lsh_band_keys(
-    signatures_or_arrays: DataFrame,
+    signatures: DataFrame,
     id_col: str = "doc_id",
     bands: int = 4,
     rows_per_band: int = 4,
 ) -> DataFrame:
-    """(id, band, band_sig): per-band concatenation of the signature in
-    seed order — deterministic bucket keys.
-
-    Accepts the array form (``sig`` column) and derives bands with NO
-    shuffle (pure projection + explode); falls back to grouping the
-    row form when given (id, seed, minh).
+    """(id, band, band_sig): per-band concatenation of the array-form
+    signature (``sig`` column) in seed order — deterministic bucket
+    keys, derived with NO shuffle (pure projection + explode).
     """
-    df = signatures_or_arrays
-    if "sig" in df.columns:
-        # The band-struct Column is ~bands·rows_per_band element_at/
-        # concat_ws nodes — ~0.2 s of py4j construction per build at
-        # (4, 4), paid by every LSH-family query. Parsed Columns are
-        # immutable expression trees, so memoize per session (the
-        # minhash_signature_arrays / hyperplane_bits precedent).
-        band_structs = session_memo(
-            df.sparkSession,
-            ("lsh_bands", bands, rows_per_band),
-            lambda: F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.element_at(
-                                    F.col("sig"), b * rows_per_band + r + 1
-                                ).cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("band_sig"),
-                    )
-                    for b in range(bands)
-                ]
-            ),
-        )
-        return df.select(
-            F.col(id_col), F.explode(band_structs).alias("__b")
-        ).select(id_col, F.col("__b.band").alias("band"), F.col("__b.band_sig").alias("band_sig"))
-    with_band = df.withColumn("band", (F.col("seed") / rows_per_band).cast("int"))
-    return (
-        with_band.groupBy(id_col, "band")
-        .agg(
-            F.concat_ws(
-                ",",
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("seed", "minh"))),
-                    lambda s: s["minh"].cast("string"),
-                ),
-            ).alias("band_sig")
-        )
+    # The band-struct Column is ~bands·rows_per_band element_at/
+    # concat_ws nodes — ~0.2 s of py4j construction per build at
+    # (4, 4), paid by every LSH-family query. Parsed Columns are
+    # immutable expression trees, so memoize per session (the
+    # minhash_signature_arrays / hyperplane_bits precedent).
+    band_structs = session_memo(
+        signatures.sparkSession,
+        ("lsh_bands", bands, rows_per_band),
+        lambda: F.array(
+            *[
+                F.struct(
+                    F.lit(b).alias("band"),
+                    F.concat_ws(
+                        ",",
+                        *[
+                            F.element_at(
+                                F.col("sig"), b * rows_per_band + r + 1
+                            ).cast("string")
+                            for r in range(rows_per_band)
+                        ],
+                    ).alias("band_sig"),
+                )
+                for b in range(bands)
+            ]
+        ),
     )
+    return signatures.select(
+        F.col(id_col), F.explode(band_structs).alias("__b")
+    ).select(id_col, F.col("__b.band").alias("band"), F.col("__b.band_sig").alias("band_sig"))
 
 
 def _pairs_from_buckets(buckets: DataFrame, max_bucket_size: int | None) -> DataFrame:
@@ -321,8 +303,8 @@ def jaccard_verify(
     shingles: DataFrame,
     id_col: str = "doc_id",
     threshold: float = 0.7,
-    shingles_distinct: bool = True,
-    cand_ids: DataFrame | None = None,
+    *,
+    cand_ids: DataFrame,
 ) -> DataFrame:
     """Exact Jaccard for candidate pairs only → (id_a, id_b, jaccard).
 
@@ -336,15 +318,14 @@ def jaccard_verify(
     Scale shape: the candidate-doc semi-join keeps the collect_set
     shuffle proportional to the candidate set, not the corpus; set
     arrays are bounded by document length. The multiset→set collapse
-    happens inside collect_set, so map-only (``shingles_distinct=
-    False``) input costs nothing extra.
+    happens inside collect_set, so map-only (multiset) shingles cost
+    nothing extra.
 
-    ``cand_ids``: optional pre-built candidate-doc id list (may contain
-    bounded duplicates — the semi-join's build side dedupes keys). Pass
-    ``bucket_candidate_ids`` output when you have the buckets: it is
-    bands×|docs| worst case with no exchange. The fallback derives ids
-    from the pairs themselves and must pay a distinct — broadcasting
-    2×|pairs| rows raw would be quadratic in duplicate-clique size.
+    ``cand_ids``: the candidate-doc id list, ``bucket_candidate_ids``
+    output (may contain bounded duplicates — the semi-join's build
+    side dedupes keys): bands×|docs| worst case with no exchange.
+    Ids derived from the pairs would be 2×|pairs| rows — quadratic in
+    duplicate-clique size — or pay a distinct.
 
     Driver shape (r14, guide §7.3): every join here takes an
     UNRESOLVED Column condition on reserved ``__j*``/``__ci`` names —
@@ -356,14 +337,6 @@ def jaccard_verify(
     filter collapse into one select + where for the same reason.
     Join structure, semantics, and output are unchanged.
     """
-    if cand_ids is None:
-        # in-row explode: the two-select union form re-ran the pairs
-        # lineage (often a full LSH chain) twice for one id list
-        cand_ids = (
-            pairs.select(
-                F.explode(F.array("id_a", "id_b")).alias(id_col)
-            ).distinct()
-        )
     ci = cand_ids.select(F.col(id_col).alias("__ci"))
     doc_sets = (
         shingles.join(
@@ -414,9 +387,7 @@ def dedup_minhash(
     buckets = lsh_buckets(keys, id_col).transform(tracked_persist)
     cand = _pairs_from_buckets(buckets, max_bucket_size=1000)
     ids = bucket_candidate_ids(buckets, id_col, max_bucket_size=1000)
-    return jaccard_verify(
-        cand, sh, id_col, threshold, shingles_distinct=False, cand_ids=ids
-    )
+    return jaccard_verify(cand, sh, id_col, threshold, cand_ids=ids)
 
 
 # ---------------------------------------------------------------------------
@@ -667,9 +638,7 @@ def minhash_join(
     # set from the filtered pairs would cost the distinct the
     # bucket-array form exists to avoid.
     ids = bucket_candidate_ids(buckets, id_col, max_bucket_size=max_bucket_size)
-    cross = jaccard_verify(
-        cand, sh, id_col, threshold, shingles_distinct=False, cand_ids=ids
-    )
+    cross = jaccard_verify(cand, sh, id_col, threshold, cand_ids=ids)
     even = F.when(F.col("id_a") % 2 == 0, F.col("id_a")).otherwise(F.col("id_b"))
     odd = F.when(F.col("id_a") % 2 == 1, F.col("id_a")).otherwise(F.col("id_b"))
     # shiftright, not /2: float division loses exactness past 2^53

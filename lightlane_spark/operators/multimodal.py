@@ -9,12 +9,8 @@ libraries (PIL/ffmpeg/torchaudio) are not in this container:
   - Each operator takes a pluggable callable (``decoder`` /
     ``extractor`` / ``resizer``) — the slot a real PIL/ffmpeg/torch
     implementation plugs into, exercised in tests with an injected
-    fake "real" decoder so the slot itself is covered, not just the
-    raise.
-  - ``use_real_decoder=True`` with no callable raises
-    ``NotImplementedError`` at the point a real decoder would be
-    invoked (clearly marked, slot-in ready).
-  - The default path runs a DETERMINISTIC FAKE decoder that derives
+    fake "real" decoder so the slot itself is covered.
+  - Without a callable, a DETERMINISTIC FAKE decoder derives
     pseudo-metadata purely from the byte content, so pipelines and
     tests exercise the full distributed path end-to-end.
 
@@ -60,7 +56,6 @@ def decode_image_meta(
     df: DataFrame,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    use_real_decoder: bool = False,
     decoder=None,
 ) -> DataFrame:
     """Extract image metadata from binary payloads via mapInPandas.
@@ -85,11 +80,6 @@ def decode_image_meta(
         import hashlib
 
         for pdf in batches:
-            if use_real_decoder and decoder is None:
-                # STUB: slot a real decoder (PIL.Image.open etc.) here.
-                raise NotImplementedError(
-                    "real image decoding requires PIL/libvips — not in this container"
-                )
             dec = decoder or _fake_decode
             rows = []
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
@@ -117,7 +107,6 @@ def extract_features(
     dim: int = 16,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    use_real_extractor: bool = False,
     extractor=None,
 ) -> DataFrame:
     """Feature-extraction plumbing: binary payload → ``array<float>``
@@ -138,11 +127,6 @@ def extract_features(
         import math
 
         for pdf in batches:
-            if use_real_extractor and extractor is None:
-                # STUB: load the broadcast model and encode here.
-                raise NotImplementedError(
-                    "real feature extraction requires torch/onnx — not in this container"
-                )
             rows = []
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
                 if extractor is not None:
@@ -171,7 +155,6 @@ def resize_image(
     height: int,
     id_col: str = "doc_id",
     payload_col: str = "payload",
-    use_real_decoder: bool = False,
     resizer=None,
 ) -> DataFrame:
     """Resize plumbing: payload → payload' with recorded target dims.
@@ -187,11 +170,6 @@ def resize_image(
 
     def resize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if use_real_decoder and resizer is None:
-                # STUB: decode → resample to (width, height) → re-encode.
-                raise NotImplementedError(
-                    "real resize requires PIL/libvips — not in this container"
-                )
             out = pdf[[id_col, payload_col]].copy()
             if resizer is not None:
                 out[payload_col] = [

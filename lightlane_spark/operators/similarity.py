@@ -667,88 +667,22 @@ def cosine_neardup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_block_size: int | None = 10_000,
-    impl: str = "arrow",
 ) -> DataFrame:
     """Embedding near-dup pairs within blocks: (id_a, id_b, sim).
 
     Pair count stays Σ|block|²; at corpus scale the block key is a
     coarse LSH bucket rather than a label (``cosine_neardup_lsh``
-    wires that up).
+    wires that up). Contract: blocks of ≥2 and ≤``max_block_size``
+    members, id-ascending pair canonicalization, float64 cosine, NaN
+    pairs dropped — the same as ``_cosine_neardup_pairs_sql``, the
+    bit-exact reference the parity tests compare against.
 
-    Two implementations with identical contracts (blocks of ≥2 and
-    ≤``max_block_size`` members, id-ascending pair canonicalization,
-    float64 cosine, NaN pairs dropped):
-
-    ``impl="arrow"`` (default) — applyInPandas per block; the block's
-    Gram matrix is a TILED numpy matmul, so the Σ|block|²·dims work
-    runs vectorized instead of through Catalyst's INTERPRETED
-    higher-order lambda evaluator (transform/aggregate lambdas never
-    enter whole-stage codegen — profiled 1.6 s of a 2.0 s sf0.1 run
-    just expanding 400k pairs × 64-dim folds; the matmul form does
-    the same arithmetic in ~0.1 s). The matmul is only the candidate
-    filter: every kept pair's sim is recomputed as the exact
-    left-associated float64 fold, so emitted values are BIT-IDENTICAL
-    to ``impl="sql"`` and the DuckDB oracle — a pair landing exactly
-    on the threshold (or a 6dp rounding midpoint) cannot flip between
-    engines (the impl-parity test pins this).
-
-    ``impl="sql"`` — the bit-exact oracle anchor: one groupBy
-    collects each block's (id, norm, vector) structs, then pairs
-    expand IN-ROW (each member against its suffix) with the sim
-    computed inside the nested lambda — sequential-fold dot, exactly
-    the DuckDB oracle's left-associated fold. Memory per block row is
-    |block|×dims×8 B — ``max_block_size`` (default 10k ≈ 5 MB at
-    64 dims) drops degenerate blocks, the same cap-and-log tradeoff
-    as LSH bucket caps.
-    """
-    if impl == "arrow":
-        return _cosine_neardup_pairs_arrow(
-            df, block_col, threshold, id_col, vec_col, max_block_size
-        )
-    if impl != "sql":
-        raise ValueError(f"unknown impl {impl!r}")
-    v = df.select(
-        F.col(block_col).alias("__blk"),
-        F.struct(
-            F.col(id_col).alias("id"),
-            norm(_vec_double(vec_col)).alias("n"),
-            _vec_double(vec_col).alias("v"),
-        ).alias("__m"),
-    )
-    blocks = v.groupBy("__blk").agg(F.array_sort(F.collect_list("__m")).alias("ms"))
-    blocks = blocks.filter(F.size("ms") >= 2)
-    if max_block_size is not None:
-        blocks = blocks.filter(F.size("ms") <= max_block_size)
-    sim = lambda a, b: dot(a["v"], b["v"]) / (a["n"] * b["n"])  # noqa: E731
-    pairs = F.flatten(
-        F.transform(
-            F.col("ms"),
-            lambda a, i: F.transform(
-                F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
-                lambda b: F.struct(
-                    a["id"].alias("id_a"), b["id"].alias("id_b"), sim(a, b).alias("sim")
-                ),
-            ),
-        )
-    )
-    return (
-        blocks.select(F.explode(pairs).alias("p"))
-        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"), F.col("p.sim").alias("sim"))
-        .filter((F.col("sim") >= threshold) & ~F.isnan(F.col("sim")))
-    )
-
-
-def _cosine_neardup_pairs_arrow(
-    df: DataFrame,
-    block_col: str,
-    threshold: float,
-    id_col: str,
-    vec_col: str,
-    max_block_size: int | None,
-) -> DataFrame:
-    """Arrow-batched block expansion (see ``cosine_neardup_pairs``).
-
-    Per block: sort by id (pair canonicalization identical to the SQL
+    applyInPandas per block, so the Σ|block|²·dims work runs in numpy
+    instead of through Catalyst's INTERPRETED higher-order lambda
+    evaluator (transform/aggregate lambdas never enter whole-stage
+    codegen — profiled 1.6 s of a 2.0 s sf0.1 run just expanding 400k
+    pairs × 64-dim folds; the matmul form does the same arithmetic in
+    ~0.1 s). Per block: sort by id (pair canonicalization identical to the SQL
     form's array_sort), then a TILED V·Vᵀ Gram matmul in float64 —
     ``_TILE`` rows of the Gram matrix at a time, so peak memory is
     ``_TILE × |block| × 8 B`` (≈ 40 MB at the 10 k cap) instead of
@@ -769,10 +703,10 @@ def _cosine_neardup_pairs_arrow(
     ``dot()``/``norm()`` and the DuckDB oracle — and the real
     threshold applies to THAT value. Survivors are few (near-dups),
     so the exact pass is O(|candidates|·dims) and the output is
-    bit-identical to ``impl="sql"``. The exact pass is itself slabbed
-    (1M pairs at a time), so even a permissive threshold that keeps
-    ~|block|²/2 candidates cannot blow past the tile-bounded memory
-    budget."""
+    bit-identical to the SQL form (the parity test pins this). The
+    exact pass is itself slabbed (1M pairs at a time), so even a
+    permissive threshold that keeps ~|block|²/2 candidates cannot
+    blow past the tile-bounded memory budget."""
     import numpy as np
     import pandas as pd
 
@@ -867,4 +801,52 @@ def _cosine_neardup_pairs_arrow(
         df.select(F.col(block_col).alias("__blk"), id_col, vec_col)
         .groupBy("__blk")
         .applyInPandas(expand, schema=out_schema)
+    )
+
+
+def _cosine_neardup_pairs_sql(
+    df: DataFrame,
+    block_col: str,
+    threshold: float = 0.95,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    max_block_size: int | None = 10_000,
+) -> DataFrame:
+    """The bit-exact reference for ``cosine_neardup_pairs``, same
+    contract: one groupBy collects each block's (id, norm, vector)
+    structs, then pairs expand IN-ROW (each member against its suffix)
+    with the sim computed inside the nested lambda — sequential-fold
+    dot, exactly the DuckDB oracle's left-associated fold. Memory per
+    block row is |block|×dims×8 B — ``max_block_size`` (default 10k ≈
+    5 MB at 64 dims) drops degenerate blocks, the same cap-and-log
+    tradeoff as LSH bucket caps. The parity tests compare the Arrow
+    form against it."""
+    v = df.select(
+        F.col(block_col).alias("__blk"),
+        F.struct(
+            F.col(id_col).alias("id"),
+            norm(_vec_double(vec_col)).alias("n"),
+            _vec_double(vec_col).alias("v"),
+        ).alias("__m"),
+    )
+    blocks = v.groupBy("__blk").agg(F.array_sort(F.collect_list("__m")).alias("ms"))
+    blocks = blocks.filter(F.size("ms") >= 2)
+    if max_block_size is not None:
+        blocks = blocks.filter(F.size("ms") <= max_block_size)
+    sim = lambda a, b: dot(a["v"], b["v"]) / (a["n"] * b["n"])  # noqa: E731
+    pairs = F.flatten(
+        F.transform(
+            F.col("ms"),
+            lambda a, i: F.transform(
+                F.slice(F.col("ms"), i + 2, F.size(F.col("ms"))),
+                lambda b: F.struct(
+                    a["id"].alias("id_a"), b["id"].alias("id_b"), sim(a, b).alias("sim")
+                ),
+            ),
+        )
+    )
+    return (
+        blocks.select(F.explode(pairs).alias("p"))
+        .select(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"), F.col("p.sim").alias("sim"))
+        .filter((F.col("sim") >= threshold) & ~F.isnan(F.col("sim")))
     )

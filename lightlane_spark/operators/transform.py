@@ -36,9 +36,7 @@ from pyspark.sql import types as T
 from lightlane_spark.cache import cache_scope, tracked_persist
 
 
-def json_extract(
-    df: DataFrame, source_col: str, fields: dict[str, str], drop_source: bool = False
-) -> DataFrame:
+def json_extract(df: DataFrame, source_col: str, fields: dict[str, str]) -> DataFrame:
     """OP-13 (documented intent): extract JSON paths into columns.
 
     ``fields`` maps output column name → JSONPath (``$.a.b``). Uses
@@ -48,8 +46,6 @@ def json_extract(
     out = df
     for name, path in fields.items():
         out = out.withColumn(name, F.get_json_object(F.col(source_col), path))
-    if drop_source:
-        out = out.drop(source_col)
     return out
 
 

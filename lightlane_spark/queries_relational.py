@@ -5,8 +5,8 @@ query here is oracle-checked and plan-reviewed (broadcast where a side
 is dimension-sized, partial aggregation before every shuffle).
 
 Float policy: SUMs go through exact DECIMAL at expression scale
-(see ``__spark_entry__._dec_sum``); AVG = decimal-sum ÷ count in
-double (deterministic in both engines).
+(``_dec_sum`` below); AVG = decimal-sum ÷ count in double
+(deterministic in both engines).
 """
 
 from __future__ import annotations
@@ -25,6 +25,16 @@ from lightlane_spark.cache import tracked_persist
 
 
 def _dec_sum(col, alias: str, scale: int = 2):
+    """Order-independent SUM of a double expr: cross-engine SUM over
+    doubles diverges in the last ulp because summation order differs,
+    so the per-row value is cast to an exact DECIMAL, summed, and cast
+    back to DOUBLE — bit-identical in Spark and DuckDB.
+
+    ``scale`` must cover the expression's exact decimal scale (e.g. a
+    2dp-price × 2dp-discount product has 4 exact decimal digits) so the
+    per-row cast never lands on a rounding boundary — Spark and DuckDB
+    round boundary doubles differently.
+    """
     return F.sum(col.cast(f"decimal(28,{scale})")).cast("double").alias(alias)
 
 

@@ -13,7 +13,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from lightlane_spark.cache import session_memo
 
@@ -50,10 +49,6 @@ def read_table(
     ``connector/dbapi.py:163-165``) as DataFrame ops so Catalyst can
     push them into the parquet scan.
     """
-    # Some producers write TIMESTAMP(NANOS) parquet (e.g. the events
-    # table); Spark refuses it unless nanos are surfaced as long,
-    # which we then convert back to a (µs) timestamp below.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Pin the SESSION time zone at the one entry point every query
     # shares: Spark's TimestampType is TZ-adjusted — window() buckets
     # against the session zone's 1970-01-01 origin and collect()
@@ -93,17 +88,6 @@ def read_table(
     else:
         schema = session_memo(spark, key, lambda: spark.read.parquet(path).schema)
         df = spark.read.schema(schema).parquet(path)
-    if table == "events" and dict(df.dtypes).get("ts") == "bigint":
-        # integer DIV — double division would lose precision on ~1e18 ns.
-        # timestamp_micros yields TZ-ADJUSTED TimestampType; cast to
-        # NTZ so this fallback produces the same type the native
-        # parquet read yields (timestamp_ntz) — otherwise a nanos-
-        # surfacing environment would re-introduce the host-zone
-        # output class through every query that emits ts
-        df = df.withColumn(
-            "ts",
-            F.timestamp_micros(F.expr("ts DIV 1000")).cast("timestamp_ntz"),
-        )
     if exclude:
         df = df.drop(*exclude)
     if columns and columns != "*":

@@ -431,60 +431,3 @@ def streaming_neardup_ingest(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stateful_running_counts_tws(
-    stream: DataFrame,
-    key_cols: list[str],
-    count_col: str = "n",
-) -> DataFrame:
-    """The ``stateful_running_counts`` semantics on Spark 4's
-    ``transformWithStateInPandas`` — the successor API to
-    ``applyInPandasWithState``: state is declared as named typed
-    handles (ValueState/ListState/MapState) on a processor object
-    instead of one opaque tuple, supports multiple state variables,
-    per-key timers, and state TTL natively, and requires the RocksDB
-    state store (changelog-checkpointed, so state size is bounded by
-    disk not heap — the 100 TB-stream difference).
-
-    Both implementations are kept: applyInPandasWithState runs on any
-    state store provider (the default HDFS-backed one included);
-    this one needs
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider`` set BEFORE the query starts.
-    """
-    import pandas as pd
-
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    dtypes = dict(stream.dtypes)
-    out_schema = (
-        ", ".join(f"{k} {dtypes[k]}" for k in key_cols) + f", {count_col} bigint"
-    )
-
-    class RunningCount(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._count = handle.getValueState("count", "n bigint")
-
-        def handleInputRows(self, key, rows, timerValues):
-            n = self._count.get()[0] if self._count.exists() else 0
-            for pdf in rows:
-                n += len(pdf)
-            self._count.update((n,))
-            row = {k: [v] for k, v in zip(key_cols, key)}
-            row[count_col] = [n]
-            yield pd.DataFrame(row)
-
-        def close(self) -> None:
-            pass
-
-    grouped = stream.select(*key_cols).groupBy(*key_cols)
-    return grouped.transformWithStateInPandas(
-        statefulProcessor=RunningCount(),
-        outputStructType=out_schema,
-        outputMode="Update",
-        timeMode="None",
-    )

@@ -30,6 +30,21 @@ def test_projection_and_filter(spark, sf_dir):
     assert df.columns == ["l_orderkey", "l_quantity"]
 
 
+def test_read_table_leaves_nanos_as_long_alone(spark, sf_dir):
+    """read_table must not change the caller's parquet settings: the
+    testdata timestamps are µs, so events.ts reads as a timestamp with
+    nanosAsLong left as the caller set it."""
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.set(key, "false")
+    try:
+        df = read_table(spark, sf_dir, "events")
+        assert spark.conf.get(key) == "false"
+        assert dict(df.dtypes)["ts"] == "timestamp_ntz"
+        assert df.select("ts").limit(1).collect()[0].ts is not None
+    finally:
+        spark.conf.unset(key)
+
+
 def test_column_exclusion(spark, sf_dir):
     df = read_table(spark, sf_dir, "orders", exclude=["o_orderpriority", "o_orderstatus"])
     assert "o_orderpriority" not in df.columns and "o_orderkey" in df.columns

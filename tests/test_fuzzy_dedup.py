@@ -11,6 +11,7 @@ from lightlane_spark.operators.fuzzy_dedup import (
     dedup_minhash,
     lsh_band_keys,
     lsh_candidate_pairs,
+    minhash_signature_arrays,
     minhash_signatures,
     ngram_jaccard_pairs,
     shingle,
@@ -81,7 +82,7 @@ def test_lsh_bucket_cap(spark):
     df = spark.createDataFrame(
         [(i, "same same same same") for i in range(20)], "doc_id: bigint, text: string"
     )
-    keys = lsh_band_keys(minhash_signatures(shingle(df)))
+    keys = lsh_band_keys(minhash_signature_arrays(shingle(df)))
     assert lsh_candidate_pairs(keys, max_bucket_size=10).count() == 0
     assert lsh_candidate_pairs(keys, max_bucket_size=None).count() == 20 * 19 // 2
 

@@ -3,7 +3,6 @@
 from __future__ import annotations
 
 import duckdb
-import pytest
 
 from pyspark.sql import functions as F
 
@@ -13,6 +12,7 @@ from lightlane_spark.operators.multimodal import (
     sample_frames,
 )
 from lightlane_spark.operators.similarity import (
+    _cosine_neardup_pairs_sql,
     ann_topk_lsh,
     cosine_neardup_pairs,
     topk_bruteforce,
@@ -95,18 +95,18 @@ def test_cosine_neardup_impls_agree(spark, sf_dir):
     )
     u = emb.unionByName(dups)
 
-    def canon(impl, **kw):
-        out = cosine_neardup_pairs(u, block_col="label", threshold=0.9, impl=impl, **kw)
+    def canon(fn, **kw):
+        out = fn(u, block_col="label", threshold=0.9, **kw)
         return sorted(
             (r.id_a, r.id_b, r.sim) for r in out.collect()
         )
 
-    a, s = canon("arrow"), canon("sql")
+    a, s = canon(cosine_neardup_pairs), canon(_cosine_neardup_pairs_sql)
     assert a and a == s
     assert all(x < y for x, y, _ in a)
     # oversized blocks drop identically in both impls
-    a0 = canon("arrow", max_block_size=3)
-    s0 = canon("sql", max_block_size=3)
+    a0 = canon(cosine_neardup_pairs, max_block_size=3)
+    s0 = canon(_cosine_neardup_pairs_sql, max_block_size=3)
     assert a0 == s0 == []
 
 
@@ -118,12 +118,6 @@ def test_multimodal_decode_meta(spark, sf_dir):
         assert r.n_bytes > 0 and r.format in ("png", "jpeg", "webp")
         assert 64 <= r.width < 704 and 64 <= r.height < 544
         assert len(r.checksum) == 32
-
-
-def test_multimodal_real_decoder_is_stubbed(spark, sf_dir):
-    docs = read_table(spark, sf_dir, "documents").limit(1)
-    with pytest.raises(Exception, match="NotImplementedError|real image decoding"):
-        decode_image_meta(attach_binary_payload(docs), use_real_decoder=True).collect()
 
 
 def test_sample_frames_offsets(spark):
@@ -152,16 +146,6 @@ def test_extract_features_feeds_similarity(spark, sf_dir):
     assert {(r.query_id, r.vec_id) for r in top} == {
         (r.query_id, r.query_id) for r in top
     }  # every probe's nearest neighbor is itself
-
-
-def test_extract_features_real_path_stubbed(spark, sf_dir):
-    from lightlane_spark.operators.multimodal import extract_features
-
-    docs = read_table(spark, sf_dir, "documents").limit(1)
-    with pytest.raises(Exception, match="NotImplementedError|real feature extraction"):
-        extract_features(
-            attach_binary_payload(docs), use_real_extractor=True
-        ).collect()
 
 
 def test_resize_image_plumbing(spark, sf_dir):
@@ -269,11 +253,11 @@ def test_cosine_neardup_arrow_null_vectors_match_sql(spark):
     )
     a = sorted(
         (r.id_a, r.id_b)
-        for r in cosine_neardup_pairs(df, "label", threshold=0.99, impl="arrow").collect()
+        for r in cosine_neardup_pairs(df, "label", threshold=0.99).collect()
     )
     s = sorted(
         (r.id_a, r.id_b)
-        for r in cosine_neardup_pairs(df, "label", threshold=0.99, impl="sql").collect()
+        for r in _cosine_neardup_pairs_sql(df, "label", threshold=0.99).collect()
     )
     assert a == s == [(1, 2)]
 

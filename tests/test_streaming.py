@@ -4,8 +4,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 from pyspark.sql import functions as F
 
 from lightlane_spark.sources.parquet import read_table
@@ -288,59 +286,6 @@ def test_streaming_incremental_rollup_equals_batch(spark, sf_dir, tmp_path):
     got = sorted(map(tuple, state["df"].collect()))
     want = sorted(map(tuple, whole.collect()))
     assert got == want
-
-
-def test_transform_with_state_running_counts(spark, sf_dir, tmp_path):
-    """transformWithStateInPandas (Spark 4 successor API): same
-    cross-batch running-count semantics as applyInPandasWithState,
-    on the RocksDB state store it requires. Env-gated: the TWS
-    state-server protocol needs protobuf, absent in this container
-    (pip installs disallowed) — the operator itself is pure public
-    API and runs wherever pyspark[connect] deps are present."""
-    pytest.importorskip("google.protobuf", reason="TWS state server needs protobuf")
-    from lightlane_spark.streaming.incremental import stateful_running_counts_tws
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        land = str(tmp_path / "landing")
-        schema, ev = _stage_event_files(spark, sf_dir, land)
-        stream = stream_from_directory(spark, land, schema, max_files_per_trigger=1)
-        counts = stateful_running_counts_tws(stream, ["event_type"])
-        q = (
-            counts.writeStream.format("memory")
-            .queryName("tws_counts")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .option("checkpointLocation", str(tmp_path / "ck_tws"))
-            .start()
-        )
-        run_to_completion(q)
-        fed = [p for p in q.recentProgress if p["numInputRows"] > 0]
-        assert len(fed) >= 2, "state never crossed a batch boundary"
-        got = {
-            (r.event_type, r.n)
-            for r in spark.table("tws_counts")
-            .groupBy("event_type")
-            .agg(F.max("n").alias("n"))
-            .collect()
-        }
-        exp = {
-            (r.event_type, r.n)
-            for r in ev.groupBy("event_type")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        assert got == exp
-    finally:
-        if old is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, old)
 
 
 def test_windowed_counts_emits_timestamp_ntz(spark, sf_dir, tmp_path):
