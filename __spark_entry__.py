@@ -14,6 +14,7 @@ double arithmetic (same IEEE ops both engines) is emitted raw.
 
 from __future__ import annotations
 
+import functools
 import os
 import sys
 import tempfile
@@ -452,6 +453,27 @@ def q_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _pin_utc(fn: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """``fn`` with the session time zone pinned to UTC first.
+
+    The correctness harness builds a plain SparkSession, whose zone is
+    the host's. Spark's TimestampType is zone-adjusted: window() buckets
+    against the session zone's 1970-01-01 origin and collect() renders
+    instants as session wall clock, while the DuckDB oracles' naive
+    timestamps stay put. Under TZ=America/New_York an unpinned session
+    shifts streaming_sliding_counts' window_start by the UTC offset.
+    Library calls leave the zone alone; get_spark pins it for the
+    engine's own sessions, and this pin does it for the harness's."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, *args: str) -> DataFrame:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+        return fn(spark, *args)
+
+    return run
+
+
+@_pin_utc
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query on /root/testdata/sf0.001; driver checks rows>0."""
     return q_pricing_summary(spark, "/root/testdata/sf0.001")
@@ -763,7 +785,7 @@ def _driver_order(all_queries: dict) -> list[str]:
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     base = _queries_unordered()
-    return {name: base[name] for name in _driver_order(base)}
+    return {name: _pin_utc(base[name]) for name in _driver_order(base)}
 
 
 def _queries_unordered() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -13,9 +13,15 @@ Reference parity:
     INCREMENTAL STATS`` (``hive_impala.py:49-58``) → ``ANALYZE TABLE
     … COMPUTE STATISTICS [FOR COLUMNS]`` + ``REFRESH TABLE`` — feeds
     Spark's CBO exactly as Impala's stats feed its planner.
+
+``sql_over`` is the package's one way to run SQL text over DataFrames:
+it leaves no entry in the caller's catalog.
 """
 
 from __future__ import annotations
+
+import re
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -43,6 +49,28 @@ def create_table_if_missing(
 def schema_only(df: DataFrame) -> DataFrame:
     """OP-29: the reference's schema-only CTAS (``SELECT … LIMIT 0``)."""
     return df.limit(0)
+
+
+def sql_over(spark: SparkSession, query: str, **frames: DataFrame) -> DataFrame:
+    """Run ``query`` with each keyword name bound to its DataFrame.
+
+    Each frame is registered under a per-call unique view name, which
+    replaces the keyword name (as a whole word) in the query, and the
+    view is dropped once the query is analyzed: concurrent calls never
+    see each other's frames and the caller's catalog is left as it was.
+    The drop goes through the session catalog, not
+    ``spark.catalog.dropTempView``, which would also uncache a
+    persisted frame with the same plan."""
+    names = {key: f"__{key.strip('_')}_{uuid.uuid4().hex}" for key in frames}
+    pattern = r"\b(" + "|".join(map(re.escape, names)) + r")\b"
+    catalog = spark._jsparkSession.sessionState().catalog()  # noqa: SLF001
+    try:
+        for key, df in frames.items():
+            df.createTempView(names[key])
+        return spark.sql(re.sub(pattern, lambda m: names[m.group(1)], query))
+    finally:
+        for name in names.values():
+            catalog.dropTempView(name)
 
 
 def analyze_table(

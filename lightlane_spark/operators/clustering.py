@@ -211,9 +211,10 @@ def connected_components(
             return local_df(
                 edges.sparkSession, pairs, "id bigint, component bigint"
             )
-    # eager=False: the fingerprint action right below materializes the
-    # checkpoint anyway, so the eager materialization job per round is
-    # pure overhead (one job/round saved; lineage still truncated).
+    # eager=False is not lazy under AQE: building each round's frame
+    # still runs every shuffle and broadcast stage below the checkpoint;
+    # only the final block-storing stage waits for the fingerprint
+    # action right below (lineage is truncated either way).
     e = canon.localCheckpoint(eager=False)
     prev = None
     for _ in range(max_rounds):
@@ -451,8 +452,9 @@ def kcore_peel(
             )
             .filter(F.col("mindeg") >= k)
             .drop("deg", "mindeg")
-            # lazy, as in connected_components: still truncates the
-            # per-round plan, without forcing one eager job per round
+            # eager=False, as in connected_components: the stages below
+            # run while the frame is built; only the block-storing stage
+            # waits for the next action
             .localCheckpoint(eager=False)
         )
     return long.groupBy("id").agg(

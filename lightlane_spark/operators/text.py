@@ -1238,8 +1238,9 @@ def bpe_train(
             "toks",
             F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"),
         )
-        # lazy: round 1's pair-count action materializes it; an eager
-        # checkpoint would pay one extra job for the same blocks
+        # eager=False: the word-count shuffle below still runs while
+        # the frame is built; only the block-storing stage waits for
+        # round 1's pair-count action
         .localCheckpoint(eager=False)
     )
     spark = df.sparkSession

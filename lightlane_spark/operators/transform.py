@@ -166,8 +166,8 @@ def chunk_text_udtf(chunk_size: int = 32, stride: int = 24):
     The UDTF is the Spark-4-native face of the reference's
     row→many-rows Transformer hook (LightLane/transformer.py:11-16,
     handler emit loop csv_handler.py:80-90) — same surface, but
-    table-valued and registered in the SQL catalog; use it via
-    ``LATERAL``. Scale: per-row generator, no state, embarrassingly
+    table-valued; apply it per row with ``DataFrame.lateralJoin``
+    (no catalog registration needed). Scale: per-row generator, no state, embarrassingly
     parallel; prefer the pure-SQL `F.sequence`+`slice` form
     (operators/fuzzy_dedup.py::shingle pattern) when the chunk rule
     is expressible — the UDTF exists for rules that aren't.

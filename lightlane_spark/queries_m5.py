@@ -577,18 +577,13 @@ def q_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-window chunking via Python UDTF + LATERAL: 32-word
+    """Context-window chunking via a Python UDTF lateral join: 32-word
     chunks, stride 24 (8-word overlap)."""
     from lightlane_spark.operators.transform import chunk_text_udtf
 
-    docs = read_table(spark, sf_dir, "documents")
-    docs.createOrReplaceTempView("__docs_for_chunking")
-    spark.udtf.register("ll_chunk_text", chunk_text_udtf(32, 24))
-    return spark.sql(
-        """
-        SELECT d.doc_id, c.chunk_idx, c.chunk, c.n_words
-        FROM __docs_for_chunking d, LATERAL ll_chunk_text(d.text) c
-        """
+    docs = read_table(spark, sf_dir, "documents").alias("d")
+    return docs.lateralJoin(chunk_text_udtf(32, 24)(F.col("d.text").outer())).select(
+        "d.doc_id", "chunk_idx", "chunk", "n_words"
     )
 
 
@@ -1053,32 +1048,22 @@ def q_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned as the materialized result. Matches the batch SQL oracle
     exactly — streaming and batch agree on completed windows."""
     import tempfile
-    import uuid
 
     from lightlane_spark.streaming.incremental import (
-        run_to_completion,
+        drain_to_frame,
         stream_from_directory,
         windowed_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="llspark_stream_")
-    land = f"{base}/landing"
-    ev = read_table(spark, sf_dir, "events")
-    ev.write.mode("overwrite").parquet(land)
-    stream = stream_from_directory(spark, land, ev.schema)
-    agg = windowed_counts(
-        stream, ts_col="ts", window="1 day", watermark="2 days", group_cols=["event_type"]
-    )
-    name = "llsq_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_to_completion(q)
-    return spark.table(name).select("window_start", "event_type", "n")
+    with tempfile.TemporaryDirectory(prefix="llspark_stream_") as base:
+        land = f"{base}/landing"
+        ev = read_table(spark, sf_dir, "events")
+        ev.write.mode("overwrite").parquet(land)
+        stream = stream_from_directory(spark, land, ev.schema)
+        agg = windowed_counts(
+            stream, ts_col="ts", window="1 day", watermark="2 days", group_cols=["event_type"]
+        )
+        return drain_to_frame(agg, "complete").select("window_start", "event_type", "n")
 
 
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1103,37 +1088,26 @@ def q_streaming_stateful_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     monotone, so MAX(n) per key at completion equals the batch
     aggregate — the exact SQL oracle."""
     import tempfile
-    import uuid
 
     from lightlane_spark.streaming.incremental import (
-        run_to_completion,
+        drain_to_frame,
         stateful_running_counts,
         stream_from_directory,
     )
 
-    base = tempfile.mkdtemp(prefix="llspark_state_")
-    land = f"{base}/landing"
-    ev = read_table(spark, sf_dir, "events")
-    ev.withColumn("__p", F.col("event_id") % 3).repartitionByRange(3, "__p").drop(
-        "__p"
-    ).write.mode("overwrite").parquet(land)
-    stream = stream_from_directory(spark, land, ev.schema, max_files_per_trigger=1)
-    counts = stateful_running_counts(stream, ["event_type"])
-    name = "llsq_" + uuid.uuid4().hex[:8]
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", f"{base}/ck")
-        .start()
-    )
-    run_to_completion(q)
-    return (
-        spark.table(name)
-        .groupBy("event_type")
-        .agg(F.max("n").alias("n_events"))
-    )
+    with tempfile.TemporaryDirectory(prefix="llspark_state_") as base:
+        land = f"{base}/landing"
+        ev = read_table(spark, sf_dir, "events")
+        ev.withColumn("__p", F.col("event_id") % 3).repartitionByRange(3, "__p").drop(
+            "__p"
+        ).write.mode("overwrite").parquet(land)
+        stream = stream_from_directory(spark, land, ev.schema, max_files_per_trigger=1)
+        counts = stateful_running_counts(stream, ["event_type"])
+        return (
+            drain_to_frame(counts, "update", checkpoint_location=f"{base}/ck")
+            .groupBy("event_type")
+            .agg(F.max("n").alias("n_events"))
+        )
 
 
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3736,34 +3710,24 @@ def q_streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     practice); availableNow here processes one batch, so the horizon
     never evicts mid-run and the oracle is exact."""
     import tempfile
-    import uuid
 
     from lightlane_spark.streaming.incremental import (
         _as_event_time,
-        run_to_completion,
+        drain_to_frame,
         stream_from_directory,
     )
 
-    base = tempfile.mkdtemp(prefix="llspark_dedup_stream_")
-    land = f"{base}/landing"
-    ev = read_table(spark, sf_dir, "events")
-    ev.write.mode("overwrite").parquet(land)
-    ev.write.mode("append").parquet(land)  # duplicate delivery
-    stream = _as_event_time(stream_from_directory(spark, land, ev.schema), "ts")
-    deduped = stream.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
-        ["event_id"]
-    )
-    agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    name = "llsq_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_to_completion(q)
-    return spark.table(name).select("event_type", "n")
+    with tempfile.TemporaryDirectory(prefix="llspark_dedup_stream_") as base:
+        land = f"{base}/landing"
+        ev = read_table(spark, sf_dir, "events")
+        ev.write.mode("overwrite").parquet(land)
+        ev.write.mode("append").parquet(land)  # duplicate delivery
+        stream = _as_event_time(stream_from_directory(spark, land, ev.schema), "ts")
+        deduped = stream.withWatermark("ts", "3650 days").dropDuplicatesWithinWatermark(
+            ["event_id"]
+        )
+        agg = deduped.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+        return drain_to_frame(agg, "complete").select("event_type", "n")
 
 
 QUERIES["streaming_dedup_counts"] = q_streaming_dedup_counts
@@ -3921,54 +3885,44 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale; with availableNow everything lands in one batch, so the
     result equals the batch interval join the oracle computes."""
     import tempfile
-    import uuid
 
     from lightlane_spark.streaming.incremental import (
-        run_to_completion,
+        drain_to_frame,
         stream_from_directory,
         stream_stream_join,
     )
 
     ev = read_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
-    base = tempfile.mkdtemp(prefix="llspark_ssj_")
-    views_land, clicks_land = f"{base}/views", f"{base}/clicks"
-    views_b = ev.filter(F.col("event_type") == "view").select("user_id", "ts")
-    clicks_b = ev.filter(F.col("event_type") == "click").select(
-        "user_id", F.col("ts").alias("c_ts")
-    )
-    views_b.write.mode("overwrite").parquet(views_land)
-    clicks_b.write.mode("overwrite").parquet(clicks_land)
-    views = stream_from_directory(spark, views_land, views_b.schema)
-    clicks = stream_from_directory(spark, clicks_land, clicks_b.schema)
-    joined = stream_stream_join(
-        views,
-        clicks,
-        keys=["user_id"],
-        left_ts="ts",
-        right_ts="c_ts",
-        watermark="3650 days",
-        max_delay="30 minutes",
-    )
-    # stream-stream joins feed APPEND sinks (a downstream streaming agg
-    # would need Complete mode, which joins don't support): materialize
-    # the matched pairs, count from the sink — the lambda-free version
-    # of "join in the stream, aggregate at read time"
-    matched = joined.select(F.col("l.user_id").alias("user_id"))
-    name = "llsq_" + uuid.uuid4().hex[:8]
-    q = (
-        matched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_to_completion(q)
-    return (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_attributed"))
-        .orderBy("user_id")
-    )
+    with tempfile.TemporaryDirectory(prefix="llspark_ssj_") as base:
+        views_land, clicks_land = f"{base}/views", f"{base}/clicks"
+        views_b = ev.filter(F.col("event_type") == "view").select("user_id", "ts")
+        clicks_b = ev.filter(F.col("event_type") == "click").select(
+            "user_id", F.col("ts").alias("c_ts")
+        )
+        views_b.write.mode("overwrite").parquet(views_land)
+        clicks_b.write.mode("overwrite").parquet(clicks_land)
+        views = stream_from_directory(spark, views_land, views_b.schema)
+        clicks = stream_from_directory(spark, clicks_land, clicks_b.schema)
+        joined = stream_stream_join(
+            views,
+            clicks,
+            keys=["user_id"],
+            left_ts="ts",
+            right_ts="c_ts",
+            watermark="3650 days",
+            max_delay="30 minutes",
+        )
+        # stream-stream joins feed APPEND sinks (a downstream streaming agg
+        # would need Complete mode, which joins don't support): materialize
+        # the matched pairs, count from the sink — the lambda-free version
+        # of "join in the stream, aggregate at read time"
+        matched = joined.select(F.col("l.user_id").alias("user_id"))
+        return (
+            drain_to_frame(matched, "append")
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n_attributed"))
+            .orderBy("user_id")
+        )
 
 
 QUERIES["streaming_interval_join"] = q_streaming_interval_join
@@ -4347,37 +4301,27 @@ def q_streaming_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly Spark's epoch-aligned window assignment — so streaming
     and batch must agree on every (window, type) count."""
     import tempfile
-    import uuid
 
     from lightlane_spark.streaming.incremental import (
-        run_to_completion,
+        drain_to_frame,
         stream_from_directory,
         windowed_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="llspark_stream_")
-    land = f"{base}/landing"
-    ev = read_table(spark, sf_dir, "events")
-    ev.write.mode("overwrite").parquet(land)
-    stream = stream_from_directory(spark, land, ev.schema)
-    agg = windowed_counts(
-        stream,
-        ts_col="ts",
-        window="12 hours",
-        slide="6 hours",
-        watermark="1 day",
-        group_cols=["event_type"],
-    )
-    name = "llsq_" + uuid.uuid4().hex[:8]
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    run_to_completion(q)
-    return spark.table(name).select("window_start", "event_type", "n")
+    with tempfile.TemporaryDirectory(prefix="llspark_stream_") as base:
+        land = f"{base}/landing"
+        ev = read_table(spark, sf_dir, "events")
+        ev.write.mode("overwrite").parquet(land)
+        stream = stream_from_directory(spark, land, ev.schema)
+        agg = windowed_counts(
+            stream,
+            ts_col="ts",
+            window="12 hours",
+            slide="6 hours",
+            watermark="1 day",
+            group_cols=["event_type"],
+        )
+        return drain_to_frame(agg, "complete").select("window_start", "event_type", "n")
 
 
 QUERIES["streaming_sliding_counts"] = q_streaming_sliding_counts

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from lightlane_spark.catalog import sql_over
 from lightlane_spark.sources.localrel import local_df
 from lightlane_spark.sources.parquet import read_table
 
@@ -228,16 +229,17 @@ def q_case_expr_bucketing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated-EXISTS shape via spark.sql (parser + semi-join plan)."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("v_orders")
-    read_table(spark, sf_dir, "lineitem").createOrReplaceTempView("v_lineitem")
-    return spark.sql(
+    return sql_over(
+        spark,
         """
-        SELECT o_orderkey, o_totalprice FROM v_orders o
+        SELECT o_orderkey, o_totalprice FROM orders o
         WHERE EXISTS (
-            SELECT 1 FROM v_lineitem l
+            SELECT 1 FROM lineitem l
             WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity > 45
         )
-        """
+        """,
+        orders=read_table(spark, sf_dir, "orders"),
+        lineitem=read_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -1808,18 +1810,19 @@ def q_recursive_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine's own connected-components loop — this query pins the SQL
     surface; depth is bounded by the key width (≤ 8 levels), far
     under the recursion limit."""
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_rec")
-    return spark.sql(
+    return sql_over(
+        spark,
         """
         WITH RECURSIVE anc AS (
             SELECT o_orderkey AS start_key, o_orderkey AS node, 0 AS depth
-            FROM orders_rec WHERE o_orderkey % 997 = 0
+            FROM orders WHERE o_orderkey % 997 = 0
             UNION ALL
             SELECT start_key, node DIV 10 AS node, depth + 1
             FROM anc WHERE node > 0
         )
         SELECT start_key, node, depth FROM anc
-        """
+        """,
+        orders=read_table(spark, sf_dir, "orders"),
     )
 
 
@@ -1830,17 +1833,18 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     correlation as a partitioned window under the hood, so the
     execution cost matches topk_per_group — this query pins the
     LANGUAGE feature and its deterministic tie-break."""
-    read_table(spark, sf_dir, "customer").createOrReplaceTempView("cust_lat")
-    read_table(spark, sf_dir, "orders").createOrReplaceTempView("ord_lat")
-    return spark.sql(
+    return sql_over(
+        spark,
         """
         SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
-        FROM cust_lat c, LATERAL (
-            SELECT o_orderkey, o_totalprice FROM ord_lat o
+        FROM customer c, LATERAL (
+            SELECT o_orderkey, o_totalprice FROM orders o
             WHERE o.o_custkey = c.c_custkey
             ORDER BY o_totalprice DESC, o_orderkey LIMIT 2
         ) t
-        """
+        """,
+        customer=read_table(spark, sf_dir, "customer"),
+        orders=read_table(spark, sf_dir, "orders"),
     )
 
 
@@ -3598,10 +3602,12 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join twice inside the checkpoint build (r8 lineage audit)
     from lightlane_spark.operators.clustering import symmetrize
 
-    # lazy checkpoint (r13): the eager form ran one extra full
-    # materialization job at build time; lazy still truncates lineage
-    # and materializes inside round 1's first action — one job saved,
-    # identical blocks (the clustering.py convention).
+    # eager=False is not lazy under AQE: building the frame runs every
+    # shuffle and broadcast stage below the checkpoint (this query fires
+    # 13 jobs during build); only the final block-storing stage waits
+    # for round 1's first action. Kept: with the checkpoints the final
+    # plan scans customer 0 times, without them 8 (sf0.01, local[4],
+    # both 1.12 s median wall).
     edges = symmetrize(pairs).localCheckpoint(eager=False)
     labels = c.select(
         F.col("c_custkey").alias("node"), F.col("c_custkey").alias("label")

@@ -1,10 +1,14 @@
 """SparkSession bootstrap with scale-conscious defaults.
 
-The engine targets large multi-executor clusters (100 TB inputs); the
-defaults below are the subset that matter in every deployment:
-AQE (runtime re-planning, skew-join splitting, partition coalescing),
-Arrow for any pandas-UDF boundary, and a shuffle-partition count that
-callers override per cluster. Local test runs use ``local[N]``.
+The engine targets large multi-executor clusters (100 TB inputs). The
+defaults below pin only what differs from Spark's own defaults: Arrow
+for ``toPandas`` / ``createDataFrame(pandas)`` (COVERAGE OP-05; pandas
+UDFs and ``mapInPandas`` use Arrow regardless), the UTC session zone,
+scan-split and broadcast sizing, one BLAS thread per Python worker, and
+a shuffle-partition count that callers override per cluster. AQE, its
+partition coalescing and skew-join splitting, runtime Bloom filters and
+parquet pushdown are Spark 4 defaults and are not restated. Local test
+runs use ``local[N]``.
 """
 
 from __future__ import annotations
@@ -17,48 +21,13 @@ from pyspark.sql import SparkSession
 # Defaults chosen for the local[32] test harness; on a real cluster the
 # caller passes explicit conf (shuffle partitions ~ 2-3x total cores).
 _DEFAULT_CONF = MappingProxyType({
-    # Runtime re-planning: coalesces small shuffle partitions, splits
-    # skewed ones, and flips sort-merge joins to broadcast when the
-    # runtime size drops under the threshold. Essential at 100 TB where
-    # static stats are stale or missing.
-    "spark.sql.adaptive.enabled": "true",
-    "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    # Post-shuffle coalescing targets PARALLELISM first, with a 1 MB
-    # partition-size floor (r14, guide §2.2). parallelismFirst=false
-    # (set r13 against tiny-partition scheduling overhead) made AQE
-    # target the 64 MB advisory size instead — which coalesced every
-    # post-shuffle stage under 64 MB to ONE task: at the 10x derived
-    # corpus the bow_similarity Python scorer ran 7.8 s serial on a
-    # 7 MB corpus partition and frequent_pairs' final aggregate 3.9 s
-    # serial on a 55 MB shuffle (profile_stages r14), the exact
-    # anti-scaling shape the low-core probe flags. parallelismFirst=
-    # true sizes partitions at max(bytes/parallelism, 1 MB): KB-sized
-    # shuffles still merge to one task (the r13 overhead concern),
-    # while anything over ~1 MB/core fans back out with the data.
-    # Interleaved A/B, best-of-3: 10x — bow_similarity 11.7→7.2 s,
-    # frequent_pairs 7.6→3.9, set_similarity_join 26.5→17.1; sf0.1 —
-    # kcore_peel 5.0→3.6, neardup_clusters 3.4→2.9, sub-second
-    # queries within ±0.03 s. Scale-adaptive by construction; no env
-    # knob needed.
-    "spark.sql.adaptive.coalescePartitions.parallelismFirst": "true",
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "1MB",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
-    # Arrow batches for every pandas_udf / mapInPandas boundary.
+    # Arrow batches for toPandas() and createDataFrame(pandas) (COVERAGE
+    # OP-05); mapInPandas and pandas UDFs use Arrow regardless of it.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
     # Dimension tables (region/nation/customer at any SF that fits)
     # should broadcast; 32 MB is a safe executor-memory-friendly cap.
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-    # Runtime Bloom-filter join pruning: when a selective join's build
-    # side is small, inject a Bloom filter on the probe side's scan so
-    # most non-matching rows die at the source — the 100 TB fact⋈dim
-    # shape. Default-on in Spark 4; pinned because the engine's join
-    # strategy counts on it.
-    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
-    # Parquet footer-stats pruning + vectorized reader are on by
-    # default in Spark 4 but we pin them: the engine depends on them.
-    "spark.sql.parquet.filterPushdown": "true",
-    "spark.sql.parquet.enableVectorizedReader": "true",
     "spark.ui.enabled": "false",
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
     # Scan-split sizing (guide §6): split size is

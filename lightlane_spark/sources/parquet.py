@@ -49,19 +49,6 @@ def read_table(
     ``connector/dbapi.py:163-165``) as DataFrame ops so Catalyst can
     push them into the parquet scan.
     """
-    # Pin the SESSION time zone at the one entry point every query
-    # shares: Spark's TimestampType is TZ-adjusted — window() buckets
-    # against the session zone's 1970-01-01 origin and collect()
-    # renders instants as session-zone wall clock — so on a non-UTC
-    # host an UNPINNED session (the driver builds a plain
-    # SparkSession; only lightlane's own session.py pins UTC) shifts
-    # every emitted timestamp while the DuckDB oracle's naive
-    # timestamps stay put. Measured: under TZ=America/New_York the
-    # 50-query gate flipped streaming_sliding_counts' window_start by
-    # the UTC offset; with this pin the gate is green under any host
-    # zone. Idempotent, runtime-mutable conf; same value session.py
-    # already sets for bench/tests.
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = table_path(sf_dir, table)
     # Inferred-schema memo, per session: ``spark.read.parquet``
     # re-infers the schema on EVERY call — a driver-side footer read +

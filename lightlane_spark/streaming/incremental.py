@@ -22,6 +22,8 @@ state via watermark delay × event rate.
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql import functions as F
@@ -252,6 +254,33 @@ def run_to_completion(query, timeout_sec: int | None = None) -> None:
     if not query.awaitTermination(timeout_sec):
         query.stop()
         raise TimeoutError(f"streaming query did not finish in {timeout_sec}s")
+
+
+def drain_to_frame(
+    df: DataFrame, output_mode: str, checkpoint_location: str | None = None
+) -> DataFrame:
+    """Run an availableNow stream into a memory sink and return the
+    sink's rows as a batch DataFrame.
+
+    The sink's table is resolved, then its view is dropped through the
+    session catalog: the frame keeps the rows, and the caller's catalog
+    is left as it was."""
+    name = "__llsq_" + uuid.uuid4().hex
+    writer = (
+        df.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
+    )
+    if checkpoint_location is not None:
+        writer = writer.option("checkpointLocation", checkpoint_location)
+    query = writer.start()
+    spark = df.sparkSession
+    try:
+        run_to_completion(query)
+        return spark.table(name)
+    finally:
+        spark._jsparkSession.sessionState().catalog().dropTempView(name)  # noqa: SLF001
 
 
 def drain_until(query, condition, timeout_sec: int | None = None, poll_sec: float = 1.0) -> None:

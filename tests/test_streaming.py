@@ -304,15 +304,18 @@ def test_windowed_counts_emits_timestamp_ntz(spark, sf_dir, tmp_path):
     assert dtypes["window_end"] == "timestamp_ntz"
 
 
-def test_read_table_pins_session_timezone_utc(spark, sf_dir):
-    """read_table is every query's data entry point; it must pin the
-    session zone so window()/date_trunc bucketing is host-independent
-    on the driver's PLAIN (unpinned) SparkSession."""
-    from lightlane_spark.sources.parquet import read_table
+def test_entry_queries_build_under_utc(spark, sf_dir):
+    """The correctness harness runs ``__spark_entry__.queries()`` on a
+    plain session in the host's zone. Each callable pins UTC before it
+    builds, so day windows start at UTC midnight, where the DuckDB
+    oracle's naive timestamps put them."""
+    import __spark_entry__ as m
 
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        read_table(spark, sf_dir, "nation")
+        df = m.queries()["streaming_window_counts"](spark, sf_dir)
         assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+        starts = {r.window_start for r in df.select("window_start").distinct().collect()}
+        assert starts and all(t.hour == 0 and t.minute == 0 for t in starts)
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")

@@ -2,6 +2,8 @@
 """Driver-window rehearsal: run the FIRST N (default 50) queries()
 entries — exactly the slice the round driver's correctness check
 will record — on a plain SparkSession against their DuckDB oracles.
+A query is also bad if it leaves a temporary view or function in the
+session that was not there before it ran.
 
 This is the freeze gate (VERDICT r7 ask #1): after the window is
 generated (tools/rotate_window.py) and before round close, this must
@@ -22,7 +24,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
-from tools.oracle_compare import assert_oracle_dtypes, compare, register_views
+from tools.oracle_compare import (
+    assert_oracle_dtypes,
+    catalog_entries,
+    compare,
+    register_views,
+)
 
 
 def main() -> None:
@@ -44,6 +51,7 @@ def main() -> None:
     assert_oracle_dtypes(con, osql)
     bad = []
     for name in list(qs)[:n]:
+        before = catalog_entries(spark)
         try:
             sdf = qs[name](spark, sf)
             if name not in osql:
@@ -61,6 +69,11 @@ def main() -> None:
             bad.append(name)
             print(f"{name}: FAIL {type(exc).__name__} {str(exc)[:150]}", flush=True)
         finally:
+            left = sorted(catalog_entries(spark) - before)
+            if left:
+                if name not in bad:
+                    bad.append(name)
+                print(f"{name}: LEFTOVER {left}", flush=True)
             # per-call tracked_persist sites otherwise accumulate
             # orphan cache blocks across the window (ADVICE r10);
             # unpersist_all also empties the driver-side registry

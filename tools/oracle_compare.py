@@ -127,6 +127,17 @@ def register_views(con, sf_dir: str) -> None:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
 
+def catalog_entries(spark) -> set[str]:
+    """The session's temporary views and user functions. A library call
+    must leave this set as it found it, so the sweep and the window
+    gate report any query that adds to it."""
+    views = spark.sql("SHOW VIEWS").collect()
+    functions = spark.sql("SHOW USER FUNCTIONS").collect()
+    return {f"view {r.viewName}" for r in views if r.isTemporary} | {
+        f"function {r.function}" for r in functions
+    }
+
+
 # ALLOWLIST of DuckDB output types whose Arrow-export Python class is
 # verified identical to the class Spark's collect() produces for the
 # matching Spark type. Everything else fails assert_oracle_dtypes

@@ -1,6 +1,8 @@
 """Driver-mimic correctness sweep: run EVERY queries() entry on a
 PLAIN SparkSession (no lightlane session tuning) and compare against
 its oracle_sql() via DuckDB — exactly what the round driver does.
+A query is also bad if it leaves a temporary view or function in the
+session that was not there before it ran.
 
 Run from anywhere: python tools/verify_vanilla.py [query ...]
 With query names, only those queries run (a per-change gate in
@@ -20,7 +22,12 @@ import duckdb
 
 # canonicalization + view setup shared with tools/check_window.py —
 # ONE definition so the freeze gate and this sweep can never disagree
-from tools.oracle_compare import assert_oracle_dtypes, compare, register_views
+from tools.oracle_compare import (
+    assert_oracle_dtypes,
+    catalog_entries,
+    compare,
+    register_views,
+)
 
 sf = os.environ.get('SPARK_GRAFT_SWEEP_SF_DIR', '/root/testdata/sf0.01')
 con = duckdb.connect()
@@ -35,6 +42,7 @@ bad = [n for n in names if n not in qs]
 for n in bad:
     print('UNKNOWN', n, flush=True)
 for name in (n for n in names if n in qs):
+    before = catalog_entries(spark)
     try:
         sdf = qs[name](spark, sf)
         if name not in osql:
@@ -48,6 +56,11 @@ for name in (n for n in names if n in qs):
         bad.append(name)
         print('FAIL', name, type(e).__name__, str(e)[:150], flush=True)
     finally:
+        left = sorted(catalog_entries(spark) - before)
+        if left:
+            if name not in bad:
+                bad.append(name)
+            print('LEFTOVER', name, left, flush=True)
         # tracked_persist sites (bm25/tfidf postings, KM day table,
         # ...) pin a new cache entry per call; 251 queries in one
         # session otherwise accumulate orphan blocks until late
