@@ -319,10 +319,11 @@ def main() -> None:
             # best-of-3 exists to capture; ACROSS queries, leftover
             # cache blocks pile up until late queries pay eviction +
             # GC for early queries' orphans (measured 2-3x noise on
-            # the iterative chains). unpersist_all first: it also
-            # empties the driver-side tracked-persist registry, which
-            # clearCache alone leaves growing a strong DataFrame ref
-            # per persist site per query (review finding r11).
+            # the iterative chains). unpersist_all first: it releases
+            # every library persist and every local checkpoint's
+            # blocks, and empties the driver-side registry, which
+            # clearCache alone leaves growing a strong ref per site
+            # per query (review finding r11).
             unpersist_all()
             spark.catalog.clearCache()
 

@@ -23,17 +23,37 @@ CacheManager keys cached data by canonicalized plan, not by the
 Python wrapper, so a garbage-collected wrapper would orphan the cache
 entry with no handle left to unpersist it.
 
+**Checkpoints.** Every iterative operator cuts its lineage through
+:func:`tracked_checkpoint`, the one place in the package that calls
+``checkpoint`` or ``localCheckpoint``. Both are lazy (``eager=False``):
+under AQE, building the frame still runs every shuffle and broadcast
+stage below the cut; only the final stage waits for the next action.
+
+- when the SparkContext has a checkpoint directory
+  (``sc.setCheckpointDir``, a deployment setting), the cut is a
+  reliable ``checkpoint``: its files survive executor loss, at the cost
+  of recomputing the frame's last stage once for the file write. Spark
+  reclaims the files (``spark.cleaner.referenceTracking.cleanCheckpoints``);
+  the registry does not track them;
+- otherwise it is a ``localCheckpoint``, whose blocks live in executor
+  storage. Its RDD is registered like a persist, so
+  :func:`unpersist_all` and the enclosing :func:`cache_scope` release
+  the blocks. Release the frame only after its last action: a released
+  persist recomputes, but a frame built over a released (or lost)
+  local checkpoint fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+
 **Session memos.** :func:`session_memo` caches values that are valid for
 one SparkContext — parsed expression Columns, inferred schemas, the
 shipped-package flag. Entries are keyed weakly by the context object,
 so a stopped and dropped context takes its entries with it.
 
 Thread contract: cache scopes are per-thread. A scope releases only
-the frames persisted on its own thread while it was the innermost open
-scope there, so pipelines on different threads sharing one session
-never release each other's frames. :func:`unpersist_all` is
-process-wide: it releases every tracked frame, whichever thread
-persisted it. The registry and the memos are changed under one lock.
+the frames persisted and local checkpoints cut on its own thread while
+it was the innermost open scope there, so pipelines on different
+threads sharing one session never release each other's frames.
+:func:`unpersist_all` is process-wide: it releases every tracked entry,
+whichever thread registered it. The registry and the memos are changed
+under one lock.
 """
 
 from __future__ import annotations
@@ -46,7 +66,9 @@ from typing import Any, Callable, Iterator
 from pyspark.sql import DataFrame
 
 _LOCK = threading.RLock()
-_TRACKED: list[DataFrame] = []
+# persisted frames and local checkpoints' JVM RDDs: both release via
+# ``.unpersist(blocking)``
+_TRACKED: list[Any] = []
 _SCOPES = threading.local()  # .stack: this thread's open scopes, innermost last
 _MEMOS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
@@ -64,20 +86,35 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     one sketch do not grow the registry).
     """
     out = df.persist()
-    with _LOCK:
-        if not any(t is out for t in _TRACKED):
-            _TRACKED.append(out)
-            stack = getattr(_SCOPES, "stack", None)
-            if stack:
-                stack[-1].append(out)
+    _track(out)
     return out
 
 
-def _unpersist(frames: list[DataFrame], blocking: bool) -> int:
+def tracked_checkpoint(df: DataFrame) -> DataFrame:
+    """``df`` with its lineage cut: a reliable checkpoint when the
+    context has a checkpoint directory, else a local checkpoint
+    registered for release (see "Checkpoints" above)."""
+    if df.sparkSession.sparkContext.getCheckpointDir():
+        return df.checkpoint(eager=False)
+    out = df.localCheckpoint(eager=False)
+    _track(out._jdf.logicalPlan().rdd())
+    return out
+
+
+def _track(entry: Any) -> None:
+    with _LOCK:
+        if not any(t is entry for t in _TRACKED):
+            _TRACKED.append(entry)
+            stack = getattr(_SCOPES, "stack", None)
+            if stack:
+                stack[-1].append(entry)
+
+
+def _unpersist(entries: list[Any], blocking: bool) -> int:
     released = 0
-    for df in reversed(frames):
+    for entry in reversed(entries):
         try:
-            df.unpersist(blocking)
+            entry.unpersist(blocking)
             released += 1
         except Exception:  # noqa: BLE001 — session may already be stopped
             pass
@@ -85,10 +122,11 @@ def _unpersist(frames: list[DataFrame], blocking: bool) -> int:
 
 
 def unpersist_all(blocking: bool = False) -> int:
-    """Unpersist every frame the library has persisted, on any thread;
-    returns the number released. Caller-owned persists are untouched.
-    Idempotent — frames already unpersisted (or whose session is gone)
-    are skipped silently."""
+    """Unpersist every frame the library has persisted and every local
+    checkpoint it has cut, on any thread; returns the number released.
+    Caller-owned persists and checkpoints are untouched. Idempotent —
+    entries already released (or whose session is gone) are skipped
+    silently."""
     with _LOCK:
         frames = _TRACKED[:]
         del _TRACKED[:]
@@ -97,11 +135,11 @@ def unpersist_all(blocking: bool = False) -> int:
 
 @contextmanager
 def cache_scope() -> Iterator[None]:
-    """Scope a unit of composition: frames persisted by library code on
-    this thread inside the ``with`` block are unpersisted on exit
-    (success or error). Scopes nest in the ordinary LIFO ``with``
-    discipline; an inner scope releases only the frames persisted while
-    it was open.
+    """Scope a unit of composition: frames persisted and local
+    checkpoints cut by library code on this thread inside the ``with``
+    block are released on exit (success or error). Scopes nest in the
+    ordinary LIFO ``with`` discipline; an inner scope releases only the
+    entries registered while it was open.
 
     >>> with cache_scope():
     ...     dedup_minhash(docs).count()   # persists shingles/buckets
@@ -109,7 +147,7 @@ def cache_scope() -> Iterator[None]:
     """
     if not hasattr(_SCOPES, "stack"):
         _SCOPES.stack = []
-    mine: list[DataFrame] = []
+    mine: list[Any] = []
     _SCOPES.stack.append(mine)
     try:
         yield

@@ -16,9 +16,9 @@ whose round count is the graph diameter.
 Scale notes (100 TB corpus => billions of pairs):
   - All state is the edge list itself — no driver-side structures;
     the per-round actions are a count + hash checksum (two scalars).
-  - ``localCheckpoint`` truncates lineage each round so the plan does
-    not grow with iteration count (and AQE re-plans each round from
-    the materialized size).
+  - Each round cuts lineage with ``cache.tracked_checkpoint`` so the
+    plan does not grow with iteration count (policy and lifecycle:
+    ``lightlane_spark.cache``, "Checkpoints").
   - Near-dup graphs are overwhelmingly tiny cliques + isolated
     nodes; rounds-to-converge is 2-3 in practice. The iteration cap
     is a safety rail, not a tuning knob.
@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lightlane_spark.cache import tracked_persist
+from lightlane_spark.cache import tracked_checkpoint, tracked_persist
 
 
 def _canonical_edges(edges: DataFrame, id_a: str, id_b: str) -> DataFrame:
@@ -172,12 +172,10 @@ def connected_components(
       distributed path.
     - larger: alternating large-star/small-star contraction, one
       large+small round per iteration, converging when the edge set's
-      (count, checksum) fingerprint is stable. Each round materializes
-      via ``localCheckpoint`` — required for any iterative DataFrame
-      algorithm: it cuts the exponentially-growing lineage and gives
-      AQE true sizes to re-plan from. At 100 TB (billions of pairs)
-      this is the only regime that runs; driver state stays two
-      scalars per round.
+      (count, checksum) fingerprint is stable. Each round's edge set
+      is checkpointed (``lightlane_spark.cache``, "Checkpoints"). At
+      100 TB (billions of pairs) this is the only regime that runs;
+      driver state stays two scalars per round.
 
     ``assume_canonical=True`` skips the canonicalization shuffle for
     edge lists already distinct with id_a < id_b (what every pair
@@ -211,14 +209,10 @@ def connected_components(
             return local_df(
                 edges.sparkSession, pairs, "id bigint, component bigint"
             )
-    # eager=False is not lazy under AQE: building each round's frame
-    # still runs every shuffle and broadcast stage below the checkpoint;
-    # only the final block-storing stage waits for the fingerprint
-    # action right below (lineage is truncated either way).
-    e = canon.localCheckpoint(eager=False)
-    prev = None
+    e, prev = canon, None
     for _ in range(max_rounds):
-        e = _small_star(_large_star(e)).distinct().localCheckpoint(eager=False)
+        # kept: cold A/B sf0.1 local[4]: connected_components(driver_edge_cap=None) on 4.51 s, off 4.86 s
+        e = _small_star(_large_star(e)).distinct().transform(tracked_checkpoint)
         fp = e.agg(
             F.count("*").alias("n"),
             F.coalesce(F.sum(F.hash("u", "v").cast("long")), F.lit(0)).alias("s"),
@@ -292,9 +286,10 @@ def pagerank_integer(
     order differs).
 
     Scale: one groupBy per iteration over the edge list (same shape
-    as connected_components rounds); ``localCheckpoint`` truncates
-    lineage. Floor rounding loses < |V|·iterations micro-units of
-    probability mass in total — irrelevant for ranking at unit=1e12.
+    as connected_components rounds), checkpointed per iteration
+    (``lightlane_spark.cache``, "Checkpoints"). Floor rounding loses
+    < |V|·iterations micro-units of probability mass in total —
+    irrelevant for ranking at unit=1e12.
     """
     sym = (
         symmetrize(
@@ -303,7 +298,8 @@ def pagerank_integer(
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
+        # kept: cold A/B sf0.1 local[4]: pagerank_neardup on 3.58 s, off 9.07 s
+        .transform(tracked_checkpoint)
     )
     deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = deg.select(F.col("src").alias("id"), "deg")
@@ -319,7 +315,8 @@ def pagerank_integer(
                 f"CAST({100 - damping_pct} AS BIGINT) * {unit} DIV (100 * __n)"
             ).alias("__base"),
         )
-        .localCheckpoint()
+        # kept (iteration 1 reads it twice); cold A/B sf0.1 local[4]: pagerank_neardup on 3.58 s, off 3.38 s
+        .transform(tracked_checkpoint)
     )
     for _ in range(iterations):
         contrib = (
@@ -342,7 +339,8 @@ def pagerank_integer(
                     "rank"
                 ),
             )
-            .localCheckpoint()
+            # kept: cold A/B sf0.1 local[4]: pagerank_neardup on 3.58 s, off 4.07 s
+            .transform(tracked_checkpoint)
         )
     return ranks.select("id", "rank")
 
@@ -369,14 +367,15 @@ def triangle_count(
     id-as-arrival-order graphs produced by the dedup pipeline.
 
     The canonical edge set is read three times (both wedge sides +
-    the closure probe) — ``localCheckpoint`` materializes it once so
-    an expensive upstream derivation (MinHash→verify) never re-runs
-    per consumer.
+    the closure probe); it is checkpointed once
+    (``lightlane_spark.cache``, "Checkpoints") so an expensive
+    upstream derivation (MinHash→verify) never re-runs per consumer.
     """
     e = (
         edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .distinct()
-        .localCheckpoint(eager=False)
+        # kept: cold A/B sf0.1 local[4]: triangle_count on 2.35 s, off 4.14 s
+        .transform(tracked_checkpoint)
     )
     wedges = e.join(
         e.select(F.col("a").alias("__m"), F.col("b").alias("c")),
@@ -428,20 +427,15 @@ def kcore_peel(
     rows in one window partition — the same skew profile as the
     degree groupBy it replaces.
 
-    ``localCheckpoint`` truncates lineage each round (same reason as
-    ``connected_components``: an iterative DataFrame loop otherwise
-    doubles its plan every round). The INITIAL long relation is
-    checkpointed too: when the edges arrive as the tail of a
-    MinHash→verify pipeline, an unmaterialized input would re-run
-    that whole upstream chain per consumer — the edge list is tiny
-    relative to its derivation, so materializing it once is the
-    composition win (measured 4.0 → ~2.4 s on the sf0.1 near-dup
-    graph, r6). Returns surviving ``(id, deg)`` — degree measured in
-    the peeled graph."""
+    Each round is checkpointed (``lightlane_spark.cache``,
+    "Checkpoints"), and so is the INITIAL long relation, so a
+    MinHash→verify upstream chain runs once, not per consumer. Returns
+    surviving ``(id, deg)`` — degree measured in the peeled graph."""
     e = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct()
+    # kept: cold A/B sf0.1 local[4]: kcore_peel on 2.94 s, off 3.30 s
     long = e.select(
         "a", "b", F.explode(F.array("a", "b")).alias("id")
-    ).localCheckpoint(eager=False)
+    ).transform(tracked_checkpoint)
     for _ in range(rounds):
         long = (
             long.withColumn(
@@ -452,10 +446,8 @@ def kcore_peel(
             )
             .filter(F.col("mindeg") >= k)
             .drop("deg", "mindeg")
-            # eager=False, as in connected_components: the stages below
-            # run while the frame is built; only the block-storing stage
-            # waits for the next action
-            .localCheckpoint(eager=False)
+            # kept: cold A/B sf0.1 local[4]: kcore_peel on 2.94 s, off 3.45 s
+            .transform(tracked_checkpoint)
         )
     return long.groupBy("id").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")

@@ -611,9 +611,9 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph family — clusters, dedup, leakage-safe split, PageRank,
     triangles, k-core. One definition (MinHash→LSH→Jaccard-verify at
     0.7 over the dup fixture) so every family member analyzes the
-    IDENTICAL graph, and the iterative consumers' input-materialization
-    (localCheckpoint in clustering.py) amortizes the expensive
-    derivation instead of re-running it per read."""
+    IDENTICAL graph, and the iterative consumers' input checkpoint
+    (``cache.tracked_checkpoint`` in clustering.py) amortizes the
+    expensive derivation instead of re-running it per read."""
     return dedup_minhash(_docs_with_dups(spark, sf_dir), threshold=0.7).select(
         "id_a", "id_b"
     )

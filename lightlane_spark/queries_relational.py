@@ -22,7 +22,7 @@ from lightlane_spark.catalog import sql_over
 from lightlane_spark.sources.localrel import local_df
 from lightlane_spark.sources.parquet import read_table
 
-from lightlane_spark.cache import tracked_persist
+from lightlane_spark.cache import tracked_checkpoint, tracked_persist
 
 
 def _dec_sum(col, alias: str, scale: int = 2):
@@ -3596,19 +3596,11 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(b, (F.col("vk") == F.col("v")) & (F.col("c_nationkey") == F.col("bn")))
         .select(F.col("c_custkey").alias("u"), "v")
     )
-    # materialize the edge relation ONCE — every round joins it;
-    # without the checkpoint each round re-derives the graph. In-row
-    # symmetrize: the pairs ∪ pairs.swap form ran the customer
-    # self-join twice inside the checkpoint build (r8 lineage audit)
+    # in-row symmetrize: pairs ∪ pairs.swap runs the customer self-join twice
     from lightlane_spark.operators.clustering import symmetrize
 
-    # eager=False is not lazy under AQE: building the frame runs every
-    # shuffle and broadcast stage below the checkpoint (this query fires
-    # 13 jobs during build); only the final block-storing stage waits
-    # for round 1's first action. Kept: with the checkpoints the final
-    # plan scans customer 0 times, without them 8 (sf0.01, local[4],
-    # both 1.12 s median wall).
-    edges = symmetrize(pairs).localCheckpoint(eager=False)
+    # kept: cold A/B sf0.1 local[4]: label_propagation on 0.83 s, off 0.90 s
+    edges = symmetrize(pairs).transform(tracked_checkpoint)
     labels = c.select(
         F.col("c_custkey").alias("node"), F.col("c_custkey").alias("label")
     )
@@ -3628,16 +3620,13 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick = cnt.groupBy("node").agg(
             F.expr("min_by(label, struct(-c, label))").alias("new_label")
         )
-        # per-round checkpoint (clustering.py's contract): the label
-        # frame feeds BOTH next-round consumers (nb and the update
-        # join), so un-pinned lineage doubles per round — 2^rounds
-        # corpus scans (r7 plan audit: 4 scans at 2 rounds)
         labels = (
             labels.join(pick, "node", "left")
             .select(
                 "node", F.coalesce("new_label", "label").alias("label")
             )
-            .localCheckpoint(eager=False)
+            # kept: cold A/B sf0.1 local[4]: label_propagation on 0.83 s, off 0.85 s
+            .transform(tracked_checkpoint)
         )
     return (
         labels.groupBy("label")

@@ -1,9 +1,11 @@
 """Cache-composition contract (VERDICT r5 ask #6 / r6 ask #5): every
 persist inside the library registers through
-``lightlane_spark.cache.tracked_persist``, so a composing session can
-release library-held cache deterministically — ``cache_scope()`` per
-unit of work, or ``unpersist_all()`` at any point — instead of relying
-on LRU eviction to eventually reclaim corpus-sized frames.
+``lightlane_spark.cache.tracked_persist``, and every lineage cut goes
+through ``lightlane_spark.cache.tracked_checkpoint``, so a composing
+session can release library-held blocks deterministically —
+``cache_scope()`` per unit of work, or ``unpersist_all()`` at any
+point — instead of relying on LRU eviction or GC to eventually reclaim
+them. With a checkpoint directory set, the cuts survive block loss.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from lightlane_spark import cache
+from lightlane_spark.operators import clustering
 from lightlane_spark.operators.fuzzy_dedup import dedup_minhash
 
 
@@ -23,6 +26,10 @@ def _n_cached_rdds(spark) -> int:
     counting a persisted frame the number is > 0 iff cached data is
     actually being held."""
     return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
+def _persistent_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
 
 def _cache_manager_empty(spark) -> bool:
@@ -39,9 +46,10 @@ def test_cache_scope_releases_library_persists(spark, docs):
     spark.catalog.clearCache()
     cache.unpersist_all()
     assert _cache_manager_empty(spark)
-    # baseline, not zero: earlier tests' localCheckpoint RDDs linger
-    # (by design — ContextCleaner reclaims them); the contract is that
-    # THIS scope adds nothing that survives it
+    # baseline, not zero: test-owned local checkpoints
+    # (test_streaming's foreachBatch state) linger until ContextCleaner
+    # reclaims them; the contract is that THIS scope adds nothing that
+    # survives it
     baseline = _n_cached_rdds(spark)
     with cache.cache_scope():
         dedup_minhash(docs).count()  # persists shingles/buckets
@@ -113,12 +121,140 @@ def test_fresh_queries_run_leaves_no_cache_under_scope(spark, sf_dir):
     qs = m.queries()
     spark.catalog.clearCache()
     cache.unpersist_all()
-    baseline = _n_cached_rdds(spark)  # earlier tests' localCheckpoints
+    baseline = _n_cached_rdds(spark)  # test-owned local checkpoints linger
     with cache.cache_scope():
         for name in ("minhash_lsh_pairs", "bm25_topk"):
             qs[name](spark, sf_dir).count()
     assert _cache_manager_empty(spark)
     assert _n_cached_rdds(spark) <= baseline
+
+
+def _path_graph(spark, n: int = 64):
+    """A path over ``n`` nodes whose ids are scrambled along it, so star
+    contraction needs several rounds."""
+    ids = [(i * 37) % n for i in range(n)]
+    return spark.createDataFrame(
+        list(zip(ids, ids[1:])), "id_a: bigint, id_b: bigint"
+    )
+
+
+def _dense_graph(spark):
+    """A 5-clique with a 3-edge tail: the 3-core peels the tail."""
+    edges = [(a, b) for a in range(5) for b in range(a + 1, 5)]
+    edges += [(4, 5), (5, 6), (6, 7)]
+    return spark.createDataFrame(edges, "id_a: bigint, id_b: bigint")
+
+
+def _cc_distributed(spark, sf_dir=None):
+    return clustering.connected_components(_path_graph(spark), driver_edge_cap=None)
+
+
+def _kcore(spark, sf_dir=None):
+    return clustering.kcore_peel(_dense_graph(spark), k=3, rounds=3)
+
+
+@pytest.mark.parametrize(
+    "name, release",
+    [
+        (name, "unpersist_all")
+        for name in (
+            "label_propagation",
+            "pagerank_neardup",
+            "kcore_peel",
+            "bpe_train",
+            "triangle_count",
+            "connected_components",
+        )
+    ]
+    + [("label_propagation", "cache_scope")],
+)
+def test_checkpoints_released_with_persists(spark, sf_dir, name, release):
+    """Every local checkpoint a call cuts is released with the library's
+    persists: afterwards the context holds no persistent RDD it did not
+    hold before the call (garbage collection only removes entries)."""
+    import __spark_entry__ as m
+
+    call = _cc_distributed if name == "connected_components" else m.queries()[name]
+    spark.catalog.clearCache()
+    cache.unpersist_all()
+    before = _persistent_rdd_ids(spark)
+    if release == "cache_scope":
+        with cache.cache_scope():
+            call(spark, sf_dir).collect()
+    else:
+        call(spark, sf_dir).collect()
+        cache.unpersist_all()
+    assert _persistent_rdd_ids(spark) <= before
+
+
+def _drop_all_blocks(spark) -> None:
+    """Unpersist every RDD the context holds, as an executor loss would."""
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist(True)
+
+
+def _cc_losing_blocks_mid_iteration(spark, monkeypatch):
+    """Drop every block before the second round's cut, when round 1's
+    cut has materialized (its fingerprint action ran)."""
+    calls = []
+
+    def cut(df):
+        calls.append(df)
+        if len(calls) == 2:
+            _drop_all_blocks(spark)
+        return cache.tracked_checkpoint(df)
+
+    monkeypatch.setattr(clustering, "tracked_checkpoint", cut)
+    rows = _cc_distributed(spark).collect()
+    assert len(calls) >= 3
+    return rows
+
+
+def _kcore_losing_blocks_after_first_action(spark, monkeypatch):
+    """kcore_peel runs no action between rounds, so only its last cut
+    materializes; Spark recomputes the others from lineage whatever is
+    lost. Drop every block after the first action, then read the
+    result again through a new plan."""
+    out = _kcore(spark)
+    out.collect()
+    _drop_all_blocks(spark)
+    return out.select("*").collect()
+
+
+FAULTS = {
+    "connected_components": (_cc_distributed, _cc_losing_blocks_mid_iteration),
+    "kcore_peel": (_kcore, _kcore_losing_blocks_after_first_action),
+}
+
+
+@pytest.mark.parametrize("name", sorted(FAULTS))
+def test_checkpoint_dir_survives_block_loss(spark, tmp_path, monkeypatch, name):
+    """With a checkpoint directory the lineage cuts are reliable: losing
+    every block leaves the answer unchanged."""
+    plain, faulty = FAULTS[name]
+    want = sorted(plain(spark).collect())
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    sc.setCheckpointDir(str(tmp_path))
+    try:
+        got = sorted(faulty(spark, monkeypatch))
+    finally:
+        # back to no directory: later tests take the local path
+        sc._jsc.sc().setCheckpointDir(None)
+        cache.unpersist_all()
+    assert got == want
+
+
+@pytest.mark.parametrize("name", sorted(FAULTS))
+def test_local_checkpoint_block_loss_fails(spark, monkeypatch, name):
+    """Without a checkpoint directory the same loss fails the query:
+    the injection bites."""
+    assert spark.sparkContext.getCheckpointDir() is None
+    try:
+        with pytest.raises(Exception, match="CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND"):
+            FAULTS[name][1](spark, monkeypatch)
+    finally:
+        cache.unpersist_all()
 
 
 def test_run_job_leaves_registry_unchanged(spark, sf_dir, tmp_path):

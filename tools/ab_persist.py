@@ -1,22 +1,29 @@
 #!/usr/bin/env python
-"""Within-session persist A/B (VERDICT r5 ask #1): time each target
-query best-of-3 with its persist() sites live vs no-op'd, in ONE
-session, clearing the cache between arms — the only comparison the
-box's load drift can't fake.
+"""Within-session persist and checkpoint A/B (VERDICT r5 ask #1): time
+each target query best-of-3 with its persist and checkpoint sites live
+vs no-op'd, in ONE session, releasing library cache and checkpoints
+between reps — the only comparison the box's load drift can't fake.
 
-Site-selective: DataFrame.persist is wrapped so a run can disable
-persists per call-site (``file.py:line``) or globally. Usage:
+Site-selective: DataFrame.persist and the package's one checkpoint
+helper (``cache.tracked_checkpoint``) are wrapped so a run can disable
+sites per call-site (``file.py:line``) or globally; a disabled
+checkpoint site returns its frame uncut. Usage:
 
     python tools/ab_persist.py q1 q2 ...          # on vs all-off
     python tools/ab_persist.py --sites q1 ...     # + one-site-off arms
+
+A name of the form ``module:function`` times that callable
+``(spark, sf_dir) -> DataFrame`` instead of a ``queries()`` entry.
 
 Prints a table; exits 0 always (measurement tool, not a gate).
 """
 
 from __future__ import annotations
 
+import importlib
 import inspect
 import os
+import pkgutil
 import sys
 import time
 
@@ -27,11 +34,14 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 # the base silently misses every call
 from pyspark.sql.classic.dataframe import DataFrame
 
+import lightlane_spark
+from lightlane_spark import cache
 from lightlane_spark.session import get_spark
 
 _DISABLED: set[str] = set()  # call sites, or "*" for all
 _SEEN: set[str] = set()  # sites observed during the current query
 _ORIG_PERSIST = DataFrame.persist
+_ORIG_CHECKPOINT = cache.tracked_checkpoint
 
 
 def _site_of_caller() -> str:
@@ -49,12 +59,39 @@ def _site_of_caller() -> str:
     return f"{os.path.basename(fr.f_code.co_filename)}:{fr.f_lineno}"
 
 
-def _patched_persist(self, *args, **kwargs):
-    site = _site_of_caller()
+def _switched(site: str) -> bool:
+    """Records ``site``; True when its arm has it switched off."""
     _SEEN.add(site)
-    if "*" in _DISABLED or site in _DISABLED:
+    return "*" in _DISABLED or site in _DISABLED
+
+
+def _patched_persist(self, *args, **kwargs):
+    if _switched(_site_of_caller()):
         return self
     return _ORIG_PERSIST(self, *args, **kwargs)
+
+
+def _patched_checkpoint(df):
+    if _switched(_site_of_caller()):
+        return df
+    return _ORIG_CHECKPOINT(df)
+
+
+def _install() -> None:
+    """Wrap persist, and re-bind the checkpoint helper in every package
+    module that imported it by name."""
+    DataFrame.persist = _patched_persist
+    for info in pkgutil.walk_packages(lightlane_spark.__path__, "lightlane_spark."):
+        mod = importlib.import_module(info.name)
+        if getattr(mod, "tracked_checkpoint", None) is _ORIG_CHECKPOINT:
+            mod.tracked_checkpoint = _patched_checkpoint
+
+
+def _resolve(name: str, qs: dict):
+    if ":" not in name:
+        return qs[name]
+    mod, attr = name.split(":")
+    return getattr(importlib.import_module(mod), attr)
 
 
 def main() -> None:
@@ -69,7 +106,7 @@ def main() -> None:
     import __spark_entry__ as m
 
     qs = m.queries()
-    DataFrame.persist = _patched_persist
+    _install()
     print(f"loadavg at start: {os.getloadavg()}")
 
     def run(name: str, disabled: set[str]) -> tuple[float, float]:
@@ -81,7 +118,7 @@ def main() -> None:
             # noop sink, not count(): count() prunes every output
             # column, so the persist-OFF arm would skip projections
             # the persist-ON arm materializes into the cache
-            qs[name](spark, os.environ.get(
+            _resolve(name, qs)(spark, os.environ.get(
                 "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
             )).write.format("noop").mode("overwrite").save()
             times.append(time.perf_counter() - t0)
@@ -89,7 +126,9 @@ def main() -> None:
             # plan in reps 2-3 of the persist-ON arm would hit rep 1's
             # cached data while the OFF arm never caches — clearing
             # per rep keeps every rep cold so the arms are comparable
-            # (r6 ADVICE).
+            # (r6 ADVICE). unpersist_all also frees the local
+            # checkpoints' blocks.
+            cache.unpersist_all()
             spark.catalog.clearCache()
         return min(times), times[0]
 

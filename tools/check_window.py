@@ -3,7 +3,8 @@
 entries — exactly the slice the round driver's correctness check
 will record — on a plain SparkSession against their DuckDB oracles.
 A query is also bad if it leaves a temporary view or function in the
-session that was not there before it ran.
+session that was not there before it ran, or holds more persistent RDDs
+after unpersist_all() and clearCache() than before it ran.
 
 This is the freeze gate (VERDICT r7 ask #1): after the window is
 generated (tools/rotate_window.py) and before round close, this must
@@ -24,10 +25,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession
 
+from lightlane_spark.cache import unpersist_all
 from tools.oracle_compare import (
     assert_oracle_dtypes,
     catalog_entries,
     compare,
+    persistent_rdds,
     register_views,
 )
 
@@ -51,7 +54,7 @@ def main() -> None:
     assert_oracle_dtypes(con, osql)
     bad = []
     for name in list(qs)[:n]:
-        before = catalog_entries(spark)
+        before, rdds = catalog_entries(spark), persistent_rdds(spark)
         try:
             sdf = qs[name](spark, sf)
             if name not in osql:
@@ -70,18 +73,19 @@ def main() -> None:
             print(f"{name}: FAIL {type(exc).__name__} {str(exc)[:150]}", flush=True)
         finally:
             left = sorted(catalog_entries(spark) - before)
+            # per-call tracked_persist and tracked_checkpoint sites
+            # otherwise accumulate orphan blocks across the window
+            # (ADVICE r10); unpersist_all also empties the driver-side
+            # registry that clearCache leaves growing (review finding r11)
+            unpersist_all()
+            spark.catalog.clearCache()
+            held = persistent_rdds(spark) - rdds
+            if held > 0:
+                left.append(f"{held} persistent RDDs")
             if left:
                 if name not in bad:
                     bad.append(name)
                 print(f"{name}: LEFTOVER {left}", flush=True)
-            # per-call tracked_persist sites otherwise accumulate
-            # orphan cache blocks across the window (ADVICE r10);
-            # unpersist_all also empties the driver-side registry
-            # that clearCache leaves growing (review finding r11)
-            from lightlane_spark.cache import unpersist_all
-
-            unpersist_all()
-            spark.catalog.clearCache()
     print("WINDOW DONE bad =", bad, flush=True)
     sys.exit(1 if bad else 0)
 

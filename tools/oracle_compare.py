@@ -138,6 +138,14 @@ def catalog_entries(spark) -> set[str]:
     }
 
 
+def persistent_rdds(spark) -> int:
+    """How many RDDs the context holds persisted: SQL cache entries and
+    local checkpoints. After ``unpersist_all()`` and ``clearCache()`` a
+    query must leave no more than it found; garbage collection only
+    lowers the count, so an increase is a real leftover."""
+    return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+
 # ALLOWLIST of DuckDB output types whose Arrow-export Python class is
 # verified identical to the class Spark's collect() produces for the
 # matching Spark type. Everything else fails assert_oracle_dtypes

@@ -2,7 +2,8 @@
 PLAIN SparkSession (no lightlane session tuning) and compare against
 its oracle_sql() via DuckDB — exactly what the round driver does.
 A query is also bad if it leaves a temporary view or function in the
-session that was not there before it ran.
+session that was not there before it ran, or holds more persistent RDDs
+after unpersist_all() and clearCache() than before it ran.
 
 Run from anywhere: python tools/verify_vanilla.py [query ...]
 With query names, only those queries run (a per-change gate in
@@ -26,8 +27,10 @@ from tools.oracle_compare import (
     assert_oracle_dtypes,
     catalog_entries,
     compare,
+    persistent_rdds,
     register_views,
 )
+from lightlane_spark.cache import unpersist_all
 
 sf = os.environ.get('SPARK_GRAFT_SWEEP_SF_DIR', '/root/testdata/sf0.01')
 con = duckdb.connect()
@@ -42,7 +45,7 @@ bad = [n for n in names if n not in qs]
 for n in bad:
     print('UNKNOWN', n, flush=True)
 for name in (n for n in names if n in qs):
-    before = catalog_entries(spark)
+    before, rdds = catalog_entries(spark), persistent_rdds(spark)
     try:
         sdf = qs[name](spark, sf)
         if name not in osql:
@@ -57,22 +60,23 @@ for name in (n for n in names if n in qs):
         print('FAIL', name, type(e).__name__, str(e)[:150], flush=True)
     finally:
         left = sorted(catalog_entries(spark) - before)
+        # tracked_persist and tracked_checkpoint sites (bm25/tfidf
+        # postings, KM day table, graph rounds, ...) pin new blocks per
+        # call; 251 queries in one session otherwise accumulate orphan
+        # blocks until late queries pay eviction + GC (ADVICE r10).
+        # unpersist_all is the library's own lifecycle API — it also
+        # empties the driver-side _TRACKED registry, which clearCache
+        # alone leaves growing (review finding r11); clearCache then
+        # catches anything cached outside tracked_persist.
+        unpersist_all()
+        spark.catalog.clearCache()
+        held = persistent_rdds(spark) - rdds
+        if held > 0:
+            left.append(f'{held} persistent RDDs')
         if left:
             if name not in bad:
                 bad.append(name)
             print('LEFTOVER', name, left, flush=True)
-        # tracked_persist sites (bm25/tfidf postings, KM day table,
-        # ...) pin a new cache entry per call; 251 queries in one
-        # session otherwise accumulate orphan blocks until late
-        # queries pay eviction + GC (ADVICE r10). unpersist_all is
-        # the library's own lifecycle API — it also empties the
-        # driver-side _TRACKED registry, which clearCache alone
-        # leaves growing (review finding r11); clearCache then
-        # catches anything cached outside tracked_persist.
-        from lightlane_spark.cache import unpersist_all
-
-        unpersist_all()
-        spark.catalog.clearCache()
 print('DONE bad =', bad, flush=True)
 
 # Machine-readable sweep record: one row per query with the same
