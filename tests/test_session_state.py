@@ -1,6 +1,7 @@
 """Library calls leave the caller's session as they found it: no conf
 write, no temporary view or function, no scratch directory left behind;
-and every session pin differs from Spark's own default."""
+every session pin differs from Spark's own default; and the session
+compiles each generated class once."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import os
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from lightlane_spark import queries_m5, queries_relational
 from lightlane_spark.jobspec import build_pipeline
@@ -78,3 +80,28 @@ def test_default_conf_pins_differ_from_spark_defaults(spark):
         if fresh.getConf(entry) == default:
             restated.append(key)
     assert restated == []
+
+
+def test_generated_classes_survive_a_working_set_above_100(spark):
+    """A query rerun after 150 other small queries compiles no class:
+    the session's codegen cache holds more than Spark's default 100
+    entries, so the filler classes do not evict the query's."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics  # noqa: SLF001
+    compiles = metrics.METRIC_COMPILATION_TIME()
+
+    def run_counting(fn):
+        before = compiles.getCount()
+        fn()
+        return compiles.getCount() - before
+
+    def aggregate():
+        spark.range(1000).groupBy((F.col("id") % 7).alias("k")).agg(
+            F.sum("id")).collect()
+
+    def fillers():
+        for i in range(150):
+            spark.range(3).selectExpr(f"id * {i + 2} + {i}").collect()
+
+    run_counting(aggregate)
+    assert run_counting(fillers) > 100
+    assert run_counting(aggregate) == 0
