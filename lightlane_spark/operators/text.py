@@ -357,10 +357,7 @@ def tfidf_topk(
     toks = df.select(
         F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("tok")
     )
-    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 0.58 s, off 0.49 s
-    tf = toks.groupBy(id_col, "tok").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).transform(tracked_persist)
+    tf = toks.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.select(F.countDistinct(F.col(id_col)).alias("__n"))
     scored = (
@@ -488,7 +485,8 @@ def dsir_log_weights(
         .otherwise(F.col("__t"))
     )
     g = base.select(F.col(id_col), "__is_t", grams_arr.alias("__g"))
-    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 2.55 s, off 2.41 s
+    # kept (off re-reads documents); 10x A/B local[4], best on / off s:
+    # 20.27/28.57, 21.27/31.68, 21.50/30.61
     feats = (
         g.select(F.col(id_col), "__is_t", F.explode("__g").alias("gram"))
         .withColumn("bucket", (h32(F.col("gram")) % dims).cast("int"))
@@ -1095,12 +1093,6 @@ def bm25_topk(
     so DecimalType may order but never leave a query. Ranking (and
     the top-k cut) runs on the double + doc-id tiebreak, identically
     on the oracle side. Ranking ties break on the doc id.
-
-    Cache lifecycle: each call ``tracked_persist``s its query-term
-    postings relation (a new DataFrame per call, so repeated calls in
-    a long session each pin a fresh cache entry). Callers looping
-    over many invocations should run under
-    ``lightlane_spark.cache.cache_scope`` or call ``unpersist_all``.
     """
     terms = [str(t) for t in query_terms]
     # token array materialized BEFORE size()/explode() reference it:
@@ -1113,11 +1105,9 @@ def bm25_topk(
         F.explode("__t").alias("tok"),
     )
     hits = toks.where(F.col("tok").isin(terms))
-    # kept (off re-reads documents: column pruning makes the two consumers'
-    # exchanges differ); cold A/B sf0.1 local[4]: on 0.49 s, off 0.24 s
     tf = hits.groupBy(id_col, "tok").agg(
         F.count(F.lit(1)).alias("tf"), F.first("__dl").alias("dl")
-    ).transform(tracked_persist)
+    )
     # document frequency via groupBy + broadcast join, NOT
     # count().over(Window.partitionBy("tok")): the window form puts a
     # term's ENTIRE postings list in one task's sort buffer — a
@@ -1443,11 +1433,7 @@ def bm25_multi(
     any shuffle (postings-proportional); the (qid, term) table and
     the 1-row corpus stats are broadcast; the only wide exchange is
     the (doc, term) tf groupBy. Query count scales the tiny
-    broadcast, never the corpus side.
-
-    Cache lifecycle: each call ``tracked_persist``s the union-vocab
-    postings (a fresh cache entry per invocation) — loop callers
-    should use ``cache_scope``/``unpersist_all``."""
+    broadcast, never the corpus side."""
     vocab = sorted({str(t) for ts in queries.values() for t in ts})
     qrows = [(qid, str(t)) for qid, ts in queries.items() for t in ts]
     from lightlane_spark.sources.localrel import local_df
@@ -1460,10 +1446,9 @@ def bm25_multi(
         F.explode("__t").alias("tok"),
     )
     hits = toks.where(F.col("tok").isin(vocab))
-    # kept (off re-reads documents; plan test pins it); cold A/B sf0.1 local[4]: on 0.59 s, off 0.45 s
     tf = hits.groupBy(id_col, "tok").agg(
         F.count(F.lit(1)).alias("tf"), F.first("__dl").alias("dl")
-    ).transform(tracked_persist)
+    )
     # df via groupBy + broadcast join (≤|union vocab| rows), not a
     # token-partitioned window — same hot-key rationale as bm25_topk:
     # one common term's postings must never serialize through a

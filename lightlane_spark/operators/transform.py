@@ -149,11 +149,15 @@ def quarantine(
 
 def fan_out(df: DataFrame, sinks: list[Callable[[DataFrame], Any]]) -> None:
     """OP-20: one scan, many outputs (reference ``call_handlers``,
-    ``dumper/worker.py:19-23``). Persist once, write N times."""
+    ``dumper/worker.py:19-23``). With two or more sinks the frame is
+    persisted once and written N times, so every sink reads one
+    extract; a lone sink reads ``df`` itself, since a persist read once
+    only adds a cache write (``etl_load`` single-sink ops ran faster
+    without it)."""
     with cache_scope():
-        cached = df.transform(tracked_persist)
+        src = df.transform(tracked_persist) if len(sinks) > 1 else df
         for sink in sinks:
-            sink(cached)
+            sink(src)
 
 
 def chunk_text_udtf(chunk_size: int = 32, stride: int = 24):

@@ -16,8 +16,8 @@ a sink, not the transport); per-stage row counts come from
 plan-attached observations (OP-37) rather than driver-side counters;
 errors route through ``quarantine`` instead of silent skips (OP-17).
 
-Every stage is lazy until ``run()``; sinks fan out from one persisted
-scan (OP-20).
+Every stage is lazy until ``run()``; two or more sinks fan out from one
+persisted scan, and a lone sink reads the plan directly (OP-20).
 """
 
 from __future__ import annotations
@@ -168,8 +168,8 @@ class Pipeline:
 
     # -- run ----------------------------------------------------------
     def run(self) -> dict:
-        """Execute all sinks (one persisted scan feeding each, OP-20);
-        returns per-stage observed metrics (OP-37)."""
+        """Execute all sinks (OP-20: two or more share one persisted
+        scan); returns per-stage observed metrics (OP-37)."""
         self._require_df()
         if not self._sinks and self._bad_sink is None:
             raise ValueError("pipeline has no sinks; add to_*/load first")

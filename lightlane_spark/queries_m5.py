@@ -455,12 +455,7 @@ def q_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lightlane_spark.operators.text import tokenize
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 0.77 s, off 0.55 s
-    toks = tracked_persist(
-        docs.select(
-            "doc_id", F.explode(tokenize("text")).alias("tok")
-        ).distinct()
-    )
+    toks = docs.select("doc_id", F.explode(tokenize("text")).alias("tok")).distinct()
     dfreq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     from pyspark.sql import Window as W
 
@@ -1328,10 +1323,9 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     kept = url_dedup(raw).select("doc_id", "text", "source")
-    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 0.82 s, off 0.65 s
     scored = kept.join(
         lm_doc_scores(kept.select("doc_id", "text")), "doc_id"
-    ).withColumn("__q", F.col("lm_score").cast("decimal(18,6)")).transform(tracked_persist)
+    ).withColumn("__q", F.col("lm_score").cast("decimal(18,6)"))
     thr = scored.agg(
         F.sum("__q").alias("__s"), F.count(F.lit(1)).alias("__n")
     )

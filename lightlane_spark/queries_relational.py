@@ -4430,12 +4430,7 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             0,
         ).cast("int").alias("fd"),
     )
-    # kept (plan test pins one orders scan); cold A/B sf0.1 local[4]: on 0.28 s, off 0.20 s
-    cnt = tracked_persist(
-        d.groupBy("o_orderpriority", "fd").agg(
-            F.count(F.lit(1)).alias("obs")
-        )
-    )
+    cnt = d.groupBy("o_orderpriority", "fd").agg(F.count(F.lit(1)).alias("obs"))
     tot = cnt.groupBy("o_orderpriority").agg(F.sum("obs").alias("n"))
     exp = (
         F.col("n").cast("double")
@@ -4577,18 +4572,18 @@ def q_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-row divisions (identical operands both engines, round 6dp).
 
     Scale shape: the brand dim broadcasts onto the fact scan; the
-    basket relation (order → ≤25-brand sorted array) is materialized
-    ONCE (three consumers: pair expansion, supports, basket count —
-    the FP-growth first-pass contract); pair expansion is in-row over
-    the sorted array, bounded by Σ|basket|² ≤ 25·|baskets|, then ONE
-    count shuffle of integer pairs. Supports re-explode the cached
-    baskets, never the fact table."""
+    basket relation (order → ≤25-brand sorted array) feeds three
+    consumers (pair expansion, supports, basket count — the FP-growth
+    first-pass contract) unpersisted: a persist there did not beat
+    the re-derivation by more than run spread on a 10× corpus; pair
+    expansion is in-row over the sorted array, bounded by
+    Σ|basket|² ≤ 25·|baskets|, then ONE count shuffle of integer
+    pairs."""
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
     )
     p = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    # kept (off re-reads lineitem; plan test pins it); cold A/B sf0.1 local[4]: on 1.26 s, off 0.95 s
-    baskets = tracked_persist(
+    baskets = (
         li.join(F.broadcast(p), li["l_partkey"] == p["p_partkey"])
         .groupBy("l_orderkey")
         .agg(F.array_sort(F.collect_set("p_brand")).alias("bs"))
@@ -4717,7 +4712,8 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("x"),
     ).select("event_type", "x.feature", "x.fval")
-    # kept (off re-reads events); cold A/B sf0.1 local[4]: on 0.61 s, off 0.45 s
+    # kept (off re-reads events); 10x A/B local[4], best on / off s:
+    # 2.77/5.27, 1.98/4.05, 2.46/4.69
     jt = tracked_persist(
         feats.groupBy("feature", "event_type", "fval").agg(
             F.count(F.lit(1)).alias("n_xy")
@@ -5021,22 +5017,16 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     a global sort each, the documented cost of exact global
     quantiles (swap to approx percentile cuts when customers stop
     fitting a sort, quantile_summary's contract); final census is a
-    tiny aggregate. The rollup is persisted: the three ntile windows
-    and the max-date scalar all consume it."""
+    tiny aggregate."""
     from pyspark.sql import Window
 
     o = read_table(spark, sf_dir, "orders").select(
         "o_custkey", F.to_date("o_orderdate").alias("d"), "o_totalprice"
     )
-    # kept (off re-reads orders); cold A/B sf0.1 local[4]: on 0.37 s, off 0.26 s
-    cust = tracked_persist(
-        o.groupBy("o_custkey").agg(
-            F.max("d").alias("last_d"),
-            F.count(F.lit(1)).alias("frequency"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias(
-                "monetary"
-            ),
-        )
+    cust = o.groupBy("o_custkey").agg(
+        F.max("d").alias("last_d"),
+        F.count(F.lit(1)).alias("frequency"),
+        F.sum(F.col("o_totalprice").cast("decimal(18,2)")).alias("monetary"),
     )
     d0 = cust.agg(F.max("last_d").alias("d0"))
     scored = (

@@ -171,10 +171,7 @@ def q_funnel_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = ev.where(F.col("event_type") == etype)
         if prev is not None:
             e = e.join(prev, "user_id").where(F.col("ts") > F.col(prev_col))
-        # kept (off re-reads events; plan test pins it); cold A/B sf0.1 local[4]: on 0.43 s, off 0.24 s
-        return tracked_persist(
-            e.groupBy("user_id").agg(F.min("ts").alias(out))
-        )
+        return e.groupBy("user_id").agg(F.min("ts").alias(out))
 
     views = first_after("view", None, "", "t_view")
     clicks = first_after("click", views, "t_view", "t_click")
@@ -916,8 +913,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "event_type", "ts"
     )
     cutoff = F.lit("2024-01-08").cast("timestamp")
-    # kept (off re-reads events; plan test pins it); cold A/B sf0.1 local[4]: on 0.51 s, off 0.40 s
-    s = tracked_persist(
+    s = (
         ev.filter(F.col("event_type") == "signup")
         .groupBy("user_id")
         .agg(F.min("ts").alias("signup"))
@@ -1100,7 +1096,7 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     def binned(df, cnt_name):
         # one corpus pass: per-(type, bin) counts; the per-type total
         # folds out of the same aggregate (no separate count scan)
-        out = (
+        return (
             df.join(F.broadcast(edges), "event_type")
             .select(
                 "event_type",
@@ -1109,8 +1105,6 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("event_type", "bin")
             .agg(F.count(F.lit(1)).alias(cnt_name))
         )
-        # kept (off re-reads events; plan test pins it); cold A/B sf0.1 local[4]: on 0.85 s, off 0.82 s
-        return tracked_persist(out)
 
     bb = binned(base, "cb")
     cc = binned(cur, "cc")
@@ -1388,20 +1382,13 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: first-seen is one map-side-combined min() keyed by user;
     purchases join that user-cardinality relation (broadcast- or
     co-partition-eligible), roll up to (cohort, age) — aggregate-
-    sized — and the LTV window runs at that cardinality. First-seen
-    is persisted for its two consumers (revenue join + cohort
-    sizes)."""
+    sized — and the LTV window runs at that cardinality."""
     ev = read_table(spark, sf_dir, "events").select(
         "user_id", "event_type", "ts", "value"
     )
     from pyspark.sql import Window
 
-    # kept (off re-reads events); cold A/B sf0.1 local[4]: on 0.29 s, off 0.21 s
-    first = tracked_persist(
-        ev.groupBy("user_id").agg(
-            F.min(F.to_date("ts")).alias("cohort_day")
-        )
-    )
+    first = ev.groupBy("user_id").agg(F.min(F.to_date("ts")).alias("cohort_day"))
     rev = (
         ev.filter(F.col("event_type") == "purchase")
         .join(first, "user_id")

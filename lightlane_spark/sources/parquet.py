@@ -15,6 +15,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from lightlane_spark.cache import session_memo
+from lightlane_spark.operators.extract import exclude_columns, select_columns
 
 TABLES = (
     "region",
@@ -75,12 +76,8 @@ def read_table(
     else:
         schema = session_memo(spark, key, lambda: spark.read.parquet(path).schema)
         df = spark.read.schema(schema).parquet(path)
-    if exclude:
-        df = df.drop(*exclude)
-    if columns and columns != "*":
-        if isinstance(columns, str):
-            columns = [c.strip() for c in columns.split(",")]
-        df = df.select(*columns)
+    df = select_columns(exclude_columns(df, exclude), columns)
+    # not ``with_filter``: an empty ``where`` means no predicate here
     if where:
         df = df.filter(where)
     return df

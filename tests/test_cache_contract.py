@@ -123,7 +123,7 @@ def test_fresh_queries_run_leaves_no_cache_under_scope(spark, sf_dir):
     cache.unpersist_all()
     baseline = _n_cached_rdds(spark)  # test-owned local checkpoints linger
     with cache.cache_scope():
-        for name in ("minhash_lsh_pairs", "bm25_topk"):
+        for name in ("minhash_lsh_pairs", "mutual_information"):
             qs[name](spark, sf_dir).count()
     assert _cache_manager_empty(spark)
     assert _n_cached_rdds(spark) <= baseline

@@ -72,6 +72,32 @@ def test_transform_and_merge_load_spec(spark, sf_dir, tmp_path):
     assert merged.count() == read_table(spark, sf_dir, "orders").count()
 
 
+def test_single_sink_merge_counts_staging_rows(spark, sf_dir, tmp_path):
+    """A one-sink MERGE reads its staging extract without a persist, so
+    the merge plan reads it twice; the observed extract count is still
+    the staging row count."""
+    target = str(tmp_path / "orders_t")
+    orders = read_table(spark, sf_dir, "orders")
+    run_job(spark, {
+        "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "orders"},
+        "load": {"path": target, "mode": "overwrite"},
+    })
+    orders.filter("o_orderkey % 7 = 0").withColumn(
+        "o_orderpriority", F.lit("MERGED")
+    ).write.parquet(str(tmp_path / "batch.parquet"))
+    staged = read_table(spark, str(tmp_path), "batch").count()
+    assert staged > 0
+    metrics = run_job(spark, {
+        "extract": {"kind": "parquet", "sf_dir": str(tmp_path), "table": "batch"},
+        "load": {"path": target, "mode": "merge", "primary_keys": ["o_orderkey"],
+                 "dedup": True, "dedup_uniq_keys": ["o_orderkey"]},
+    })
+    assert metrics["extracted"]["rows"] == staged
+    merged = spark.read.parquet(target)
+    assert merged.filter("o_orderpriority = 'MERGED'").count() == staged
+    assert merged.count() == orders.count()
+
+
 def test_sql_and_quarantine_spec(spark, sf_dir, tmp_path):
     spec = {
         "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "orders"},

@@ -70,11 +70,33 @@ def test_quarantine_splits_all_rows(spark):
 
 
 def test_fan_out(spark, tmp_path):
+    """Two sinks read one persisted extract, released after the run; a
+    lone sink reads the frame as given and nothing is registered."""
+    from lightlane_spark import cache
+
     df = spark.createDataFrame([(1,), (2,)], "id: bigint")
+    seen = []
+
+    def sink(path):
+        def write(d):
+            seen.append((d.storageLevel.useMemory, len(cache._TRACKED)))
+            d.write.mode("overwrite").parquet(path)
+
+        return write
+
+    before = len(cache._TRACKED)
     paths = [str(tmp_path / "a"), str(tmp_path / "b")]
-    fan_out(df, [lambda d, p=p: d.write.mode("overwrite").parquet(p) for p in paths])
+    fan_out(df, [sink(p) for p in paths])
+    assert seen == [(True, before + 1)] * 2
+    assert len(cache._TRACKED) == before
     for p in paths:
         assert spark.read.parquet(p).count() == 2
+
+    seen.clear()
+    fan_out(df, [sink(str(tmp_path / "one"))])
+    assert seen == [(False, before)]
+    assert len(cache._TRACKED) == before
+    assert spark.read.parquet(str(tmp_path / "one")).count() == 2
 
 
 def test_grouped_apply_per_group_frames(spark):

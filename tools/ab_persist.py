@@ -15,6 +15,10 @@ checkpoint site returns its frame uncut. Usage:
 A name of the form ``module:function`` times that callable
 ``(spark, sf_dir) -> DataFrame`` instead of a ``queries()`` entry.
 
+Every arm runs twice in mirrored order (on, off, off2, on2; one-site
+arms sit inside the same mirror) and arms compare best against best, so
+neither a tie nor drift reads as a win for either side.
+
 Prints a table; exits 0 always (measurement tool, not a gate).
 """
 
@@ -136,19 +140,34 @@ def main() -> None:
         _SEEN.clear()
         on, on_cold = run(name, set())
         sites = sorted(_SEEN)
-        off, off_cold = run(name, {"*"})
-        on2, _ = run(name, set())  # drift control: re-measure the on arm
+        # mirrored order: each arm's two runs straddle one midpoint
+        arms = [frozenset({"*"})]
+        if per_site and len(sites) > 1:
+            arms += [frozenset({s}) for s in sites]
+        first = {a: run(name, set(a)) for a in arms}
+        second = {a: run(name, set(a)) for a in reversed(arms)}
+        on2, _ = run(name, set())
         best_on = min(on, on2)
-        verdict = "persist WINS" if best_on <= off else "persist LOSES"
+
+        def verdict(arm: frozenset) -> str:
+            best_off = min(first[arm][0], second[arm][0])
+            # a tie reads as LOSES: a persist that does not pay goes
+            return "persist WINS" if best_on < best_off else "persist LOSES"
+
+        off, off_cold = first[arms[0]]
+        off2 = second[arms[0]][0]
         print(
-            f"\n{name}: on={on:.3f}s  all-off={off:.3f}s  on2={on2:.3f}s"
-            f"  cold(on/off)={on_cold:.3f}/{off_cold:.3f}s  -> {verdict}"
+            f"\n{name}: on={on:.3f}s  off={off:.3f}s  off2={off2:.3f}s"
+            f"  on2={on2:.3f}s  best(on/off)={best_on:.3f}/{min(off, off2):.3f}s"
+            f"  cold(on/off)={on_cold:.3f}/{off_cold:.3f}s  -> {verdict(arms[0])}"
         )
         print(f"  sites: {sites}")
-        if per_site and len(sites) > 1:
-            for s in sites:
-                t, _ = run(name, {s})
-                print(f"  off[{s}]: {t:.3f}s")
+        for arm in arms[1:]:
+            (s,) = arm
+            print(
+                f"  off[{s}]: {first[arm][0]:.3f}s / {second[arm][0]:.3f}s"
+                f"  -> {verdict(arm)}"
+            )
     print(f"\nloadavg at end: {os.getloadavg()}")
 
 
