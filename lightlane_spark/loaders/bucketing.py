@@ -62,8 +62,9 @@ def merge_bucketed_table(
     the bucket key, the price of restoring the write-once layout; in
     a real deployment the table is also date-partitioned and only
     affected partitions rewrite. Commit is the reference's 3-step
-    rename dance (``mysql_loader.py:119-123``) as catalog renames, so
-    readers always see a complete table.
+    rename dance (``mysql_loader.py:119-123``) as catalog renames: a
+    reader between the two renames finds no table, and the next merge
+    first renames a leftover ``<table>__retired`` back.
 
     The result table keeps its bucket metadata: every subsequent
     fact⋈fact join or MERGE on the PK stays Exchange-free on the
@@ -71,6 +72,15 @@ def merge_bucketed_table(
     """
     from lightlane_spark.loaders.loader import merge_upsert
 
+    reconcile = f"{table}__reconcile"
+    retired = f"{table}__retired"
+
+    def restore_retired() -> None:
+        # a swap that died between its renames left the rows in retired
+        if not spark.catalog.tableExists(table) and spark.catalog.tableExists(retired):
+            spark.sql(f"ALTER TABLE {retired} RENAME TO {table}")
+
+    restore_retired()
     if not spark.catalog.tableExists(table):
         write_bucketed_table(
             staging, table, primary_keys, num_buckets, sort_by, fmt=fmt
@@ -78,8 +88,6 @@ def merge_bucketed_table(
         return
     target = spark.table(table)
     merged = merge_upsert(target, staging, primary_keys, broadcast_staging=True)
-    reconcile = f"{table}__reconcile"
-    retired = f"{table}__retired"
     spark.sql(f"DROP TABLE IF EXISTS {reconcile}")
     spark.sql(f"DROP TABLE IF EXISTS {retired}")
     # one file per bucket: route rows to their bucket's task first
@@ -95,8 +103,6 @@ def merge_bucketed_table(
         spark.sql(f"ALTER TABLE {table} RENAME TO {retired}")
         spark.sql(f"ALTER TABLE {reconcile} RENAME TO {table}")
     except Exception:
-        # restore whichever rename half-completed
-        if not spark.catalog.tableExists(table) and spark.catalog.tableExists(retired):
-            spark.sql(f"ALTER TABLE {retired} RENAME TO {table}")
+        restore_retired()
         raise
     spark.sql(f"DROP TABLE IF EXISTS {retired}")

@@ -4,16 +4,16 @@ Reference parity (SURVEY §2.3): the reference loads a staging table
 and then reconciles it into the target with one of three modes
 (``loader/hive_loader.py:97-204``, ``loader/mysql_loader.py:66-129``):
 
-  - OVERWRITE: replace target content (MySQL 3-step RENAME swap /
-    Hive INSERT OVERWRITE) → ``mode('overwrite')``.
+  - OVERWRITE: replace target content (MySQL 3-step RENAME swap,
+    ``mysql_loader.py:119-123``).
   - APPEND: INSERT INTO → ``mode('append')``.
   - MERGE (upsert): keep target rows whose PK is NOT in staging
     (LEFT OUTER JOIN … IS NULL — an anti-join), UNION ALL staging,
-    write to a reconcile table, atomic rename swap
-    (``hive_loader.py:162-182``). Here:
-    ``target.join(staging, pks, 'left_anti').unionByName(staging)``
-    staged to a temp path then swapped in by two renames — same
-    reconcile-and-swap commit the reference uses, minus the Hive DDL.
+    write to a reconcile table, rename swap (``hive_loader.py:162-182``).
+
+OVERWRITE and MERGE share one commit, ``Loader._commit``: a staged
+write beside the table and a rename swap; the layout stays a plain
+directory of data files.
 
 Validation rules preserved (``hive_loader.py:62-82``): mode must be
 one of the three; MERGE requires primary keys and forbids static
@@ -32,7 +32,6 @@ when the runtime has it; this file is the format-agnostic path.
 
 from __future__ import annotations
 
-import uuid
 from dataclasses import dataclass, field
 from enum import Enum
 
@@ -119,10 +118,9 @@ class Loader:
     The reference's loader entry points (``hive_loader.py``,
     ``mysql_loader.py``) collapse into this one class: staging tables
     become transient DataFrames (OP-29 — no DDL needed), bulk-load
-    becomes the write itself (OP-22/23), and the commit protocol is
-    Spark's: OVERWRITE and APPEND are ``mode('overwrite')`` /
-    ``mode('append')``; MERGE adds a rename swap of a staged reconcile
-    directory (``_merge``).
+    becomes the write itself (OP-22/23). APPEND is Spark's
+    ``mode('append')``; OVERWRITE and MERGE replace the table through
+    one staged write and rename swap (``_commit``).
     """
 
     spark: SparkSession
@@ -162,67 +160,66 @@ class Loader:
     def execute(self, staging: DataFrame) -> None:
         for q in self.pre_sql:  # OP-31
             self.spark.sql(q)
+        rows = staging
         if self.dedup:  # dedup BEFORE merge — hive_loader.py:184-187
-            staging = dedup_keep_first(
-                staging, self.dedup_uniq_keys, self.dedup_orderby or None
-            )
-        if self.mode is LoadMode.MERGE:
-            self._merge(staging)
+            rows = dedup_keep_first(staging, self.dedup_uniq_keys, self.dedup_orderby or None)
+        if self.mode is LoadMode.APPEND:
+            self._write(rows, self.table_path, "append")
         else:
-            writer = staging.write.mode(self.mode.value).format(self.fmt)
-            if self.partition_by:  # OP-24 dynamic partitioned insert
-                writer = writer.partitionBy(*self.partition_by)
-            writer.save(self.table_path)
+            self._commit(staging, rows)
         for q in self.post_sql:  # OP-31
             self.spark.sql(q)
         if self.analyze:  # OP-32 — stats for downstream planning
             self._analyze()
 
-    def _merge(self, staging: DataFrame) -> None:
-        """Reconcile-and-swap: the reference's MERGE commit
-        (``hive_loader.py:166-179``) re-expressed as a staged parquet
-        write + a rename swap through the Hadoop FileSystem API, so it
-        runs on any Hadoop filesystem, not just the driver-local one.
-        Each rename is atomic on file:// and HDFS, and a failed second
-        rename restores the old directory; on an object store such as
-        S3A a rename is copy+delete, so the swap is not atomic there."""
-        fs, table = fs_path(self.spark, self.table_path)
-        if not fs.exists(table):
-            staging.write.mode("overwrite").format(self.fmt).save(self.table_path)
-            return
-        target = self.spark.read.format(self.fmt).load(self.table_path)
-        merged = merge_upsert(
-            target,
-            staging,
-            self.primary_keys,
-            schema_evolution=self.schema_evolution,
-        )
-        reconcile = self._sibling_tmp_path()
-        _, rec = fs_path(self.spark, reconcile)
-        try:
-            merged.write.mode("overwrite").format(self.fmt).save(reconcile)
-            # Swap, mirroring the reference's rename dance
-            # (mysql_loader.py:119-123): retire the old dir, move the
-            # reconcile dir into place, drop the old. If the second
-            # rename fails, restore the retired dir so the table path
-            # is never left missing.
-            _, retired = fs_path(self.spark, self.table_path + ".old-" + uuid.uuid4().hex[:8])
-            if not fs.rename(table, retired):
-                raise IOError(f"MERGE swap: could not retire {self.table_path}")
-            if not fs.rename(rec, table):
-                fs.rename(retired, table)
-                raise IOError(f"MERGE swap: could not install reconcile dir at {self.table_path}")
-            fs.delete(retired, True)
-        except Exception:
-            if fs.exists(rec):
-                fs.delete(rec, True)
-            raise
+    def _write(self, rows: DataFrame, path: str, mode: str) -> None:
+        writer = rows.write.mode(mode).format(self.fmt)
+        if self.partition_by:  # OP-24 dynamic partitioned insert
+            writer = writer.partitionBy(*self.partition_by)
+        writer.save(path)
 
-    def _sibling_tmp_path(self) -> str:
-        # Scheme-preserving sibling path (os.path would mangle URIs).
-        base = self.table_path.rstrip("/")
-        parent, _, _ = base.rpartition("/")
-        return (parent or ".") + "/.reconcile-" + uuid.uuid4().hex[:12]
+    def _commit(self, staging: DataFrame, rows: DataFrame) -> None:
+        """OVERWRITE/MERGE commit, the reference's swap
+        (``mysql_loader.py:119-123``, ``hive_loader.py:166-179``) via
+        the Hadoop FileSystem API: write ``.<name>.new`` beside the
+        table, retire the table to ``.<name>.old``, rename ``.new`` into
+        place (``.old`` goes back if that fails), delete ``.old``.
+
+          - a reader that opens between the two renames finds no table;
+            the next load restores it from ``.old``, then deletes stale
+            ``.old``/``.new`` directories;
+          - concurrent writers to one table need an external lock;
+          - on S3A a rename is copy+delete, so the swap is not atomic;
+          - OVERWRITE with ``partition_by`` replaces the whole table, as
+            ``mode('overwrite')`` does under Spark's default static
+            ``partitionOverwriteMode``.
+        """
+        fs, table = fs_path(self.spark, self.table_path)
+        Path = self.spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+        new, old = (Path(table.getParent(), f".{table.getName()}.{s}") for s in ("new", "old"))
+        if not fs.exists(table) and fs.exists(old):
+            fs.rename(old, table)  # a swap died between its renames
+        fs.delete(old, True)
+        fs.delete(new, True)
+        live = fs.exists(table)
+        if self.mode is LoadMode.MERGE and live:
+            target = self.spark.read.format(self.fmt).load(self.table_path)
+            if self.schema_evolution:
+                target, rows = align_schemas(target, rows)
+            # dedup keeps a row per dedup key: if those hold the PKs, the
+            # raw staging keys are the same set, read without the shuffle
+            raw = not self.dedup or set(self.primary_keys) <= set(self.dedup_uniq_keys)
+            keys = (staging if raw else rows).select(*self.primary_keys)
+            rows = target.join(keys, self.primary_keys, "left_anti").unionByName(rows)
+        self._write(rows, new.toString(), "overwrite")
+        if live and not fs.rename(table, old):
+            raise IOError(f"load commit: could not retire {self.table_path}")
+        if not fs.rename(new, table):
+            if live:
+                fs.rename(old, table)
+            raise IOError(f"load commit: could not install {self.table_path}")
+        fs.delete(old, True)
+        self.spark.catalog.refreshByPath(self.table_path)
 
     def _analyze(self) -> None:
         """OP-32: refresh stats. On a path-backed table the useful

@@ -13,12 +13,11 @@ dedup on the PKs — re-merging an already-loaded row is idempotent.
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lightlane_spark.loaders.loader import Loader
+from lightlane_spark.loaders.loader import Loader, fs_path
 
 
 def high_watermark(df: DataFrame, col: str):
@@ -54,7 +53,8 @@ def incremental_merge_load(
     """One incremental run: read target watermark → extract newer
     source rows → MERGE. Returns the number of extracted rows."""
     last = None
-    if os.path.exists(target_path):
+    fs, path = fs_path(spark, target_path)
+    if fs.exists(path):
         last = high_watermark(spark.read.parquet(target_path), watermark_col)
     batch = extract_since(source, watermark_col, last, overlap)
     n = batch.count()

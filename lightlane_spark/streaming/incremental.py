@@ -29,7 +29,6 @@ from pyspark.sql import types as T
 from pyspark.sql import functions as F
 
 from lightlane_spark.loaders.loader import Loader
-from lightlane_spark.operators.dedup import dedup_keep_first
 
 from lightlane_spark.cache import tracked_persist
 
@@ -159,7 +158,7 @@ def streaming_merge(
     trigger_available_now: bool = True,
 ):
     """Continuous upsert: every micro-batch MERGEs into the target via
-    the batch Loader (anti-join + union + atomic swap, OP-27).
+    the batch Loader (dedup, anti-join + union, rename swap, OP-27).
 
     ``orderby`` picks the winner among same-PK rows WITHIN a batch
     (defaults to the PKs — deterministic either way via dedup's
@@ -167,9 +166,15 @@ def streaming_merge(
     """
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        deduped = dedup_keep_first(batch_df, primary_keys, orderby)
-        Loader(spark, table_path, "merge", primary_keys=primary_keys).execute(deduped)
+        Loader(
+            batch_df.sparkSession,
+            table_path,
+            "merge",
+            primary_keys=primary_keys,
+            dedup=True,
+            dedup_uniq_keys=primary_keys,
+            dedup_orderby=orderby,
+        ).execute(batch_df)
 
     writer = (
         stream_df.writeStream.foreachBatch(merge_batch)

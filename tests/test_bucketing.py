@@ -76,3 +76,27 @@ def test_merge_bucketed_table_keeps_layout(spark, sf_dir, no_broadcast):
     ps = plan_summary(joined)
     assert ps.exchanges == 0, "merged table lost bucketing:\n" + ps.text[:800]
     spark.sql("DROP TABLE m_orders")
+
+
+def test_merge_bucketed_table_recovers_retired(spark, sf_dir):
+    """A merge that died between its two catalog renames left the rows
+    in ``<table>__retired``; the next merge renames it back first, so
+    every old row survives next to the batch."""
+    from pyspark.sql import functions as F
+
+    from lightlane_spark.loaders.bucketing import merge_bucketed_table
+
+    orders = read_table(spark, sf_dir, "orders")
+    spark.sql("DROP TABLE IF EXISTS r_orders")
+    spark.sql("DROP TABLE IF EXISTS r_orders__retired")
+    merge_bucketed_table(spark, "r_orders", orders, ["o_orderkey"], num_buckets=4)
+    spark.sql("ALTER TABLE r_orders RENAME TO r_orders__retired")
+    staging = orders.filter("o_orderkey % 5 = 0").withColumn(
+        "o_orderpriority", F.lit("MERGED")
+    )
+    merge_bucketed_table(spark, "r_orders", staging, ["o_orderkey"], num_buckets=4)
+    back = spark.table("r_orders")
+    assert back.count() == orders.count()
+    assert back.filter("o_orderpriority = 'MERGED'").count() == staging.count()
+    assert not spark.catalog.tableExists("r_orders__retired")
+    spark.sql("DROP TABLE r_orders")

@@ -32,6 +32,16 @@ def test_incremental_equals_full_load(spark, sf_dir, tmp_path):
     assert spark.read.parquet(target).count() == back.count()
 
 
+def test_incremental_merge_load_sees_uri_target(spark, sf_dir, tmp_path):
+    """A ``file://`` target is found through its Hadoop filesystem, so
+    a rerun over an unchanged source extracts nothing."""
+    target = "file://" + str(tmp_path / "t")
+    ev = read_table(spark, sf_dir, "events").select("event_id", "ts", "value")
+    assert incremental_merge_load(spark, ev, target, "ts", ["event_id"]) == ev.count()
+    assert incremental_merge_load(spark, ev, target, "ts", ["event_id"]) == 0
+    assert spark.read.parquet(target).count() == ev.count()
+
+
 def test_extract_since_overlap(spark):
     t0 = dt.datetime(2025, 1, 1)
     df = spark.createDataFrame(

@@ -98,6 +98,40 @@ def test_single_sink_merge_counts_staging_rows(spark, sf_dir, tmp_path):
     assert merged.count() == orders.count()
 
 
+def test_single_sink_merge_reads_staging_once(spark, sf_dir, tmp_path):
+    """A deduplicated MERGE shuffles its staging rows once: the
+    anti-join reads the raw staging keys (dedup keeps a row per key, so
+    the key set is the same), leaving five jobs — staging schema, target
+    schema, the dedup shuffle, the key broadcast, the write."""
+    target = str(tmp_path / "orders_t")
+    orders = read_table(spark, sf_dir, "orders")
+    run_job(spark, {
+        "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "orders"},
+        "load": {"path": target, "mode": "overwrite"},
+    })
+    batch = orders.filter("o_orderkey % 10 = 0").withColumn(
+        "o_orderpriority", F.lit("MERGED")
+    )
+    dups = batch.limit(10).withColumn("o_orderpriority", F.lit("DUP"))
+    batch.unionByName(dups).write.parquet(str(tmp_path / "batch.parquet"))
+    sc = spark.sparkContext
+    sc.setJobGroup("single_sink_merge", "single_sink_merge")
+    try:
+        metrics = run_job(spark, {
+            "extract": {"kind": "parquet", "sf_dir": str(tmp_path), "table": "batch"},
+            "load": {"path": target, "mode": "merge", "primary_keys": ["o_orderkey"],
+                     "dedup": True, "dedup_uniq_keys": ["o_orderkey"]},
+        })
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("single_sink_merge")) <= 5
+    assert metrics["extracted"]["rows"] == batch.count() + 10
+    merged = spark.read.parquet(target)
+    assert merged.count() == orders.count()
+    assert merged.filter("o_orderpriority = 'MERGED'").count() == batch.count() - 10
+    assert merged.filter("o_orderpriority = 'DUP'").count() == 10
+
+
 def test_sql_and_quarantine_spec(spark, sf_dir, tmp_path):
     spec = {
         "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "orders"},

@@ -177,3 +177,65 @@ def test_orc_helpers_roundtrip(spark, sf_dir, tmp_path):
     assert sorted(r["r_regionkey"] for r in back.collect()) == sorted(
         r["r_regionkey"] for r in df.collect()
     )
+
+
+def _failing(df):
+    """``df`` with a column whose Python UDF raises, so the write job
+    fails after the commit has started."""
+    from pyspark.sql import functions as F
+
+    boom = F.udf(lambda v: 1 // 0, "int")
+    return df.withColumn("boom", boom(F.col("pk1")))
+
+
+def test_failed_write_keeps_old_table(spark, tmp_path, target_staging):
+    """A write job that raises leaves the old table readable with its
+    old rows, for OVERWRITE and for MERGE."""
+    target, staging = target_staging
+    path = str(tmp_path / "t")
+    Loader(spark, path, "overwrite").execute(target)
+    old = sorted(spark.read.parquet(path).collect())
+    for loader in (
+        Loader(spark, path, "overwrite"),
+        Loader(spark, path, "merge", primary_keys=["pk1", "pk2"], schema_evolution=True),
+    ):
+        with pytest.raises(Exception):
+            loader.execute(_failing(staging))
+        assert sorted(spark.read.parquet(path).collect()) == old
+
+
+def test_merge_recovers_table_left_in_old_sibling(spark, tmp_path, target_staging):
+    """A swap that died between its renames left the table in its
+    ``.old`` sibling; the next MERGE puts it back first, so every old
+    row survives next to the batch."""
+    target, staging = target_staging
+    path = str(tmp_path / "t")
+    Loader(spark, path, "overwrite").execute(target)
+    os.rename(path, str(tmp_path / ".t.old"))
+    Loader(spark, path, "merge", primary_keys=["pk1", "pk2"]).execute(staging)
+    rows = {(r.pk1, r.val) for r in spark.read.parquet(path).collect()}
+    assert rows == {(1, "t1"), (2, "s2"), (3, "t3"), (4, "s4")}
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+
+
+def test_next_load_deletes_leftover_siblings(spark, tmp_path, target_staging):
+    """Stale ``.old``/``.new`` siblings next to a live table are gone
+    after the next load."""
+    target, staging = target_staging
+    path = str(tmp_path / "t")
+    Loader(spark, path, "overwrite").execute(target)
+    for name in (".t.old", ".t.new"):
+        os.makedirs(tmp_path / name)
+        (tmp_path / name / "part-0.parquet").write_bytes(b"stale")
+    Loader(spark, path, "merge", primary_keys=["pk1", "pk2"]).execute(staging)
+    assert sorted(os.listdir(tmp_path)) == ["t"]
+    assert spark.read.parquet(path).count() == 4
+
+
+def test_self_overwrite(spark, tmp_path, target_staging):
+    """OVERWRITE may read the table it replaces."""
+    target, _ = target_staging
+    path = str(tmp_path / "t")
+    Loader(spark, path, "overwrite").execute(target)
+    Loader(spark, path, "overwrite").execute(spark.read.parquet(path).filter("pk1 > 1"))
+    assert sorted(r.pk1 for r in spark.read.parquet(path).collect()) == [2, 3]
