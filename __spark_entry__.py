@@ -17,7 +17,6 @@ from __future__ import annotations
 import functools
 import os
 import sys
-import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,6 +24,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from lightlane_spark.cache import scratch_dir  # noqa: E402
 from lightlane_spark.loaders.loader import Loader, merge_upsert  # noqa: E402
 from lightlane_spark.loaders.text_sinks import (  # noqa: E402
     read_csv,
@@ -179,7 +179,7 @@ def q_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_merge_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-25/26/27 pipeline: OVERWRITE target, MERGE staging, read back
     (the reference's reconcile-and-swap, hive_loader.py:166-179)."""
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_merge_"), "orders_t")
+    path = os.path.join(scratch_dir("llspark_merge_"), "orders_t")
     target = read_table(spark, sf_dir, "orders")
     staging = _orders_staging(spark, sf_dir)
     Loader(spark, path, "overwrite").execute(target)
@@ -195,7 +195,7 @@ def q_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconciled content."""
     from lightlane_spark.loaders.versioned import VersionedTable
 
-    base = os.path.join(tempfile.mkdtemp(prefix="llspark_vt_"), "orders_vt")
+    base = os.path.join(scratch_dir("llspark_vt_"), "orders_vt")
     vt = VersionedTable(spark, base)
     vt.write_version(read_table(spark, sf_dir, "orders"))
     vt.merge_version(_orders_staging(spark, sf_dir), ["o_orderkey"])
@@ -204,7 +204,7 @@ def q_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_append_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-26: APPEND load pipeline, read back."""
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_append_"), "orders_t")
+    path = os.path.join(scratch_dir("llspark_append_"), "orders_t")
     orders = read_table(spark, sf_dir, "orders")
     lo = orders.filter(F.col("o_orderkey") % 2 == 0)
     hi = orders.filter(F.col("o_orderkey") % 2 != 0)
@@ -216,7 +216,7 @@ def q_append_load(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_partitioned_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-24: dynamic partitioned insert, read back (partition column
     round-trips through the directory layout)."""
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_part_"), "orders_p")
+    path = os.path.join(scratch_dir("llspark_part_"), "orders_p")
     orders = read_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
@@ -234,7 +234,7 @@ _LI_CSV_SCHEMA = "l_orderkey bigint, l_linenumber int, l_quantity double, l_retu
 def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-18: quoted-CSV sink (QUOTE_ALL) → read back with explicit
     schema (never inferred from 'first row' — SURVEY §1.3)."""
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_csv_"), "li_csv")
+    path = os.path.join(scratch_dir("llspark_csv_"), "li_csv")
     df = read_table(spark, sf_dir, "lineitem", columns=_LI_CSV_COLS)
     write_csv(df, path)
     return read_csv(spark, path, _LI_CSV_SCHEMA)
@@ -242,7 +242,7 @@ def q_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hive_text_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-19: Hive-text sink (\\x01 fields, \\N nulls) → read back."""
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_hive_"), "li_text")
+    path = os.path.join(scratch_dir("llspark_hive_"), "li_text")
     df = read_table(spark, sf_dir, "lineitem", columns=_LI_CSV_COLS)
     write_hive_text(df, path)
     return read_hive_text(spark, path, _LI_CSV_SCHEMA)
@@ -256,7 +256,7 @@ def q_avro_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition via mapInPandas."""
     from lightlane_spark.loaders.avro_sink import read_avro, write_avro
 
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_avro_"), "li_avro")
+    path = os.path.join(scratch_dir("llspark_avro_"), "li_avro")
     df = read_table(spark, sf_dir, "lineitem", columns=_LI_CSV_COLS)
     write_avro(df, path)
     return read_avro(spark, path, _LI_CSV_SCHEMA)
@@ -271,7 +271,7 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from lightlane_spark.sources.jdbc import probe_bounds, read_jdbc, write_jdbc
 
     props = {"driver": "org.apache.derby.jdbc.EmbeddedDriver"}
-    base = tempfile.mkdtemp(prefix="llspark_derby_")
+    base = scratch_dir("llspark_derby_")
     url = f"jdbc:derby:{base}/db;create=true"
     orders = read_table(spark, sf_dir, "orders")
     write_jdbc(
@@ -299,7 +299,7 @@ def q_jdbc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink → schema-explicit read back (Spark-native format
     family, SURVEY §1.4; doubles round-trip via shortest-repr)."""
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_json_"), "li_json")
+    path = os.path.join(scratch_dir("llspark_json_"), "li_json")
     df = read_table(spark, sf_dir, "lineitem", columns=_LI_CSV_COLS)
     write_json(df, path)
     return read_json(spark, path, _LI_CSV_SCHEMA)
@@ -316,9 +316,9 @@ def q_compacted_load(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_quantity"
     )
-    frag = os.path.join(tempfile.mkdtemp(prefix="llspark_frag_"), "li")
+    frag = os.path.join(scratch_dir("llspark_frag_"), "li")
     li.repartition(64).write.parquet(frag)
-    compacted = os.path.join(tempfile.mkdtemp(prefix="llspark_compact_"), "li")
+    compacted = os.path.join(scratch_dir("llspark_compact_"), "li")
     compact_output(spark.read.parquet(frag), compacted, target_files=4)
     out = spark.read.parquet(compacted)
     assert len(out.inputFiles()) <= 4, "compaction failed to bound file count"
@@ -336,7 +336,7 @@ def q_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from lightlane_spark.loaders.dataskip import pruned_scan, write_with_stats
 
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_skip_"), "li")
+    path = os.path.join(scratch_dir("llspark_skip_"), "li")
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_shipdate", "l_quantity"
     )
@@ -434,7 +434,7 @@ def q_drop_falsy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_multi_sink_fanout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OP-20: one scan fanned out to parquet + CSV sinks (persist once,
     write twice); returns the parquet read-back."""
-    base = os.path.join(tempfile.mkdtemp(prefix="llspark_fan_"))
+    base = scratch_dir("llspark_fan_")
     df = read_table(
         spark, sf_dir, "lineitem", columns=["l_orderkey", "l_linenumber", "l_quantity"]
     )

@@ -42,6 +42,11 @@ stage below the cut; only the final stage waits for the next action.
   persist recomputes, but a frame built over a released (or lost)
   local checkpoint fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
 
+**Scratch directories.** A query that round-trips a table through
+files returns a lazy frame over them, so the files must outlive the
+call. :func:`scratch_dir` makes such a directory and removes it when the
+interpreter exits.
+
 **Session memos.** :func:`session_memo` caches values that are valid for
 one SparkContext — parsed expression Columns, inferred schemas, the
 shipped-package flag. Entries are keyed weakly by the context object,
@@ -58,6 +63,9 @@ under one lock.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 import threading
 import weakref
 from contextlib import contextmanager
@@ -159,6 +167,15 @@ def cache_scope() -> Iterator[None]:
             released = [t for t in _TRACKED if id(t) in ours]
             _TRACKED[:] = [t for t in _TRACKED if id(t) not in ours]
         _unpersist(released, False)
+
+
+def scratch_dir(prefix: str) -> str:
+    """A new temporary directory (``tempfile.mkdtemp(prefix=prefix)``)
+    for files a returned lazy frame still reads; it is removed when the
+    interpreter exits."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def session_memo(spark, key: Any, build: Callable[[], Any]) -> Any:

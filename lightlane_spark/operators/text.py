@@ -494,14 +494,13 @@ def dsir_log_weights(
         .agg(F.count(F.lit(1)).alias("cnt"))
         .transform(tracked_persist)
     )
-    # kept (off reruns the bucket aggregation per read); cold A/B sf0.1 local[4]: on 2.66 s, off 2.69 s
-    dist = tracked_persist(
-        feats.groupBy("bucket").agg(
-            F.sum("cnt").alias("cq"),
-            F.coalesce(
-                F.sum(F.when(F.col("__is_t"), F.col("cnt"))), F.lit(0)
-            ).alias("tp"),
-        )
+    # not persisted: 10x A/B local[4], best on / off s: within spread in
+    # two of three runs, and off won the third (21.50 / 20.18)
+    dist = feats.groupBy("bucket").agg(
+        F.sum("cnt").alias("cq"),
+        F.coalesce(
+            F.sum(F.when(F.col("__is_t"), F.col("cnt"))), F.lit(0)
+        ).alias("tp"),
     )
     tot = dist.agg(
         F.sum("cq").alias("cq_tot"), F.sum("tp").alias("tp_tot")

@@ -26,7 +26,7 @@ from types import MappingProxyType
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from lightlane_spark.cache import tracked_persist
+from lightlane_spark.cache import scratch_dir, tracked_persist
 from lightlane_spark.operators.fuzzy_dedup import (
     dedup_exact,
     dedup_minhash,
@@ -463,8 +463,9 @@ def q_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # 40-row dict: code order == token string order (window over 40
     # rows is trivially bounded)
-    # kept (off reruns the dfreq aggregate per consumer); cold A/B sf0.1 local[4]: on 0.77 s, off 0.99 s
-    vocab = tracked_persist(
+    # not persisted: 10x A/B local[4], on beat off beyond spread in two
+    # runs of three
+    vocab = (
         dfreq.orderBy(F.col("df").desc(), F.col("tok"))
         .limit(40)
         .withColumn("tc", F.row_number().over(W.orderBy("tok")) - 1)
@@ -3833,10 +3834,8 @@ def q_binary_file_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     blob bytes never pass through strings. maxPartitionBytes governs
     files-per-task packing for many-small-file layouts (the
     compaction story in `compacted_load` is the writer-side cure)."""
-    import tempfile
-
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    base = tempfile.mkdtemp(prefix="llspark_blobs_")
+    base = scratch_dir("llspark_blobs_")
     # fixture-writer (driver-side, bounded by the fixture corpus —
     # production assets arrive via the object store, not this loop)
     for did, text in sorted(

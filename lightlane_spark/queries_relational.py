@@ -22,7 +22,7 @@ from lightlane_spark.catalog import sql_over
 from lightlane_spark.sources.localrel import local_df
 from lightlane_spark.sources.parquet import read_table
 
-from lightlane_spark.cache import tracked_checkpoint, tracked_persist
+from lightlane_spark.cache import scratch_dir, tracked_persist
 
 
 def _dec_sum(col, alias: str, scale: int = 2):
@@ -246,10 +246,7 @@ def q_exists_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines sink/source round-trip (sibling of the CSV/Hive-text
     sinks, OP-18/19 family)."""
-    import os
-    import tempfile
-
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_json_"), "orders_json")
+    path = os.path.join(scratch_dir("llspark_json_"), "orders_json")
     df = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -296,10 +293,7 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC sink/source round-trip (SURVEY §1.4 storage formats: the
     reference enumerates TEXTFILE/PARQUET/ORC/...; Spark writes ORC
     natively)."""
-    import os
-    import tempfile
-
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_orc_"), "orders_orc")
+    path = os.path.join(scratch_dir("llspark_orc_"), "orders_orc")
     df = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -424,10 +418,7 @@ def q_hash_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML sink/source round-trip (native datasource since Spark 4;
     schema passed explicitly on read — never inferred)."""
-    import os
-    import tempfile
-
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_xml_"), "orders_xml")
+    path = os.path.join(scratch_dir("llspark_xml_"), "orders_xml")
     df = read_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -1694,9 +1685,7 @@ def q_dpp_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the difference between scanning 2 partitions and
     scanning 10 years. Plan pinned in tests/test_plan_quality.py
     (PartitionFilters carries a dynamicpruning subquery)."""
-    import tempfile as _tf
-
-    path = os.path.join(_tf.mkdtemp(prefix="llspark_dpp_"), "orders_by_year")
+    path = os.path.join(scratch_dir("llspark_dpp_"), "orders_by_year")
     orders = read_table(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
@@ -1781,9 +1770,7 @@ def q_schema_evolution_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-lived 100 TB table goes through — no rewrite of old files.
     NULLs coalesce to sentinels (driver canonicalization can't sort
     NULLs)."""
-    import tempfile as _tf
-
-    path = os.path.join(_tf.mkdtemp(prefix="llspark_evo_"), "orders_evo")
+    path = os.path.join(scratch_dir("llspark_evo_"), "orders_evo")
     orders = read_table(spark, sf_dir, "orders")
     b1 = orders.where("o_orderkey % 2 = 0").select("o_orderkey", "o_totalprice")
     b2 = orders.where("o_orderkey % 2 = 1").select(
@@ -3569,9 +3556,11 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection by synchronous label propagation (2 rounds,
     deterministic: most-frequent neighbor label, ties → smallest
     label) — the 4th graph operator next to connected components,
-    PageRank, and triangle count. Each round is one neighbor join +
-    one (node, label) count + one per-node argmax window — all linear
-    in |E| with no global structure, the property that lets LPA run
+    PageRank, and triangle count. Each round is one per-node
+    ``mode(label, deterministic=True)`` over the node's neighbours
+    (the most frequent value, ties → the smallest): round 1 a window
+    over each node's edges, round 2 an aggregate. Both are linear in
+    |E| with no global structure, the property that lets LPA run
     where modularity-style global methods cannot. Emits the
     community-size distribution.
 
@@ -3581,7 +3570,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (The blocked-levenshtein graph from `record_linkage` plugs into
     the same loop, but its Σ|block|² term grows with block size —
     fine for linkage output, wrong as a bench-scale edge generator.)
-    Any (u, v) relation drops in."""
+    Any symmetric (u, v) relation drops in."""
     c = read_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
@@ -3599,37 +3588,27 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in-row symmetrize: pairs ∪ pairs.swap runs the customer self-join twice
     from lightlane_spark.operators.clustering import symmetrize
 
-    # kept: cold A/B sf0.1 local[4]: label_propagation on 0.83 s, off 0.90 s
-    edges = symmetrize(pairs).transform(tracked_checkpoint)
-    labels = c.select(
-        F.col("c_custkey").alias("node"), F.col("c_custkey").alias("label")
+    # no lineage cut: the edges have one reader. Warm A/B sf0.01
+    # local[4], 6 pairs, label_propagation CPU-s per op: on 0.77, off 0.67
+    edges = symmetrize(pairs)
+    # round 1 needs no labels join: every starting label is the node's
+    # own id, and edges are symmetric, so u's pick is the mode of the v
+    # on u's own edges. A window over u hands that pick to each of u's
+    # edges, so round 2 needs no join to read it (against a per-u
+    # aggregate joined back: 0.85 → 0.64 CPU-s per op, 8 pairs).
+    sent = edges.select(
+        "v",
+        F.mode("v", deterministic=True).over(Window.partitionBy("u")).alias("label"),
     )
-    for _ in range(2):
-        nb = edges.join(labels, edges["u"] == labels["node"]).select(
-            F.col("v").alias("node"), "label"
-        )
-        cnt = nb.groupBy("node", "label").agg(F.count(F.lit(1)).alias("c"))
-        # per-node argmax as min_by over (count desc, label asc) — a
-        # hash aggregate with map-side partial combine instead of the
-        # row_number window's full sort of the (node, label) relation
-        # (r13, the neardup_dedup_quality max_by precedent). struct
-        # comparison is lexicographic and (−c, label) is unique within
-        # a node (label is the group key), so the pick — most frequent
-        # neighbor label, ties → smallest label — is unchanged and
-        # deterministic.
-        pick = cnt.groupBy("node").agg(
-            F.expr("min_by(label, struct(-c, label))").alias("new_label")
-        )
-        labels = (
-            labels.join(pick, "node", "left")
-            .select(
-                "node", F.coalesce("new_label", "label").alias("label")
-            )
-            # kept: cold A/B sf0.1 local[4]: label_propagation on 0.83 s, off 0.85 s
-            .transform(tracked_checkpoint)
-        )
+    # round 2 needs no join back to customer: edges are symmetric, so
+    # every node with an edge is some edge's v and gets a pick; an
+    # isolated node keeps its own id, which no edge carries, so it
+    # stays a singleton that community_size >= 2 drops
+    pick = sent.groupBy(F.col("v").alias("node")).agg(
+        F.mode("label", deterministic=True).alias("label")
+    )
     return (
-        labels.groupBy("label")
+        pick.groupBy("label")
         .agg(F.count(F.lit(1)).alias("community_size"))
         .filter(F.col("community_size") >= 2)
         .orderBy(F.col("community_size").desc(), "label")

@@ -938,12 +938,11 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("purch").isNotNull() & (F.col("purch") < cutoff)
         ).cast("bigint").alias("is_event"),
     )
-    # kept (off re-reads events; plan test pins it); cold A/B sf0.1 local[4]: on 0.51 s, off 0.58 s
-    day = tracked_persist(
-        obs.groupBy("variant", "t").agg(
-            F.sum("is_event").alias("d"),
-            F.sum(1 - F.col("is_event")).alias("c"),
-        )
+    # not persisted: 10x A/B local[4], on beat off beyond spread in one
+    # run of three
+    day = obs.groupBy("variant", "t").agg(
+        F.sum("is_event").alias("d"),
+        F.sum(1 - F.col("is_event")).alias("c"),
     )
     from pyspark.sql import Window
 

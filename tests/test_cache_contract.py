@@ -166,7 +166,7 @@ def _kcore(spark, sf_dir=None):
             "connected_components",
         )
     ]
-    + [("label_propagation", "cache_scope")],
+    + [("triangle_count", "cache_scope")],
 )
 def test_checkpoints_released_with_persists(spark, sf_dir, name, release):
     """Every local checkpoint a call cuts is released with the library's

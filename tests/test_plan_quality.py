@@ -560,16 +560,17 @@ def test_retrieval_metrics_single_corpus_postings_pass(spark, sf_dir):
 
 
 def test_kaplan_meier_two_corpus_scans(spark, sf_dir):
-    """The KM chain scans events three times: the signup cohort is
+    """The KM chain scans events six times: the signup cohort is
     derived once for the purchase join and once for the observation
-    join, because its persist lost the 10× A/B (tools/ab_persist.py);
-    the day-grain KM table stays persisted, so the corpus is not
-    re-derived per consumer (caught at 6 scans before)."""
+    join, and the day-grain KM table once for the cohort totals and
+    once for the survival chain. Neither persist passed the 10× A/B
+    (tools/ab_persist.py): the cohort's persist lost, and the day
+    table's beat its off arm beyond spread in one run of three only."""
     import __spark_entry__ as m
 
     df = m.queries()["kaplan_meier"](spark, sf_dir)
     ps = plan_summary(df)
-    assert ps.text.count("events.parquet") == 3, ps.text[:1200]
+    assert ps.text.count("events.parquet") == 6, ps.text[:1200]
     assert "CartesianProduct" not in ps.text
 
 
@@ -686,3 +687,46 @@ def test_range_split_read_scans_source_once(spark, sf_dir):
     ps = plan_summary(df)
     assert ps.text.count("lineitem.parquet") == 1, ps.text[:1200]
     assert "Union" not in ps.text
+
+
+def test_mode_deterministic_breaks_ties_to_smallest(spark):
+    """``mode(x, deterministic=True)`` returns the most frequent value
+    and, on a tie, the smallest, with the tied values spread over
+    several input partitions: the pick ``label_propagation`` relies on.
+    Group 1 ties 7 and 3 twice each (3 wins), group 2 ties 9, 5 and 8
+    once each (5 wins), group 3 has 4 over 2 (4 wins)."""
+    rows = [(1, 7), (1, 3), (1, 7), (1, 3),
+            (2, 9), (2, 5), (2, 8),
+            (3, 2), (3, 4), (3, 4)]
+    df = spark.createDataFrame(rows, "g: int, x: bigint").repartition(4)
+    assert df.rdd.getNumPartitions() >= 2
+    got = {
+        r["g"]: r["m"]
+        for r in df.groupBy("g").agg(F.mode("x", deterministic=True).alias("m")).collect()
+    }
+    assert got == {1: 3, 2: 5, 3: 4}
+
+
+def test_label_propagation_fires_no_jobs_during_build(spark, sf_dir):
+    """One ``label_propagation`` call (build plus a noop write) fires at
+    most 7 jobs and none while the frame is built: the customer
+    broadcast, round 1's shuffle by ``u``, round 2's by ``v``, the
+    community count's, the sort's sample and shuffle, and the write.
+    Nothing cuts the lineage. A join, count, pick and checkpoint per
+    round fired 15 here, 11 during build."""
+    import __spark_entry__ as m
+
+    read_table(spark, sf_dir, "customer")  # a table's first read infers its schema
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("lp_build", "lp_build")
+        df = m.queries()["label_propagation"](spark, sf_dir)
+        sc.setJobGroup("lp_exec", "lp_exec")
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    build = len(tracker.getJobIdsForGroup("lp_build"))
+    run = len(tracker.getJobIdsForGroup("lp_exec"))
+    assert build == 0
+    assert build + run <= 7

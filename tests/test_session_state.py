@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import glob
 import os
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -48,9 +50,12 @@ def _scratch_dirs():
 
 
 @pytest.mark.parametrize("name", sorted(CALLS))
-def test_call_leaves_session_as_found(spark, sf_dir, name):
+def test_call_leaves_session_as_found(spark, sf_dir, name, tmp_path, monkeypatch):
     """The call writes no conf and leaves no temporary view, function or
-    ``llspark_*`` scratch directory; its frame still runs afterwards."""
+    ``llspark_*`` scratch directory; its frame still runs afterwards.
+    The temp dir is the test's own, so only this call's directories
+    count."""
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     spark.conf.set(TZ, "America/New_York")
     try:
         entries, dirs = catalog_entries(spark), _scratch_dirs()
@@ -105,3 +110,31 @@ def test_generated_classes_survive_a_working_set_above_100(spark):
     run_counting(aggregate)
     assert run_counting(fillers) > 100
     assert run_counting(aggregate) == 0
+
+
+_CHILD = """
+import glob, os, sys, tempfile
+from pyspark.sql import SparkSession
+from lightlane_spark import queries_m5, queries_relational
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false").getOrCreate())
+for q in (queries_relational.q_json_sink_roundtrip, queries_m5.q_binary_file_scan):
+    assert q(spark, sys.argv[1]).count() > 0
+print(len(glob.glob(os.path.join(tempfile.gettempdir(), "llspark_*"))))
+spark.stop()
+"""
+
+
+def test_scratch_tables_removed_at_exit(sf_dir, tmp_path):
+    """A registry query's scratch table outlives the call, because the
+    frame it returns reads it, but not the process: a child that runs
+    two such queries leaves no ``llspark_*`` directory behind."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, TMPDIR=str(tmp_path), PYTHONPATH=root)
+    out = subprocess.run(
+        [sys.executable, "-c", _CHILD, sf_dir], env=env, cwd=str(tmp_path),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert int(out.stdout.split()[-1]) == 2  # both existed while it ran
+    assert not glob.glob(str(tmp_path / "llspark_*"))
