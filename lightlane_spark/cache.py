@@ -23,7 +23,7 @@ CacheManager keys cached data by canonicalized plan, not by the
 Python wrapper, so a garbage-collected wrapper would orphan the cache
 entry with no handle left to unpersist it.
 
-**Checkpoints.** Every iterative operator cuts its lineage through
+**Checkpoints.** Every lineage cut goes through
 :func:`tracked_checkpoint`, the one place in the package that calls
 ``checkpoint`` or ``localCheckpoint``. Both are lazy (``eager=False``):
 under AQE, building the frame still runs every shuffle and broadcast
@@ -41,6 +41,12 @@ stage below the cut; only the final stage waits for the next action.
   the blocks. Release the frame only after its last action: a released
   persist recomputes, but a frame built over a released (or lost)
   local checkpoint fails with ``CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND``.
+
+An operator cuts where a loop that runs to convergence would otherwise
+grow its plan (``connected_components``' rounds) or where a 10× A/B
+shows the cut pays. An operator with a fixed few rounds and no action
+between them (``kcore_peel``, ``label_propagation``) runs uncut, so
+losing blocks costs it a recompute, not the query.
 
 **Scratch directories.** A query that round-trips a table through
 files returns a lazy frame over them, so the files must outlive the

@@ -16,9 +16,13 @@ whose round count is the graph diameter.
 Scale notes (100 TB corpus => billions of pairs):
   - All state is the edge list itself — no driver-side structures;
     the per-round actions are a count + hash checksum (two scalars).
-  - Each round cuts lineage with ``cache.tracked_checkpoint`` so the
-    plan does not grow with iteration count (policy and lifecycle:
-    ``lightlane_spark.cache``, "Checkpoints").
+  - Each contraction round cuts lineage with
+    ``cache.tracked_checkpoint``, so the plan does not grow with the
+    round count (up to 25; policy and lifecycle:
+    ``lightlane_spark.cache``, "Checkpoints"). The other graph
+    operators here run a fixed few rounds and cut only where a 10×
+    A/B shows the cut pays: pagerank_integer its symmetrized edges,
+    triangle_count its edge set; kcore_peel runs uncut.
   - Near-dup graphs are overwhelmingly tiny cliques + isolated
     nodes; rounds-to-converge is 2-3 in practice. The iteration cap
     is a safety rail, not a tuning knob.
@@ -33,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from lightlane_spark.cache import tracked_checkpoint, tracked_persist
+from lightlane_spark.cache import tracked_checkpoint
 
 
 def _canonical_edges(edges: DataFrame, id_a: str, id_b: str) -> DataFrame:
@@ -160,8 +164,9 @@ def connected_components(
     """(id, component) for every node in ``edges``; component = min
     node id in the node's connected component.
 
-    Two regimes, chosen by the canonical edge COUNT (one cheap action
-    over the persisted edge set):
+    Two regimes, chosen by the canonical edge COUNT (one bounded
+    action over the edge set, which round 1 derives again above the
+    cap):
 
     - ``<= driver_edge_cap`` edges: collect and union-find on the
       driver (a bounded-size contract like the broadcast-small probe
@@ -186,9 +191,6 @@ def connected_components(
     else:
         canon = _canonical_edges(edges, id_a, id_b)
     if driver_edge_cap:
-        # kept (feeds the probe and, above the cap, the checkpoint); cold A/B sf0.1 local[4]:
-        # neardup_dedup on 1.54 s, off 1.53 s; semantic_dedup on 0.69 s, off 0.59 s
-        canon = canon.transform(tracked_persist)
         # ONE bounded action decides the regime AND fetches the edges
         # (r13, guide §1.2): the former count()-then-collect() pair
         # cost two full Catalyst passes over the same near-identical
@@ -200,7 +202,6 @@ def connected_components(
         rows = canon.limit(driver_edge_cap + 1).collect()
         if len(rows) <= driver_edge_cap:
             pairs = _driver_union_find(rows)
-            canon.unpersist()
             from lightlane_spark.sources.localrel import local_df
 
             # single-Arrow-batch local relation: the pickled-RDD
@@ -221,8 +222,6 @@ def connected_components(
         if cur == prev:
             break
         prev = cur
-    if driver_edge_cap:
-        canon.unpersist()  # round-1 checkpoint has materialized by now
     # Fixpoint edges are stars (root=u < leaf=v). Component of a leaf
     # is its root; roots (and only roots) never appear as v.
     leaves = e.select(F.col("v").alias("id"), F.col("u").alias("component"))
@@ -285,11 +284,15 @@ def pagerank_integer(
     (cross-engine float PageRank can't hash-match: double summation
     order differs).
 
-    Scale: one groupBy per iteration over the edge list (same shape
-    as connected_components rounds), checkpointed per iteration
-    (``lightlane_spark.cache``, "Checkpoints"). Floor rounding loses
-    < |V|·iterations micro-units of probability mass in total —
-    irrelevant for ranking at unit=1e12.
+    Scale: the symmetrized edge list is the one lineage cut
+    (``lightlane_spark.cache``, "Checkpoints"); every iteration reads
+    it. A node table ``(id, deg, __base)`` derives from it once, and
+    each iteration reads ``ranks`` ``(id, rank)`` once: one join and
+    one groupBy over the edge list, then a left join onto the node
+    table. The plan grows by that one step per iteration, so no
+    iteration is cut. Floor rounding loses < |V|·iterations
+    micro-units of probability mass in total — irrelevant for ranking
+    at unit=1e12.
     """
     sym = (
         symmetrize(
@@ -298,51 +301,42 @@ def pagerank_integer(
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        # kept: cold A/B sf0.1 local[4]: pagerank_neardup on 3.58 s, off 9.07 s
+        # kept: 10× A/B local[4]: pagerank_neardup on 3.62, 4.18, 3.75 s;
+        # off, the query runs out of memory broadcasting a join side
         .transform(tracked_checkpoint)
     )
-    deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    nodes = deg.select(F.col("src").alias("id"), "deg")
-    n_nodes = nodes.select(F.count(F.lit(1)).alias("__n"))
+    deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
+    n_nodes = F.broadcast(deg.select(F.count(F.lit(1)).alias("__n")))
     # base = (100 - d)% of unit / N, floor; start everyone at unit DIV N
-    ranks = (
-        nodes.join(F.broadcast(n_nodes))
-        .select(
-            "id",
-            "deg",
-            F.expr(f"CAST({unit} AS BIGINT) DIV __n").alias("rank"),
-            F.expr(
-                f"CAST({100 - damping_pct} AS BIGINT) * {unit} DIV (100 * __n)"
-            ).alias("__base"),
-        )
-        # kept (iteration 1 reads it twice); cold A/B sf0.1 local[4]: pagerank_neardup on 3.58 s, off 3.38 s
-        .transform(tracked_checkpoint)
+    nodes = deg.join(n_nodes).select(
+        "id",
+        "deg",
+        F.expr(
+            f"CAST({100 - damping_pct} AS BIGINT) * {unit} DIV (100 * __n)"
+        ).alias("__base"),
+    )
+    ranks = deg.join(n_nodes).select(
+        "id", F.expr(f"CAST({unit} AS BIGINT) DIV __n").alias("rank")
+    )
+    # each out-edge carries its source's degree, so an iteration reads
+    # ``ranks`` once: in the contribution join
+    out = sym.join(
+        nodes.select(F.col("id").alias("__s"), "deg"), F.col("src") == F.col("__s")
     )
     for _ in range(iterations):
-        contrib = (
-            sym.join(ranks.withColumnRenamed("id", "src"), on="src")
-            .select(
-                F.col("dst").alias("id"),
-                F.expr(f"rank * {damping_pct} DIV (100 * deg)").alias("c"),
+        inflow = (
+            out.join(
+                ranks.select(F.col("id").alias("__r"), "rank"),
+                F.col("src") == F.col("__r"),
             )
-            .groupBy("id")
-            .agg(F.sum("c").alias("inflow"))
+            .groupBy(F.col("dst").alias("__i"))
+            .agg(F.sum(F.expr(f"rank * {damping_pct} DIV (100 * deg)")).alias("inflow"))
         )
-        ranks = (
-            ranks.drop("rank")
-            .join(contrib, on="id", how="left")
-            .select(
-                "id",
-                "deg",
-                "__base",
-                (F.col("__base") + F.coalesce(F.col("inflow"), F.lit(0))).alias(
-                    "rank"
-                ),
-            )
-            # kept: cold A/B sf0.1 local[4]: pagerank_neardup on 3.58 s, off 4.07 s
-            .transform(tracked_checkpoint)
+        ranks = nodes.join(inflow, F.col("id") == F.col("__i"), "left").select(
+            "id",
+            (F.col("__base") + F.coalesce(F.col("inflow"), F.lit(0))).alias("rank"),
         )
-    return ranks.select("id", "rank")
+    return ranks
 
 
 def triangle_count(
@@ -369,12 +363,15 @@ def triangle_count(
     The canonical edge set is read three times (both wedge sides +
     the closure probe); it is checkpointed once
     (``lightlane_spark.cache``, "Checkpoints") so an expensive
-    upstream derivation (MinHash→verify) never re-runs per consumer.
+    upstream derivation (MinHash→verify) never re-runs per consumer:
+    on the 10× corpus the query runs in about two thirds of the time
+    it takes uncut.
     """
     e = (
         edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .distinct()
-        # kept: cold A/B sf0.1 local[4]: triangle_count on 2.35 s, off 4.14 s
+        # kept: 10× A/B local[4], best on/off: triangle_count 3.30/5.42,
+        # 3.08/4.84, 3.22/4.96 s
         .transform(tracked_checkpoint)
     )
     wedges = e.join(
@@ -427,15 +424,12 @@ def kcore_peel(
     rows in one window partition — the same skew profile as the
     degree groupBy it replaces.
 
-    Each round is checkpointed (``lightlane_spark.cache``,
-    "Checkpoints"), and so is the INITIAL long relation, so a
-    MinHash→verify upstream chain runs once, not per consumer. Returns
-    surviving ``(id, deg)`` — degree measured in the peeled graph."""
+    Nothing is cut: no action runs between rounds, so the whole peel
+    is one plan that reads the edge set once (cuts lost a 10× A/B).
+    Returns surviving ``(id, deg)`` — degree measured in the peeled
+    graph."""
     e = edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).distinct()
-    # kept: cold A/B sf0.1 local[4]: kcore_peel on 2.94 s, off 3.30 s
-    long = e.select(
-        "a", "b", F.explode(F.array("a", "b")).alias("id")
-    ).transform(tracked_checkpoint)
+    long = e.select("a", "b", F.explode(F.array("a", "b")).alias("id"))
     for _ in range(rounds):
         long = (
             long.withColumn(
@@ -446,8 +440,6 @@ def kcore_peel(
             )
             .filter(F.col("mindeg") >= k)
             .drop("deg", "mindeg")
-            # kept: cold A/B sf0.1 local[4]: kcore_peel on 2.94 s, off 3.45 s
-            .transform(tracked_checkpoint)
         )
     return long.groupBy("id").agg(
         F.count(F.lit(1)).cast("bigint").alias("deg")

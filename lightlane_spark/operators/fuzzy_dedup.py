@@ -357,6 +357,43 @@ def jaccard_verify(
     )
 
 
+def _minhash_verified_pairs(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    num_hashes: int,
+    bands: int,
+    threshold: float,
+    max_bucket_size: int,
+    pair_filter: Column | None = None,
+) -> DataFrame:
+    """The MinHash chain both near-dup operators share: shingle →
+    signature → band keys → buckets → candidate pairs → Jaccard
+    verify. ``pair_filter`` narrows the candidate pairs BEFORE the
+    verifier, so it only pays for pairs that can reach the output.
+
+    Map-only (multiset) shingles: min over a multiset equals min over
+    the set, so signatures skip the full-corpus distinct shuffle; the
+    verifier set-ifies only candidate-pair documents. Persisted, not
+    unpersisted here: the returned plan is lazy, so lifecycle is the
+    caller's (cache.unpersist_all / cache.cache_scope).
+    """
+    # kept: 10× A/B local[4], best on/off: minhash_lsh_pairs 3.14/3.94,
+    # 3.38/3.97, 3.58/3.99 s (minhash_join within spread)
+    sh = shingle(df, text_col, id_col, k, distinct=False).transform(tracked_persist)
+    sig = minhash_signature_arrays(sh, id_col, num_hashes)
+    keys = lsh_band_keys(sig, id_col, bands, num_hashes // bands)
+    # kept: 10× A/B local[4], best on/off: minhash_lsh_pairs 3.14/4.69,
+    # 3.38/4.68, 3.58/5.09 s; minhash_join 2.65/3.69, 2.85/3.74, 2.56/3.72 s
+    buckets = lsh_buckets(keys, id_col).transform(tracked_persist)
+    cand = _pairs_from_buckets(buckets, max_bucket_size)
+    if pair_filter is not None:
+        cand = cand.where(pair_filter)
+    ids = bucket_candidate_ids(buckets, id_col, max_bucket_size)
+    return jaccard_verify(cand, sh, id_col, threshold, cand_ids=ids)
+
+
 def dedup_minhash(
     df: DataFrame,
     text_col: str = "text",
@@ -370,24 +407,10 @@ def dedup_minhash(
 
     b=4, r=4 → LSH s-curve threshold (1/b)^(1/r) ≈ 0.71, matched to
     the default verify threshold.
-
-    The shingle set feeds both the signature path and the Jaccard
-    verifier — persisted so the tokenize+distinct shuffle runs once.
     """
-    # Map-only (multiset) shingles: min over a multiset equals min over
-    # the set, so signatures skip the full-corpus distinct shuffle; the
-    # verifier set-ifies only candidate-pair documents. Persisted, not
-    # unpersisted here: the returned plan is lazy, so lifecycle is the
-    # caller's (cache.unpersist_all / cache.cache_scope).
-    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 1.66 s, off 1.89 s
-    sh = shingle(df, text_col, id_col, k, distinct=False).transform(tracked_persist)
-    sig = minhash_signature_arrays(sh, id_col, num_hashes)
-    keys = lsh_band_keys(sig, id_col, bands, num_hashes // bands)
-    # kept (off reruns the signatures per consumer); cold A/B sf0.1 local[4]: on 1.38 s, off 1.57 s
-    buckets = lsh_buckets(keys, id_col).transform(tracked_persist)
-    cand = _pairs_from_buckets(buckets, max_bucket_size=1000)
-    ids = bucket_candidate_ids(buckets, id_col, max_bucket_size=1000)
-    return jaccard_verify(cand, sh, id_col, threshold, cand_ids=ids)
+    return _minhash_verified_pairs(
+        df, text_col, id_col, k, num_hashes, bands, threshold, 1000
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -602,13 +625,13 @@ def minhash_join(
     vendor feed vs master catalog) WITHOUT the O(|L|·|R|) similarity
     join a naive formulation needs.
 
-    Implementation: both sides enter the SAME banding pipeline as
+    Implementation: both sides enter the SAME MinHash chain as
     ``dedup_minhash`` under a parity-disjoint id embedding
     (left → 2·id, right → 2·id+1 — caller ids may overlap freely;
     ids must fit 62 bits), then only cross-parity verified pairs are
     kept and mapped back. Reusing the self-join machinery means the
-    same scale guarantees apply verbatim: one persisted shingle
-    relation, bucket-local candidate expansion with Σ|bucket|² capped,
+    same scale guarantees apply verbatim: persisted shingle and bucket
+    relations, bucket-local candidate expansion with Σ|bucket|² capped,
     verification touching candidate docs only. Within-corpus duplicate
     pairs are computed-and-discarded rather than avoided — at the
     bucket level the cross-pair share is the product distribution,
@@ -617,28 +640,21 @@ def minhash_join(
     """
     lft = left.select((F.col(id_col) * 2).alias(id_col), F.col(text_col))
     rgt = right.select((F.col(id_col) * 2 + 1).alias(id_col), F.col(text_col))
-    corpus = lft.unionByName(rgt)
-    # kept (off re-reads documents); cold A/B sf0.1 local[4]: on 1.40 s, off 1.62 s
-    sh = shingle(corpus, text_col, id_col, k, distinct=False).transform(tracked_persist)
-    sig = minhash_signature_arrays(sh, id_col, num_hashes)
-    keys = lsh_band_keys(sig, id_col, bands, num_hashes // bands)
-    buckets = lsh_buckets(keys, id_col)
     # Cross-parity filter applied BEFORE verification (not after):
     # same-parity pairs are within-corpus duplicates this operator
     # discards by contract, and filtering candidates is a map-side
     # WHERE with no exchange — the verifier's set-collect join then
     # touches only pairs that can appear in the output (the r4→r6
     # form verified everything and filtered at the end, paying the
-    # two set joins + intersect for pairs it was about to drop).
-    cand = _pairs_from_buckets(buckets, max_bucket_size=max_bucket_size).where(
-        (F.col("id_a") + F.col("id_b")) % 2 == 1
+    # two set joins + intersect for pairs it was about to drop). The
+    # verifier's candidate-doc list stays bucket-derived (a superset
+    # of the cross-parity docs): it only gates a semi-join, and the
+    # exact set would cost the distinct the bucket-array form avoids.
+    cross = _minhash_verified_pairs(
+        lft.unionByName(rgt), text_col, id_col, k, num_hashes, bands,
+        threshold, max_bucket_size,
+        pair_filter=(F.col("id_a") + F.col("id_b")) % 2 == 1,
     )
-    # ids stays bucket-derived (a superset of the cross-parity docs):
-    # it only gates the verifier's semi-join, and deriving the exact
-    # set from the filtered pairs would cost the distinct the
-    # bucket-array form exists to avoid.
-    ids = bucket_candidate_ids(buckets, id_col, max_bucket_size=max_bucket_size)
-    cross = jaccard_verify(cand, sh, id_col, threshold, cand_ids=ids)
     even = F.when(F.col("id_a") % 2 == 0, F.col("id_a")).otherwise(F.col("id_b"))
     odd = F.when(F.col("id_a") % 2 == 1, F.col("id_a")).otherwise(F.col("id_b"))
     # shiftright, not /2: float division loses exactness past 2^53

@@ -1227,7 +1227,9 @@ def bpe_train(
             "toks",
             F.expr("transform(sequence(1, length(w)), i -> substring(w, i, 1))"),
         )
-        # kept: cold A/B sf0.1 local[4]: bpe_train on 0.59 s, off 0.65 s
+        # kept, the one cut: every round's top-1 action re-derives the
+        # vocabulary without it. 10× A/B local[4], best this cut alone /
+        # no cut: bpe_train 0.47/0.79, 0.44/0.70, 0.47/0.75 s
         .transform(tracked_checkpoint)
     )
     spark = df.sparkSession
@@ -1279,10 +1281,7 @@ def bpe_train(
         fin = lambda acc: F.when(  # noqa: E731
             acc["prev"].isNull(), acc["out"]
         ).otherwise(F.array_append(acc["out"], acc["prev"]))
-        # kept: cold A/B sf0.1 local[4]: bpe_train on 0.59 s, off 0.61 s
-        words = words.withColumn(
-            "toks", F.aggregate("toks", zero, step, fin)
-        ).transform(tracked_checkpoint)
+        words = words.withColumn("toks", F.aggregate("toks", zero, step, fin))
     # single-Arrow-batch local relation (sources/localrel.py): the
     # classic createDataFrame(list) parallelizes even this 3-row
     # merge table over one slice per core — measured 0.4 s of the

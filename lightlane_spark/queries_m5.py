@@ -607,9 +607,11 @@ def _neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph family — clusters, dedup, leakage-safe split, PageRank,
     triangles, k-core. One definition (MinHash→LSH→Jaccard-verify at
     0.7 over the dup fixture) so every family member analyzes the
-    IDENTICAL graph, and the iterative consumers' input checkpoint
-    (``cache.tracked_checkpoint`` in clustering.py) amortizes the
-    expensive derivation instead of re-running it per read."""
+    IDENTICAL graph. The derivation's shingle and bucket persists
+    (fuzzy_dedup.py) hold its two shared intermediates; a consumer
+    that reads the edges more than once cuts them
+    (``cache.tracked_checkpoint`` in pagerank_integer and
+    triangle_count), so the derivation runs once, not per read."""
     return dedup_minhash(_docs_with_dups(spark, sf_dir), threshold=0.7).select(
         "id_a", "id_b"
     )

@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import datetime as dt
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -18,11 +17,11 @@ from lightlane_spark.loaders.dataskip import (
 from lightlane_spark.sources.parquet import read_table
 
 
-def test_pruned_scan_matches_full_filter_and_prunes(spark, sf_dir):
+def test_pruned_scan_matches_full_filter_and_prunes(spark, sf_dir, tmp_path):
     li = read_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", "l_quantity"
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_skip_"), "li")
+    path = str(tmp_path / "li")
     manifest = write_with_stats(li, path, ["l_shipdate"], num_files=8)
     assert len(manifest) == 8
     assert os.path.exists(os.path.join(path, MANIFEST))
@@ -46,9 +45,9 @@ def test_pruned_scan_matches_full_filter_and_prunes(spark, sf_dir):
     assert got == want and len(got) > 0
 
 
-def test_pruned_scan_empty_range_returns_empty_with_schema(spark, sf_dir):
+def test_pruned_scan_empty_range_returns_empty_with_schema(spark, sf_dir, tmp_path):
     li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_skip0_"), "li")
+    path = str(tmp_path / "li")
     write_with_stats(li, path, ["l_shipdate"], num_files=4)
     out = pruned_scan(
         spark, path, "l_shipdate", dt.date(2099, 1, 1), dt.date(2099, 12, 31)
@@ -57,24 +56,21 @@ def test_pruned_scan_empty_range_returns_empty_with_schema(spark, sf_dir):
     assert out.count() == 0
 
 
-def test_int_column_stats(spark):
+def test_int_column_stats(spark, tmp_path):
     df = spark.range(0, 10_000).select(F.col("id").alias("k"))
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_skipint_"), "t")
+    path = str(tmp_path / "t")
     write_with_stats(df, path, ["k"], num_files=10)
     keep, total = pruned_files(path, "k", 2500, 2600)
     assert total == 10 and len(keep) <= 2
     assert pruned_scan(spark, path, "k", 2500, 2600).count() == 101
 
 
-def test_zorder_layout_gives_multi_column_pruning(spark):
+def test_zorder_layout_gives_multi_column_pruning(spark, tmp_path):
     """Z-order + manifest = file skipping on EITHER dimension: after
     zorder_repartition on (x, y), per-file min/max envelopes are tight
     on both columns, so a manifest range scan prunes files for an
     x-only OR a y-only predicate — the multi-dim promise of
     layout.py made measurable at the file level."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from lightlane_spark.operators.layout import zorder_repartition
@@ -84,7 +80,7 @@ def test_zorder_layout_gives_multi_column_pruning(spark):
         (F.col("id") % 200).alias("x"),
         ((F.col("id") * 7919) % 200).alias("y"),
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_zskip_"), "t")
+    path = str(tmp_path / "t")
     laid = zorder_repartition(df, [("x", 0, 199), ("y", 0, 199)], 16, bits=8)
     # write via write_with_stats' manifest path but keep the z layout:
     # stats-collect on both columns without re-partitioning
@@ -100,12 +96,9 @@ def test_zorder_layout_gives_multi_column_pruning(spark):
     assert len(keep_y) <= total // 2, (len(keep_y), total)
 
 
-def test_multi_column_conjunctive_pruning_on_zorder(spark):
+def test_multi_column_conjunctive_pruning_on_zorder(spark, tmp_path):
     """Two-range predicate over a Z-ordered layout: survivors ≈ the
     product of per-column survival, and the scan equals the filter."""
-    import os
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from lightlane_spark.loaders.dataskip import (
@@ -120,7 +113,7 @@ def test_multi_column_conjunctive_pruning_on_zorder(spark):
         (F.col("id") % 200).alias("x"),
         ((F.col("id") * 7919) % 200).alias("y"),
     )
-    path = os.path.join(tempfile.mkdtemp(prefix="llspark_zskip2_"), "t")
+    path = str(tmp_path / "t")
     zorder_repartition(df, [("x", 0, 199), ("y", 0, 199)], 16, bits=8).write.mode(
         "overwrite"
     ).parquet(path)

@@ -661,10 +661,9 @@ def test_association_rules_single_fact_scan(spark, sf_dir):
 
 
 def test_minhash_documents_scans_pinned(spark, sf_dir):
-    """dedup_minhash no longer persists its candidate pairs, nor
-    minhash_join its buckets; the documents scan counts stay at what
-    they were with those persists, so a removed persist can never
-    bring back a repeated corpus scan."""
+    """The MinHash chain no longer persists its candidate pairs; the
+    documents scan counts stay at what they were with that persist, so
+    a removed persist can never bring back a repeated corpus scan."""
     import __spark_entry__ as m
     from lightlane_spark.cache import unpersist_all
 
@@ -730,3 +729,30 @@ def test_label_propagation_fires_no_jobs_during_build(spark, sf_dir):
     run = len(tracker.getJobIdsForGroup("lp_exec"))
     assert build == 0
     assert build + run <= 7
+
+
+def test_pagerank_neardup_job_count(spark, sf_dir):
+    """One ``pagerank_neardup`` call (build plus a noop write) fires
+    at most 33 jobs. Only the symmetrized edge list is cut; a static node
+    table carries each node's degree and base rank, and every iteration
+    reads the ranks once. Cutting the initial ranks and every
+    iteration's ranks as well fired 39 here."""
+    import __spark_entry__ as m
+    from lightlane_spark.cache import unpersist_all
+
+    read_table(spark, sf_dir, "documents")  # a table's first read infers its schema
+    unpersist_all()  # a cached chain from an earlier test would skip jobs
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("pr_build", "pr_build")
+        df = m.queries()["pagerank_neardup"](spark, sf_dir)
+        sc.setJobGroup("pr_exec", "pr_exec")
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+        unpersist_all()
+    tracker = sc.statusTracker()
+    build = len(tracker.getJobIdsForGroup("pr_build"))
+    run = len(tracker.getJobIdsForGroup("pr_exec"))
+    assert build + run <= 33, (build, run)

@@ -116,18 +116,16 @@ def test_streaming_merge_upserts(spark, tmp_path):
     assert rows == {1: ("old", 1), 2: ("new", 2), 3: ("dup-late", 3)}
 
 
-def test_sliding_window_counts(spark):
+def test_sliding_window_counts(spark, tmp_path):
     """Sliding windows: a 2h window sliding hourly puts each event in
     exactly 2 windows; counts must double-count accordingly."""
-    import tempfile
-
     from lightlane_spark.streaming.incremental import (
         run_to_completion,
         stream_from_directory,
         windowed_counts,
     )
 
-    base = tempfile.mkdtemp(prefix="llspark_slide_")
+    base = str(tmp_path)
     df = spark.createDataFrame(
         [(1, "2024-01-01 00:30:00"), (2, "2024-01-01 01:30:00")],
         "id bigint, ts_s string",

@@ -4,8 +4,6 @@ corpus from earlier batches."""
 
 from __future__ import annotations
 
-import tempfile
-
 from lightlane_spark.streaming.incremental import (
     run_to_completion,
     stream_from_directory,
@@ -26,8 +24,8 @@ BATCH2 = [
 ]
 
 
-def test_streaming_neardup_ingest(spark):
-    base = tempfile.mkdtemp(prefix="llspark_ndstream_")
+def test_streaming_neardup_ingest(spark, tmp_path):
+    base = str(tmp_path)
     land, corpus, index, ckpt = (
         f"{base}/landing",
         f"{base}/corpus",

@@ -5,8 +5,6 @@ reprocess (the foundation of incremental exactly-once ingest)."""
 
 from __future__ import annotations
 
-import tempfile
-
 from lightlane_spark.streaming.incremental import (
     run_to_completion,
     stream_from_directory,
@@ -30,8 +28,8 @@ def _run_once(spark, land, out, ckpt):
     run_to_completion(q)
 
 
-def test_restart_processes_only_new_files(spark):
-    base = tempfile.mkdtemp(prefix="llspark_restart_")
+def test_restart_processes_only_new_files(spark, tmp_path):
+    base = str(tmp_path)
     land, out, ckpt = f"{base}/landing", f"{base}/out", f"{base}/ckpt"
 
     spark.createDataFrame([(1, "first"), (2, "second")], SCHEMA).coalesce(1).write.mode(

@@ -17,8 +17,11 @@ A name of the form ``module:function`` times that callable
 
 Every arm runs twice in mirrored order (on, off, off2, on2; one-site
 arms sit inside the same mirror) and arms compare best against best, so
-neither a tie nor drift reads as a win for either side. One untimed
-call of the first query warms the JVM before any arm is timed.
+neither a tie nor drift reads as a win for either side. An arm's spread
+is the range of its two runs; a site WINS only when best-on beats
+best-off by more than the larger of the on and off spreads, else it
+LOSES. A site whose off arm fails the query WINS. One untimed call of
+the first query warms the JVM before any arm is timed.
 
 Prints a table; exits 0 always (measurement tool, not a gate).
 """
@@ -27,6 +30,7 @@ from __future__ import annotations
 
 import importlib
 import inspect
+import math
 import os
 import pkgutil
 import sys
@@ -118,23 +122,35 @@ def main() -> None:
         _DISABLED.clear()
         _DISABLED.update(disabled)
         times = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
+
+        def once() -> None:
             # noop sink, not count(): count() prunes every output
             # column, so the persist-OFF arm would skip projections
             # the persist-ON arm materializes into the cache
             _resolve(name, qs)(spark, os.environ.get(
                 "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
             )).write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
-            # Spark's cache lookup is PLAN-based: a rebuilt identical
-            # plan in reps 2-3 of the persist-ON arm would hit rep 1's
-            # cached data while the OFF arm never caches — clearing
-            # per rep keeps every rep cold so the arms are comparable
-            # (r6 ADVICE). unpersist_all also frees the local
-            # checkpoints' blocks.
-            cache.unpersist_all()
-            spark.catalog.clearCache()
+
+        for _ in range(reps):
+            t0 = time.perf_counter()
+            try:
+                once()
+                times.append(time.perf_counter() - t0)
+            except Exception as e:
+                if not disabled:
+                    raise
+                # the query cannot run without these sites: they stay
+                print(f"  off{sorted(disabled)} FAILED: {str(e).splitlines()[0][:160]}")
+                return math.inf, math.inf
+            finally:
+                # Spark's cache lookup is PLAN-based: a rebuilt identical
+                # plan in reps 2-3 of the persist-ON arm would hit rep 1's
+                # cached data while the OFF arm never caches — clearing
+                # per rep keeps every rep cold so the arms are comparable
+                # (r6 ADVICE). unpersist_all also frees the local
+                # checkpoints' blocks.
+                cache.unpersist_all()
+                spark.catalog.clearCache()
         return min(times), times[0]
 
     # untimed warm-up: the JVM's first-call cost would otherwise land
@@ -152,25 +168,35 @@ def main() -> None:
         second = {a: run(name, set(a)) for a in reversed(arms)}
         on2, _ = run(name, set())
         best_on = min(on, on2)
+        on_spread = abs(on - on2)
 
         def verdict(arm: frozenset) -> str:
-            best_off = min(first[arm][0], second[arm][0])
-            # a tie reads as LOSES: a persist that does not pay goes
-            return "persist WINS" if best_on < best_off else "persist LOSES"
+            a, b = first[arm][0], second[arm][0]
+            if math.inf in (a, b):
+                return "-> site WINS (off arm failed)"
+            spread = max(on_spread, abs(a - b))
+            # a site stays only if its on arm beats off by more than the
+            # larger arm's spread; a tie or a gap inside the noise LOSES
+            wins = min(a, b) - best_on > spread
+            return (
+                f"spread(on/off)={on_spread:.3f}/{abs(a - b):.3f}s"
+                f"  -> site {'WINS' if wins else 'LOSES'}"
+            )
 
         off, off_cold = first[arms[0]]
         off2 = second[arms[0]][0]
         print(
             f"\n{name}: on={on:.3f}s  off={off:.3f}s  off2={off2:.3f}s"
             f"  on2={on2:.3f}s  best(on/off)={best_on:.3f}/{min(off, off2):.3f}s"
-            f"  cold(on/off)={on_cold:.3f}/{off_cold:.3f}s  -> {verdict(arms[0])}"
+            f"  cold(on/off)={on_cold:.3f}/{off_cold:.3f}s  {verdict(arms[0])}"
         )
         print(f"  sites: {sites}")
         for arm in arms[1:]:
             (s,) = arm
             print(
                 f"  off[{s}]: {first[arm][0]:.3f}s / {second[arm][0]:.3f}s"
-                f"  -> {verdict(arm)}"
+                f"  best(on/off)={best_on:.3f}/{min(first[arm][0], second[arm][0]):.3f}s"
+                f"  {verdict(arm)}"
             )
     print(f"\nloadavg at end: {os.getloadavg()}")
 
