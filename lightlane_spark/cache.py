@@ -2,13 +2,13 @@
 This module is the one holder of state that outlives a single call.
 
 **Cache registry.** Several operators persist an intermediate that is
-read more than once (shingle relations, LSH buckets, fan-out inputs).
-Each site is deliberately NOT unpersisted inline: the returned plan is
-lazy, so an eager unpersist would empty the cache before the caller's
-action ever runs. That leaves lifecycle management to the caller — and
-a user composing many queries in one long-lived session would otherwise
-accumulate corpus-sized cached frames until LRU eviction / GC pressure
-does the cleanup for them.
+read more than once (SimHash signatures, CDC change sets, fan-out
+inputs). Each site is deliberately NOT unpersisted inline: the returned
+plan is lazy, so an eager unpersist would empty the cache before the
+caller's action ever runs. That leaves lifecycle management to the
+caller — and a user composing many queries in one long-lived session
+would otherwise accumulate corpus-sized cached frames until LRU
+eviction / GC pressure does the cleanup for them.
 
 - every library persist goes through :func:`tracked_persist`, which
   registers the frame in the module-level registry ``_TRACKED``;
@@ -156,7 +156,7 @@ def cache_scope() -> Iterator[None]:
     entries registered while it was open.
 
     >>> with cache_scope():
-    ...     dedup_minhash(docs).count()   # persists shingles/buckets
+    ...     simhash_near_pairs(sigs).count()   # persists the signatures
     ... # exiting: those frames are unpersisted, the session is clean
     """
     if not hasattr(_SCOPES, "stack"):

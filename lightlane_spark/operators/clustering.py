@@ -301,8 +301,8 @@ def pagerank_integer(
         .select(F.col("u").alias("src"), F.col("v").alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        # kept: 10× A/B local[4]: pagerank_neardup on 3.62, 4.18, 3.75 s;
-        # off, the query runs out of memory broadcasting a join side
+        # kept: 10× A/B local[4], best on/off: pagerank_neardup 3.66/8.46,
+        # 3.80/9.00, 3.61/9.07 s
         .transform(tracked_checkpoint)
     )
     deg = sym.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("deg"))
@@ -370,8 +370,8 @@ def triangle_count(
     e = (
         edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
         .distinct()
-        # kept: 10× A/B local[4], best on/off: triangle_count 3.30/5.42,
-        # 3.08/4.84, 3.22/4.96 s
+        # kept: 10× A/B local[4], best on/off: triangle_count 2.97/3.80,
+        # 3.06/3.40, 2.90/3.33 s
         .transform(tracked_checkpoint)
     )
     wedges = e.join(

@@ -257,7 +257,8 @@ def _pairs_from_buckets(buckets: DataFrame, max_bucket_size: int | None) -> Data
 def lsh_buckets(band_keys: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(band, band_sig, ids): each bucket's sorted member-id array —
     the shared intermediate for pair expansion AND candidate-id
-    derivation (persist it to pay the bucket shuffle once)."""
+    derivation; both read one bucket exchange, which the executed plan
+    reuses, so the bucket shuffle is paid once without a persist."""
     return band_keys.groupBy("band", "band_sig").agg(
         F.array_sort(F.collect_list(F.col(id_col))).alias("ids")
     )
@@ -375,18 +376,20 @@ def _minhash_verified_pairs(
 
     Map-only (multiset) shingles: min over a multiset equals min over
     the set, so signatures skip the full-corpus distinct shuffle; the
-    verifier set-ifies only candidate-pair documents. Persisted, not
-    unpersisted here: the returned plan is lazy, so lifecycle is the
-    caller's (cache.unpersist_all / cache.cache_scope).
+    verifier set-ifies only candidate-pair documents.
+
+    Nothing is persisted, so the chain leaves no session state for
+    the caller to release: the bucket aggregate feeds both the pair
+    expansion and the candidate-id list through one exchange that the
+    executed plan reuses (``ReusedExchange``), and the verifier
+    re-derives the map-only shingles from the scan. Persisting the
+    shingles and buckets ran the chain's consumers slower on a 10×
+    corpus (CHANGES.md).
     """
-    # kept: 10× A/B local[4], best on/off: minhash_lsh_pairs 3.14/3.94,
-    # 3.38/3.97, 3.58/3.99 s (minhash_join within spread)
-    sh = shingle(df, text_col, id_col, k, distinct=False).transform(tracked_persist)
+    sh = shingle(df, text_col, id_col, k, distinct=False)
     sig = minhash_signature_arrays(sh, id_col, num_hashes)
     keys = lsh_band_keys(sig, id_col, bands, num_hashes // bands)
-    # kept: 10× A/B local[4], best on/off: minhash_lsh_pairs 3.14/4.69,
-    # 3.38/4.68, 3.58/5.09 s; minhash_join 2.65/3.69, 2.85/3.74, 2.56/3.72 s
-    buckets = lsh_buckets(keys, id_col).transform(tracked_persist)
+    buckets = lsh_buckets(keys, id_col)
     cand = _pairs_from_buckets(buckets, max_bucket_size)
     if pair_filter is not None:
         cand = cand.where(pair_filter)
@@ -630,13 +633,16 @@ def minhash_join(
     (left → 2·id, right → 2·id+1 — caller ids may overlap freely;
     ids must fit 62 bits), then only cross-parity verified pairs are
     kept and mapped back. Reusing the self-join machinery means the
-    same scale guarantees apply verbatim: persisted shingle and bucket
-    relations, bucket-local candidate expansion with Σ|bucket|² capped,
-    verification touching candidate docs only. Within-corpus duplicate
-    pairs are computed-and-discarded rather than avoided — at the
-    bucket level the cross-pair share is the product distribution,
-    and the alternative (a second keyed exchange to segregate sides)
-    costs more than the discarded expansions under the bucket cap.
+    same scale guarantees apply verbatim: one bucket exchange shared by
+    pair expansion and the candidate-id list, bucket-local candidate
+    expansion with Σ|bucket|² capped, verification touching candidate
+    docs only. Nothing is persisted, so the shingles feed two
+    exchanges and the executed plan reads each side's scan twice.
+    Within-corpus duplicate pairs are computed-and-discarded rather
+    than avoided — at the bucket level the cross-pair share is the
+    product distribution, and the alternative (a second keyed
+    exchange to segregate sides) costs more than the discarded
+    expansions under the bucket cap.
     """
     lft = left.select((F.col(id_col) * 2).alias(id_col), F.col(text_col))
     rgt = right.select((F.col(id_col) * 2 + 1).alias(id_col), F.col(text_col))

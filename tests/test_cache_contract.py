@@ -17,7 +17,7 @@ import pytest
 
 from lightlane_spark import cache
 from lightlane_spark.operators import clustering
-from lightlane_spark.operators.fuzzy_dedup import dedup_minhash
+from lightlane_spark.operators.fuzzy_dedup import simhash_near_pairs, simhash_signatures
 
 
 def _n_cached_rdds(spark) -> int:
@@ -42,6 +42,12 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id: bigint, text: string")
 
 
+def _near_pairs(docs):
+    """A library call that persists: ``simhash_near_pairs`` pins its
+    signature relation, which both self-join sides read."""
+    return simhash_near_pairs(simhash_signatures(docs))
+
+
 def test_cache_scope_releases_library_persists(spark, docs):
     spark.catalog.clearCache()
     cache.unpersist_all()
@@ -52,9 +58,9 @@ def test_cache_scope_releases_library_persists(spark, docs):
     # survives it
     baseline = _n_cached_rdds(spark)
     with cache.cache_scope():
-        dedup_minhash(docs).count()  # persists shingles/buckets
+        _near_pairs(docs).count()  # persists the signatures
         assert not _cache_manager_empty(spark), (
-            "dedup_minhash should persist intermediates inside the scope"
+            "simhash_near_pairs should persist its signatures inside the scope"
         )
     assert _cache_manager_empty(spark), (
         "cache_scope exit must release every library persist"
@@ -65,10 +71,11 @@ def test_cache_scope_releases_library_persists(spark, docs):
 def test_unpersist_all_releases_and_reports(spark, docs):
     spark.catalog.clearCache()
     cache.unpersist_all()
-    dedup_minhash(docs).count()
+    _near_pairs(docs).count()
+    _near_pairs(docs.filter("doc_id % 2 = 0")).count()
     assert not _cache_manager_empty(spark)
     released = cache.unpersist_all()
-    assert released >= 2  # shingles + buckets
+    assert released >= 2  # one signature relation per call
     assert _cache_manager_empty(spark)
     # idempotent: nothing tracked, nothing released
     assert cache.unpersist_all() == 0
@@ -80,7 +87,7 @@ def test_scope_does_not_touch_caller_persists(spark, docs):
     mine = docs.select("doc_id", F.length("text").alias("n")).persist()
     mine.count()
     with cache.cache_scope():
-        dedup_minhash(docs).count()
+        _near_pairs(docs).count()
     assert not _cache_manager_empty(spark), (
         "caller-owned persist must survive a library cache_scope"
     )
@@ -123,7 +130,7 @@ def test_fresh_queries_run_leaves_no_cache_under_scope(spark, sf_dir):
     cache.unpersist_all()
     baseline = _n_cached_rdds(spark)  # test-owned local checkpoints linger
     with cache.cache_scope():
-        for name in ("minhash_lsh_pairs", "mutual_information"):
+        for name in ("simhash_near_pairs", "mutual_information"):
             qs[name](spark, sf_dir).count()
     assert _cache_manager_empty(spark)
     assert _n_cached_rdds(spark) <= baseline

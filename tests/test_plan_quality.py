@@ -127,9 +127,9 @@ def test_zorder_repartition_single_exchange(spark, sf_dir):
 
 
 def test_dedup_minhash_candidate_ids_no_extra_exchange(spark, sf_dir):
-    """The verifier's candidate-id list derives from the cached bucket
-    arrays: adding it to the plan must not add an exchange beyond the
-    pair path itself (a pairs-derived distinct would add four)."""
+    """The verifier's candidate-id list derives from the bucket arrays:
+    adding it to the plan must not add an exchange beyond the pair path
+    itself (a pairs-derived distinct would add four)."""
     from lightlane_spark.operators.fuzzy_dedup import (
         _pairs_from_buckets,
         bucket_candidate_ids,
@@ -139,12 +139,8 @@ def test_dedup_minhash_candidate_ids_no_extra_exchange(spark, sf_dir):
         minhash_signature_arrays,
         shingle,
     )
-    from lightlane_spark.cache import unpersist_all
     from lightlane_spark.sources.parquet import read_table
 
-    # an earlier dedup_minhash leaves this shingle relation cached,
-    # which would hide its exchanges from the count
-    unpersist_all()
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
     sh = shingle(docs, distinct=False)
     buckets = lsh_buckets(lsh_band_keys(minhash_signature_arrays(sh)))
@@ -660,21 +656,46 @@ def test_association_rules_single_fact_scan(spark, sf_dir):
     assert "CartesianProduct" not in ps.text
 
 
+def _final_plan(df) -> str:
+    """The executed plan after ``collect`` (an action on the frame's
+    own query execution), with every adaptive plan's "Initial Plan"
+    section cut: the final plans only, where a ReusedExchange stands
+    in for a repeated exchange subtree."""
+    df.collect()
+    text = df._jdf.queryExecution().executedPlan().toString()
+    kept, skip_below = [], None
+    for line in text.splitlines():
+        depth = len(line) - len(line.lstrip(" :+-|"))
+        if skip_below is not None and depth >= skip_below:
+            continue
+        skip_below = None
+        if "== Initial Plan ==" in line:
+            skip_below = depth
+            continue
+        kept.append(line)
+    return "\n".join(kept)
+
+
 def test_minhash_documents_scans_pinned(spark, sf_dir):
-    """The MinHash chain no longer persists its candidate pairs; the
-    documents scan counts stay at what they were with that persist, so
-    a removed persist can never bring back a repeated corpus scan."""
+    """The MinHash chain persists nothing. What runs reads ``documents``
+    at most twice over one scan: the signatures' shingles and the
+    verifier's. The bucket aggregate feeds pair expansion and the
+    candidate-id list through one exchange, run once
+    (``ReusedExchange``). ``minhash_join``'s two sides read it at most
+    four times."""
+    import re
+
     import __spark_entry__ as m
-    from lightlane_spark.cache import unpersist_all
 
     docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
-    try:
-        self_join = plan_summary(dedup_minhash(docs)).text
-        cross_join = plan_summary(m.queries()["minhash_join"](spark, sf_dir)).text
-    finally:
-        unpersist_all()
-    assert self_join.count("documents.parquet") <= 1, self_join[:1200]
-    assert cross_join.count("documents.parquet") <= 2, cross_join[:1200]
+    self_join = _final_plan(dedup_minhash(docs))
+    cross_join = _final_plan(m.queries()["minhash_join"](spark, sf_dir))
+    assert self_join.count("documents.parquet") <= 2, self_join[:1200]
+    assert re.search(
+        r"ReusedExchange .*Exchange hashpartitioning\(band#", self_join
+    ), self_join[:1200]
+    assert "InMemoryTableScan" not in self_join + cross_join
+    assert cross_join.count("documents.parquet") <= 4, cross_join[:1200]
 
 
 def test_range_split_read_scans_source_once(spark, sf_dir):
@@ -731,17 +752,45 @@ def test_label_propagation_fires_no_jobs_during_build(spark, sf_dir):
     assert build + run <= 7
 
 
-def test_pagerank_neardup_job_count(spark, sf_dir):
-    """One ``pagerank_neardup`` call (build plus a noop write) fires
-    at most 33 jobs. Only the symmetrized edge list is cut; a static node
-    table carries each node's degree and base rank, and every iteration
-    reads the ranks once. Cutting the initial ranks and every
-    iteration's ranks as well fired 39 here."""
+def test_minhash_lsh_pairs_job_count(spark, sf_dir):
+    """One ``minhash_lsh_pairs`` call (build plus a noop write) fires
+    no job while the frame is built and at most 8 in total. The chain
+    persists nothing; persisting its shingles and buckets fired 14
+    here."""
     import __spark_entry__ as m
     from lightlane_spark.cache import unpersist_all
 
     read_table(spark, sf_dir, "documents")  # a table's first read infers its schema
-    unpersist_all()  # a cached chain from an earlier test would skip jobs
+    unpersist_all()  # a frame cached by an earlier test would skip jobs
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("mh_build", "mh_build")
+        df = m.queries()["minhash_lsh_pairs"](spark, sf_dir)
+        sc.setJobGroup("mh_exec", "mh_exec")
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+        unpersist_all()
+    tracker = sc.statusTracker()
+    build = len(tracker.getJobIdsForGroup("mh_build"))
+    run = len(tracker.getJobIdsForGroup("mh_exec"))
+    assert build == 0
+    assert build + run <= 8, (build, run)
+
+
+def test_pagerank_neardup_job_count(spark, sf_dir):
+    """One ``pagerank_neardup`` call (build plus a noop write) fires
+    at most 27 jobs. Only the symmetrized edge list is cut; a static node
+    table carries each node's degree and base rank, and every iteration
+    reads the ranks once. Cutting the initial ranks and every
+    iteration's ranks as well fired 39 here, and persisting the MinHash
+    chain's shingles and buckets 33."""
+    import __spark_entry__ as m
+    from lightlane_spark.cache import unpersist_all
+
+    read_table(spark, sf_dir, "documents")  # a table's first read infers its schema
+    unpersist_all()  # a frame cached by an earlier test would skip jobs
     spark.catalog.clearCache()
     sc = spark.sparkContext
     try:
@@ -755,4 +804,4 @@ def test_pagerank_neardup_job_count(spark, sf_dir):
     tracker = sc.statusTracker()
     build = len(tracker.getJobIdsForGroup("pr_build"))
     run = len(tracker.getJobIdsForGroup("pr_exec"))
-    assert build + run <= 33, (build, run)
+    assert build + run <= 27, (build, run)

@@ -23,6 +23,14 @@ best-off by more than the larger of the on and off spreads, else it
 LOSES. A site whose off arm fails the query WINS. One untimed call of
 the first query warms the JVM before any arm is timed.
 
+A one-site arm keeps every other site on, so it cannot judge two sites
+that stand in for each other: each reads LOSES alone, yet with both off
+the query may run slower (``bpe_train``'s two cuts), or each reads WINS
+alone while both off runs faster (the MinHash chain's two persists).
+Before deleting or keeping such a set, compare it off together against
+on: the all-off arm does that when the query has no other site;
+otherwise time the parent tree against a tree without the set.
+
 Prints a table; exits 0 always (measurement tool, not a gate).
 """
 

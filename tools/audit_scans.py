@@ -22,7 +22,9 @@ Usage: python tools/audit_scans.py [--min-scans N] [query ...]
 Interpreting hits — not every repeat is a bug:
   - multi-TABLE joins (different files) are fine;
   - fixture unions (docs ∪ mutated twins) scan the base per branch
-    by construction;
+    by construction; expanding each row into its variants in one scan
+    ran slower on a 10× corpus, since the variants then share their
+    split's task (``queries_m5.py::_docs_with_dups``);
   - recall-contract queries embed a second verifier chain on purpose;
   - bucketed unions of disjoint scans ARE the operator;
   - consumers hash-partitioned on the SAME key share one exchange at
