@@ -4,10 +4,10 @@
 ONE JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
-Each query is forced to full materialization with a count-style action
-(``df.write.format("noop")`` would skip result decoding; we use
-``count`` after a cache-free execution so the measured time includes
-the whole plan).
+Each rep writes the query's frame to the noop sink through
+``tools/runs.py::run_reps``. Neither the noop sink nor ``count()``
+decodes results to the driver, but ``count()`` lets Catalyst prune
+every output column, so a projection query timed by it times a scan.
 """
 
 from __future__ import annotations
@@ -15,12 +15,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from lightlane_spark.cache import unpersist_all  # noqa: E402
 from lightlane_spark.session import get_spark  # noqa: E402
+from tools.runs import run_reps  # noqa: E402
 
 # A run counts as "idle" when the 1-min loadavg at START is at or
 # under this (VERDICT r12 ask #3): the bench itself drives loadavg_end
@@ -60,8 +59,7 @@ def _cpu_jiffies(stat_path: str = "/proc/stat") -> tuple[int, int] | None:
 
 def refresh_bench_idle(detail: dict, idle_path: str) -> bool:
     """Write ``detail`` to ``idle_path`` iff it is tagged idle.
-    Returns True on write, False on refusal. Shared by main() and
-    tools/refresh_bench_idle.py so the guard has one definition."""
+    Returns True on write, False on refusal."""
     if not detail.get("idle"):
         print(
             f"bench: NOT idle (loadavg_start={detail.get('loadavg_start')}"
@@ -277,7 +275,7 @@ def main() -> None:
 
     # Warm the JVM + parquet footers once so per-query numbers measure
     # the plan, not first-touch overheads.
-    qs["pricing_summary"](spark, sf_dir).count()
+    run_reps(spark, lambda: qs["pricing_summary"](spark, sf_dir), 1)
 
     # Multiple runs per query, report the best: the first run of a plan
     # pays one-time whole-stage-codegen class compilation (seconds for
@@ -294,38 +292,24 @@ def main() -> None:
     for name in HEADLINE:
         if name not in qs:
             continue
-        best = None
         # A failing query must not kill the whole bench (round 2 lost
         # every number to one AnalysisException): record null for the
         # failure, keep the rest of the round's signal, exit nonzero
         # only via the "failed" key so the driver still parses JSON.
         try:
             # best-of-3: ambient load on a shared box moved single runs
-            # by ±20-30%; three samples keep the recorded number honest
-            for _ in range(3):
-                t0 = time.perf_counter()
-                qs[name](spark, sf_dir).count()
-                dt = time.perf_counter() - t0
-                reps.setdefault(name, []).append(round(dt, 4))
-                best = dt if best is None else min(best, dt)
-            timings[name] = round(best, 4)
+            # by ±20-30%; three samples keep the recorded number honest.
+            # The cache is released after all reps: within a query,
+            # later reps reusing rep 1's persisted intermediates is the
+            # steady-state latency best-of-3 exists to capture; across
+            # queries, leftover blocks would make late queries pay
+            # eviction + GC for early queries' orphans.
+            samples = run_reps(spark, lambda: qs[name](spark, sf_dir), 3)
+            reps[name] = [round(dt, 4) for dt in samples]
+            timings[name] = min(reps[name])
         except Exception as exc:  # noqa: BLE001 — isolate per query
             print(f"bench: {name} FAILED: {exc}", file=sys.stderr)
             timings[name] = None
-        finally:
-            # Clear AFTER all reps: within a query, later reps reusing
-            # rep 1's persisted intermediates (CacheManager matches
-            # canonicalized plans) is the steady-state latency
-            # best-of-3 exists to capture; ACROSS queries, leftover
-            # cache blocks pile up until late queries pay eviction +
-            # GC for early queries' orphans (measured 2-3x noise on
-            # the iterative chains). unpersist_all first: it releases
-            # every library persist and every local checkpoint's
-            # blocks, and empties the driver-side registry, which
-            # clearCache alone leaves growing a strong ref per site
-            # per query (review finding r11).
-            unpersist_all()
-            spark.catalog.clearCache()
 
     total = round(sum(v for v in timings.values() if v is not None), 4)
     # Steady-state headline (VERDICT r9 ask #7): the r9 driver run's
@@ -336,22 +320,10 @@ def main() -> None:
     # comparability with BENCH_r01..r09), `steady_total` is the
     # best-of-reps-2..3 sum (what a warm executor would do), and
     # `rep1_total` the cold sum — the gap between them IS the box
-    # noise indicator in absolute seconds.
-    # gate both on successful queries (timings[n] set): a query whose
-    # later rep RAISED would otherwise leak its partial reps into one
-    # sum but not the other, skewing the rep1-vs-steady gap
-    steady_total = round(
-        sum(
-            min(r[1:])
-            for n, r in reps.items()
-            if len(r) >= 2 and timings.get(n) is not None
-        ),
-        4,
-    )
-    rep1_total = round(
-        sum(r[0] for n, r in reps.items() if r and timings.get(n) is not None),
-        4,
-    )
+    # noise indicator in absolute seconds. ``reps`` holds only queries
+    # whose every rep ran, so both sums cover the same queries.
+    steady_total = round(sum(min(r[1:]) for r in reps.values()), 4)
+    rep1_total = round(sum(r[0] for r in reps.values()), 4)
     # Noise self-diagnosis: median worst/best rep ratio across queries.
     # Clean runs sit ~1.1-1.3; the degraded shared-host windows that
     # inflated whole runs 1.3-1.7x show 2x+ swings WITHIN a query's
@@ -359,7 +331,7 @@ def main() -> None:
     # lets a reader of the artifact tell a bad-box run from a real
     # regression without re-benching.
     spreads = sorted(
-        max(r) / min(r) for r in reps.values() if len(r) == 3 and min(r) > 0
+        max(r) / min(r) for r in reps.values() if min(r) > 0
     )
     rep_spread_median = (
         round(spreads[len(spreads) // 2], 3) if spreads else None

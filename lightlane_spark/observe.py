@@ -35,11 +35,3 @@ class PipelineMetrics:
             out[name] = dict(obs.get)
         out["__elapsed_sec"] = round(time.monotonic() - self.started_at, 3)
         return out
-
-
-def timed(fn, *args, **kwargs):
-    """The reference's ``Timer`` ("took ⟨delta⟩", utils/time.py:19-45)
-    as a function wrapper: returns (result, seconds)."""
-    t0 = time.perf_counter()
-    res = fn(*args, **kwargs)
-    return res, time.perf_counter() - t0

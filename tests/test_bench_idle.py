@@ -4,7 +4,6 @@ measurement. Pure-JSON tests — no Spark session."""
 
 import json
 import os
-import subprocess
 import sys
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -50,26 +49,6 @@ def test_missing_idle_tag_refuses(tmp_path):
     d = _detail(idle=True)
     del d["idle"]
     assert not refresh_bench_idle(d, str(tmp_path / "BENCH_IDLE.json"))
-
-
-def test_promote_tool_guards(tmp_path):
-    tool = os.path.join(ROOT, "tools", "refresh_bench_idle.py")
-
-    def run(detail):
-        src = tmp_path / "detail.json"
-        src.write_text(json.dumps(detail))
-        return subprocess.run(
-            [sys.executable, tool, "--from", str(src)],
-            capture_output=True,
-            text=True,
-        )
-
-    r = run(_detail(idle=False))
-    assert r.returncode == 2 and "NOT idle" in r.stderr
-    r = run(_detail(idle=True, sf=0.01))
-    assert r.returncode == 2 and "sf" in r.stderr
-    r = run(_detail(idle=True, failed=["q1"]))
-    assert r.returncode == 2 and "failed" in r.stderr
 
 
 def test_cpu_jiffies_total_excludes_guest_fields(tmp_path):

@@ -13,7 +13,7 @@ from lightlane_spark.catalog import (
     schema_only,
     table_exists,
 )
-from lightlane_spark.observe import PipelineMetrics, timed
+from lightlane_spark.observe import PipelineMetrics
 from lightlane_spark.sources.parquet import read_table
 
 
@@ -55,11 +55,6 @@ def test_observe_counts_without_extra_pass(spark, sf_dir):
     assert res["scanned"]["rows"] == 6000 or res["scanned"]["rows"] > out
     assert res["filtered"]["rows"] == out
     assert res["__elapsed_sec"] >= 0
-
-
-def test_timed_wrapper():
-    (out, sec) = timed(sum, [1, 2, 3])
-    assert out == 6 and sec >= 0
 
 
 def test_profile_columns_approx_no_expand(spark, sf_dir):

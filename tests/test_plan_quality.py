@@ -727,6 +727,33 @@ def test_mode_deterministic_breaks_ties_to_smallest(spark):
     assert got == {1: 3, 2: 5, 3: 4}
 
 
+def _query_job_counts(spark, sf_dir, name):
+    """Jobs one call of the ``queries()`` entry ``name`` fires, as
+    ``(build, run)``: while its frame is built, and while a noop write
+    runs it, each under its own job group. The cache is released before
+    (a frame cached by an earlier test would skip jobs) and after."""
+    import __spark_entry__ as m
+    from lightlane_spark.cache import unpersist_all
+
+    unpersist_all()
+    spark.catalog.clearCache()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup(f"{name}_build", f"{name}_build")
+        df = m.queries()[name](spark, sf_dir)
+        sc.setJobGroup(f"{name}_exec", f"{name}_exec")
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+        unpersist_all()
+        spark.catalog.clearCache()
+    tracker = sc.statusTracker()
+    return (
+        len(tracker.getJobIdsForGroup(f"{name}_build")),
+        len(tracker.getJobIdsForGroup(f"{name}_exec")),
+    )
+
+
 def test_label_propagation_fires_no_jobs_during_build(spark, sf_dir):
     """One ``label_propagation`` call (build plus a noop write) fires at
     most 7 jobs and none while the frame is built: the customer
@@ -734,20 +761,8 @@ def test_label_propagation_fires_no_jobs_during_build(spark, sf_dir):
     community count's, the sort's sample and shuffle, and the write.
     Nothing cuts the lineage. A join, count, pick and checkpoint per
     round fired 15 here, 11 during build."""
-    import __spark_entry__ as m
-
     read_table(spark, sf_dir, "customer")  # a table's first read infers its schema
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("lp_build", "lp_build")
-        df = m.queries()["label_propagation"](spark, sf_dir)
-        sc.setJobGroup("lp_exec", "lp_exec")
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc._jsc.clearJobGroup()
-    tracker = sc.statusTracker()
-    build = len(tracker.getJobIdsForGroup("lp_build"))
-    run = len(tracker.getJobIdsForGroup("lp_exec"))
+    build, run = _query_job_counts(spark, sf_dir, "label_propagation")
     assert build == 0
     assert build + run <= 7
 
@@ -757,24 +772,8 @@ def test_minhash_lsh_pairs_job_count(spark, sf_dir):
     no job while the frame is built and at most 8 in total. The chain
     persists nothing; persisting its shingles and buckets fired 14
     here."""
-    import __spark_entry__ as m
-    from lightlane_spark.cache import unpersist_all
-
     read_table(spark, sf_dir, "documents")  # a table's first read infers its schema
-    unpersist_all()  # a frame cached by an earlier test would skip jobs
-    spark.catalog.clearCache()
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("mh_build", "mh_build")
-        df = m.queries()["minhash_lsh_pairs"](spark, sf_dir)
-        sc.setJobGroup("mh_exec", "mh_exec")
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc._jsc.clearJobGroup()
-        unpersist_all()
-    tracker = sc.statusTracker()
-    build = len(tracker.getJobIdsForGroup("mh_build"))
-    run = len(tracker.getJobIdsForGroup("mh_exec"))
+    build, run = _query_job_counts(spark, sf_dir, "minhash_lsh_pairs")
     assert build == 0
     assert build + run <= 8, (build, run)
 
@@ -786,22 +785,6 @@ def test_pagerank_neardup_job_count(spark, sf_dir):
     reads the ranks once. Cutting the initial ranks and every
     iteration's ranks as well fired 39 here, and persisting the MinHash
     chain's shingles and buckets 33."""
-    import __spark_entry__ as m
-    from lightlane_spark.cache import unpersist_all
-
     read_table(spark, sf_dir, "documents")  # a table's first read infers its schema
-    unpersist_all()  # a frame cached by an earlier test would skip jobs
-    spark.catalog.clearCache()
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("pr_build", "pr_build")
-        df = m.queries()["pagerank_neardup"](spark, sf_dir)
-        sc.setJobGroup("pr_exec", "pr_exec")
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc._jsc.clearJobGroup()
-        unpersist_all()
-    tracker = sc.statusTracker()
-    build = len(tracker.getJobIdsForGroup("pr_build"))
-    run = len(tracker.getJobIdsForGroup("pr_exec"))
+    build, run = _query_job_counts(spark, sf_dir, "pagerank_neardup")
     assert build + run <= 27, (build, run)

@@ -4,6 +4,7 @@ corpus from earlier batches."""
 
 from __future__ import annotations
 
+from lightlane_spark import cache
 from lightlane_spark.streaming.incremental import (
     run_to_completion,
     stream_from_directory,
@@ -40,8 +41,11 @@ def test_streaming_neardup_ingest(spark, tmp_path):
     stream = stream_from_directory(
         spark, land, SCHEMA, max_files_per_trigger=1
     )
+    tracked = len(cache._TRACKED)
     q = streaming_neardup_ingest(stream, corpus, index, ckpt)
     run_to_completion(q)
+    # each micro-batch releases its persists and leaves no registry entry
+    assert len(cache._TRACKED) == tracked
 
     accepted = sorted(r.doc_id for r in spark.read.parquet(corpus).collect())
     # 11 rejected (dup of accepted 1), 13 rejected (in-batch dup of 12)

@@ -42,7 +42,6 @@ import math
 import os
 import pkgutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -54,6 +53,7 @@ from pyspark.sql.classic.dataframe import DataFrame
 import lightlane_spark
 from lightlane_spark import cache
 from lightlane_spark.session import get_spark
+from tools.runs import run_reps
 
 _DISABLED: set[str] = set()  # call sites, or "*" for all
 _SEEN: set[str] = set()  # sites observed during the current query
@@ -129,36 +129,22 @@ def main() -> None:
     def run(name: str, disabled: set[str], reps: int = 3) -> tuple[float, float]:
         _DISABLED.clear()
         _DISABLED.update(disabled)
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
         times = []
-
-        def once() -> None:
-            # noop sink, not count(): count() prunes every output
-            # column, so the persist-OFF arm would skip projections
-            # the persist-ON arm materializes into the cache
-            _resolve(name, qs)(spark, os.environ.get(
-                "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
-            )).write.format("noop").mode("overwrite").save()
-
         for _ in range(reps):
-            t0 = time.perf_counter()
+            # one run_reps call per rep: Spark's cache lookup is
+            # PLAN-based, so a persist-ON rep would hit the previous
+            # rep's cached data while the OFF arm never caches;
+            # releasing after every rep keeps each rep cold and the arms
+            # comparable (r6 ADVICE)
             try:
-                once()
-                times.append(time.perf_counter() - t0)
+                times += run_reps(spark, lambda: _resolve(name, qs)(spark, sf_dir), 1)
             except Exception as e:
                 if not disabled:
                     raise
                 # the query cannot run without these sites: they stay
                 print(f"  off{sorted(disabled)} FAILED: {str(e).splitlines()[0][:160]}")
                 return math.inf, math.inf
-            finally:
-                # Spark's cache lookup is PLAN-based: a rebuilt identical
-                # plan in reps 2-3 of the persist-ON arm would hit rep 1's
-                # cached data while the OFF arm never caches — clearing
-                # per rep keeps every rep cold so the arms are comparable
-                # (r6 ADVICE). unpersist_all also frees the local
-                # checkpoints' blocks.
-                cache.unpersist_all()
-                spark.catalog.clearCache()
         return min(times), times[0]
 
     # untimed warm-up: the JVM's first-call cost would otherwise land

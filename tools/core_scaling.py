@@ -15,7 +15,8 @@ the SAME process: ``spark.stop()`` + a rebuilt session with
 scheduler are fully rebuilt, which is what the core count lives in).
 
 Interleaving: for each query the schedule is 32 → 8 → 32 → 8 (one
-timed rep per session visit after a warm rep), so drifting foreign
+timed rep per session visit after a warm rep, both through
+``tools/runs.py::run_reps``), so drifting foreign
 load on this shared box lands on both core counts of the same query
 rather than on one whole phase.
 
@@ -101,7 +102,7 @@ def main() -> int:
     derive_sec = round(time.perf_counter() - t0, 1)
 
     import __spark_entry__ as entry_mod
-    from lightlane_spark.cache import unpersist_all
+    from tools.runs import run_reps
 
     qs = entry_mod.queries()
     missing = [n for n in names if n not in qs]
@@ -109,9 +110,9 @@ def main() -> int:
         print(f"core_scaling: unknown queries {missing}", file=sys.stderr)
         return 2
 
-    # reps[query][cpus] -> list of timed samples (one per visit; each
-    # visit runs warm-then-timed so codegen/footer first-touch stays
-    # out of the number)
+    # reps[query][cpus] -> list of timed samples (one per visit: the
+    # second of two reps, so codegen/footer first-touch stays out of
+    # the number)
     reps: dict[str, dict[int, list[float]]] = {
         n: {c: [] for c in cpu_list} for n in names
     }
@@ -127,25 +128,15 @@ def main() -> int:
             "master": spark.sparkContext.master,
             "default_parallelism": spark.sparkContext.defaultParallelism,
         }
-        qs[names[0]](spark, dn).count()  # warm JVM/footers at this master
-        unpersist_all()
-        spark.catalog.clearCache()
         for n in names:
             la = os.getloadavg()[0]
             try:
-                # warm rep (codegen + persist materialization); the
-                # timed rep keeps the warm rep's persisted
-                # intermediates, matching bench.py's documented
-                # within-query semantics (clear AFTER all reps of a
-                # query, never between them) — clearing here made the
-                # timed rep a cold-recompute measurement dominated by
-                # first-materialization costs that mask core-count
-                # sensitivity (r14: kcore_peel timed 12 s at BOTH 8
-                # and 32 cores cold vs 2.1 s steady).
-                qs[n](spark, dn).count()
-                t0 = time.perf_counter()
-                qs[n](spark, dn).count()
-                dt = round(time.perf_counter() - t0, 3)
+                # the timed rep keeps the warm rep's persisted
+                # intermediates, as bench.py's reps do; a cold timed
+                # rep is dominated by first-materialization costs that
+                # mask core-count sensitivity (r14: kcore_peel timed
+                # 12 s at BOTH 8 and 32 cores cold vs 2.1 s steady).
+                dt = round(run_reps(spark, lambda: qs[n](spark, dn), 2)[1], 3)
                 reps[n][cpus].append(dt)
                 print(
                     f"core_scaling: [visit {visit}/{len(schedule)}] "
@@ -154,9 +145,6 @@ def main() -> int:
                 )
             except Exception as exc:  # noqa: BLE001 — isolate per query
                 print(f"core_scaling: {n}@{cpus} FAILED: {exc}", file=sys.stderr)
-            finally:
-                unpersist_all()
-                spark.catalog.clearCache()
         spark.stop()
 
     lo, hi = min(cpu_list), max(cpu_list)

@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -20,6 +19,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from lightlane_spark.operators.skew import salted_join
+from tools.runs import run_reps
 
 N_LARGE = 32_000_000
 N_SMALL = 300_000  # past the broadcast threshold → sort-merge join
@@ -39,14 +39,11 @@ def build(spark):
     return large, small
 
 
-def timed(label, fn, reps=3):
-    best = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        fn()
-        best = min(best or 1e9, time.perf_counter() - t0)
-    print(f"{label}: {best:.2f}s")
-    return best
+def best(spark, label, build):
+    """Best of 3 noop-sink runs of ``build()``."""
+    t = min(run_reps(spark, build, 3))
+    print(f"{label}: {t:.2f}s")
+    return t
 
 
 def main():
@@ -59,12 +56,14 @@ def main():
     )
     spark.sparkContext.setLogLevel("ERROR")
     large, small = build(spark)
-    agg = lambda df: df.groupBy().agg(F.sum(F.col("v") + F.col("w"))).collect()  # noqa: E731
+    agg = lambda df: df.groupBy().agg(F.sum(F.col("v") + F.col("w")))  # noqa: E731
 
-    t_aqe = timed("AQE skew-join   ", lambda: agg(large.join(small, "k")))
+    t_aqe = best(spark, "AQE skew-join   ", lambda: agg(large.join(small, "k")))
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    t_plain = timed("no mitigation   ", lambda: agg(large.join(small, "k")))
-    t_salt = timed("salted_join(16) ", lambda: agg(salted_join(large, small, ["k"], buckets=16)))
+    t_plain = best(spark, "no mitigation   ", lambda: agg(large.join(small, "k")))
+    t_salt = best(
+        spark, "salted_join(16) ", lambda: agg(salted_join(large, small, ["k"], buckets=16))
+    )
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     print(
         f"SUMMARY large={N_LARGE} small={N_SMALL} hot_share=1/{HOT_SHARE}: "

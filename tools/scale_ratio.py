@@ -221,27 +221,6 @@ def derive(src_dir: str, out_dir: str, factor: int) -> dict[str, int]:
     return counts
 
 
-def _time_one(spark, fn, sf_dir, reps):
-    """bench.py's per-query discipline: reps samples, then
-    unpersist+clearCache so iterative chains don't pay for
-    predecessors' orphaned cache blocks."""
-    from lightlane_spark.cache import unpersist_all
-
-    out: list[float] = []
-    try:
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).count()
-            out.append(round(time.perf_counter() - t0, 4))
-    except Exception as exc:  # noqa: BLE001 — isolate per query
-        print(f"scale_ratio: {sf_dir} FAILED: {exc}", file=sys.stderr)
-        out = []
-    finally:
-        unpersist_all()
-        spark.catalog.clearCache()
-    return out
-
-
 def _steady(reps: list[float]) -> float | None:
     """Steady-state sample: min of reps 2..n (rep 1 pays one-time
     codegen); min of all if only one rep survived."""
@@ -278,6 +257,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
     from lightlane_spark.session import get_spark
+    from tools.runs import run_reps
 
     qs = entry_mod.queries()
     missing = [n for n in names if n not in qs]
@@ -286,8 +266,14 @@ def main() -> int:
         return 2
     spark = get_spark(app_name="lightlane-scale-ratio")
     spark.sparkContext.setLogLevel("ERROR")
-    # one warm query to pay JVM + parquet-footer first-touch costs
-    qs[names[0]](spark, d1).count()
+
+    def samples(n: str, sf_dir: str) -> list[float]:
+        try:
+            reps = run_reps(spark, lambda: qs[n](spark, sf_dir), args.reps)
+            return [round(t, 4) for t in reps]
+        except Exception as exc:  # noqa: BLE001 — isolate per query
+            print(f"scale_ratio: {n} @ {sf_dir} FAILED: {exc}", file=sys.stderr)
+            return []
 
     # INTERLEAVED per query: x1 reps then xN reps back-to-back, so a
     # drifting foreign load on this shared box inflates numerator and
@@ -302,8 +288,7 @@ def main() -> int:
     over = []
     for i, n in enumerate(names, 1):
         la = os.getloadavg()[0]
-        r1 = _time_one(spark, qs[n], d1, args.reps)
-        rn = _time_one(spark, qs[n], dn, args.reps)
+        r1, rn = samples(n, d1), samples(n, dn)
         t1, tn = _steady(r1), _steady(rn)
         ratio = round(tn / t1, 2) if t1 and tn else None
         queries[n] = {
@@ -334,6 +319,8 @@ def main() -> int:
         "rows_x1": counts1,
         f"rows_x{args.factor}": countsn,
         "driver_mem": os.environ.get("SPARK_GRAFT_DRIVER_MEM"),
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
         "idle": load_start[0] <= 1.0,
         "loadavg_start": [round(x, 2) for x in load_start],
         "loadavg_end": [round(x, 2) for x in os.getloadavg()],
