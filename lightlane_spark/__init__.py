@@ -14,80 +14,8 @@ pruning, join selection, and whole-stage codegen for free.
 """
 
 from lightlane_spark.session import get_spark
-from lightlane_spark.sources.parquet import read_table, table_path
-from lightlane_spark.operators.extract import (
-    select_columns,
-    exclude_columns,
-    with_filter,
-    min_max,
-    range_partitioned_read,
-)
-from lightlane_spark.loaders.loader import Loader, LoadMode
-from lightlane_spark.loaders.avro_sink import read_avro, write_avro
-from lightlane_spark.operators.dedup import dedup_keep_first
-from lightlane_spark.operators.pq import pq_encode, pq_fit, pq_topk
-from lightlane_spark.operators.sketches import (
-    bloom_build,
-    bloom_member,
-    cms_build,
-    cms_estimate,
-    cms_merge,
-)
-from lightlane_spark.operators.similarity import semantic_dedup
-from lightlane_spark.operators.web import normalize_url, url_dedup
-from lightlane_spark.loaders.dataskip import (
-    pruned_scan,
-    pruned_scan_multi,
-    write_manifest,
-    write_with_stats,
-)
-from lightlane_spark.plans.lineage import column_lineage
-from lightlane_spark.operators.text import bpe_train, dataset_split
-from lightlane_spark.operators.multimodal import (
-    blockhash_near_pairs,
-    blockhash_signatures,
-)
-from lightlane_spark.operators.incremental import incremental_join_delta
-from lightlane_spark.cache import cache_scope, tracked_persist, unpersist_all
+from lightlane_spark.sources.parquet import read_table
 
-__all__ = [
-    "cache_scope",
-    "tracked_persist",
-    "unpersist_all",
-    "get_spark",
-    "read_table",
-    "table_path",
-    "select_columns",
-    "exclude_columns",
-    "with_filter",
-    "min_max",
-    "range_partitioned_read",
-    "Loader",
-    "LoadMode",
-    "dedup_keep_first",
-    "read_avro",
-    "write_avro",
-    "pq_fit",
-    "pq_encode",
-    "pq_topk",
-    "cms_build",
-    "cms_merge",
-    "cms_estimate",
-    "bloom_build",
-    "bloom_member",
-    "semantic_dedup",
-    "normalize_url",
-    "url_dedup",
-    "write_with_stats",
-    "write_manifest",
-    "pruned_scan",
-    "pruned_scan_multi",
-    "column_lineage",
-    "bpe_train",
-    "dataset_split",
-    "blockhash_signatures",
-    "blockhash_near_pairs",
-    "incremental_join_delta",
-]
+__all__ = ["get_spark", "read_table"]
 
 __version__ = "0.1.0"

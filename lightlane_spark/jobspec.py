@@ -49,10 +49,11 @@ caller's session privileges, same trust model as the reference's
 
 from __future__ import annotations
 
+import re
 from types import MappingProxyType
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lightlane_spark.catalog import sql_over
@@ -92,8 +93,25 @@ def _t_dedup(
 ) -> DataFrame:
     from lightlane_spark.operators.dedup import dedup_keep_first
 
-    order_cols = [F.expr(o) for o in orderby] if orderby else None
+    order_cols = [_sort_order(o) for o in orderby] if orderby else None
     return dedup_keep_first(df, keys, order_cols)
+
+
+_SORT_ORDER = re.compile(
+    r"(?P<expr>.+?)(?:\s+(?P<dir>ASC|DESC))?(?:\s+NULLS\s+(?P<nulls>FIRST|LAST))?",
+    re.IGNORECASE | re.DOTALL,
+)
+
+
+def _sort_order(text: str) -> Column:
+    """One SQL sort item, ``expr [ASC|DESC] [NULLS FIRST|LAST]``, as a
+    sort column. ``F.expr`` alone would read ``ts DESC`` as the alias
+    ``ts AS DESC`` and sort ascending. NULLs go where Spark SQL puts
+    them by default: first under ASC, last under DESC."""
+    m = _SORT_ORDER.fullmatch(text.strip())
+    direction = (m["dir"] or "ASC").lower()
+    nulls = (m["nulls"] or ("LAST" if direction == "desc" else "FIRST")).lower()
+    return getattr(F.expr(m["expr"]), f"{direction}_nulls_{nulls}")()
 
 
 def _t_sql(df: DataFrame, query: str, **_: Any) -> DataFrame:

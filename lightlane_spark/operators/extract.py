@@ -90,14 +90,16 @@ def range_partitioned_read(
     (``dumper/sql.py:132-159``) from one scan: its ranges tile
     ``[min, max]`` of the non-NULL keys with the last range closed, so
     together they hold exactly the rows whose ``splitby`` is not NULL
-    (its ``>= AND <`` predicates drop NULLs). The min/max probe stays
-    for the reference's fallback: NULL bounds (an empty or all-NULL
-    column) return the plain scan, NULL-key rows included
-    (``sql.py:135-137``).
+    (its ``>= AND <`` predicates drop NULLs). The reference's fallback
+    stays: when no key is non-NULL (its min/max bounds are NULL) the
+    plain scan is returned, NULL-key rows included
+    (``sql.py:135-137``). An emptiness probe of the non-NULL keys
+    answers that with one limit-1 job, where ``min_max`` would run a
+    partial and a final aggregate over the whole column.
     """
     if splits <= 1:
         return df
-    lo, hi = min_max(df, splitby)
-    if lo is None or hi is None:
+    keyed = df.filter(F.col(splitby).isNotNull())
+    if keyed.isEmpty():
         return df  # serial fallback, reference sql.py:135-137
-    return df.filter(F.col(splitby).isNotNull())
+    return keyed

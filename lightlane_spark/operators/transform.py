@@ -25,15 +25,16 @@ Spark-first re-expression:
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
-from typing import Any
-
-import pandas as pd
+from typing import TYPE_CHECKING, Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from lightlane_spark.cache import cache_scope, tracked_persist
+
+if TYPE_CHECKING:
+    import pandas as pd
 
 
 def json_extract(df: DataFrame, source_col: str, fields: dict[str, str]) -> DataFrame:

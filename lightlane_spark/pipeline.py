@@ -120,9 +120,8 @@ class Pipeline:
     def quarantine(self, good_predicate) -> "Pipeline":
         """OP-17: split off bad rows; route them with .bad_to_parquet."""
         self._require_df()
-        good, bad = quarantine(self._df, good_predicate)
+        good, self._bad_df = quarantine(self._df, good_predicate)
         self._df = self.metrics.observe_count(good, "good")
-        self._bad_df = self.metrics.observe_count(bad, "quarantined")
         return self
 
     # -- sinks (fan-out, OP-20) --------------------------------------
@@ -169,13 +168,21 @@ class Pipeline:
     # -- run ----------------------------------------------------------
     def run(self) -> dict:
         """Execute all sinks (OP-20: two or more share one persisted
-        scan); returns per-stage observed metrics (OP-37)."""
+        scan); returns per-stage observed metrics (OP-37) of the frames
+        that ran. An observation no action fills would block
+        ``results()`` forever, so the quarantined half is observed only
+        when its sink runs, and the good half's count is dropped when
+        no sink reads it."""
         self._require_df()
-        if not self._sinks and self._bad_sink is None:
+        writes_bad = self._bad_df is not None and self._bad_sink is not None
+        if not self._sinks and not writes_bad:
             raise ValueError("pipeline has no sinks; add to_*/load first")
-        fan_out(self._df, self._sinks)
-        if self._bad_df is not None and self._bad_sink is not None:
-            self._bad_sink(self._bad_df)
+        if self._sinks:
+            fan_out(self._df, self._sinks)
+        else:
+            self.metrics.observations.pop("good")
+        if writes_bad:
+            self._bad_sink(self.metrics.observe_count(self._bad_df, "quarantined"))
         return self.metrics.results()
 
     def dataframe(self) -> DataFrame:

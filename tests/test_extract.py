@@ -86,6 +86,20 @@ def test_range_split_serial_fallback(spark):
     assert out.count() == 2  # serial fallback keeps NULL-key rows
 
 
+def test_range_split_probe_fires_one_job(spark, sf_dir):
+    """Building the range-split read runs one limit-1 job (is any key
+    non-NULL?); a min/max probe is a partial and a final aggregate over
+    the whole key column, two jobs."""
+    df = read_table(spark, sf_dir, "lineitem")
+    sc = spark.sparkContext
+    sc.setJobGroup("range_split_probe", "range_split_probe")
+    try:
+        range_partitioned_read(df, "l_orderkey", 4)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("range_split_probe")) == 1
+
+
 @pytest.mark.parametrize(
     "ddl, keys",
     [

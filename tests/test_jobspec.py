@@ -3,6 +3,8 @@ reference's dump / load job shapes end-to-end."""
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -151,6 +153,86 @@ def test_sql_and_quarantine_spec(spark, sf_dir, tmp_path):
     assert good.count() + bad.count() == total
     assert m["good"]["rows"] == good.count()
     assert good.columns == ["o_orderkey", "o_totalprice"]
+
+
+def _run_job_within(spark, spec, timeout_s=120):
+    """``run_job(spark, spec)`` on a daemon thread: a run still blocked
+    after ``timeout_s`` fails the test instead of hanging the suite."""
+    out = {}
+
+    def target():
+        try:
+            out["metrics"] = run_job(spark, spec)
+        except BaseException as e:  # re-raised on the test's thread
+            out["error"] = e
+
+    t = threading.Thread(target=target, daemon=True)
+    t.start()
+    t.join(timeout_s)
+    assert not t.is_alive(), f"run_job still blocked after {timeout_s} s"
+    if "error" in out:
+        raise out["error"]
+    return out["metrics"]
+
+
+def test_quarantine_without_bad_sink_returns(spark, sf_dir, tmp_path):
+    """A quarantine with no ``bad_path`` drops the bad rows: the run
+    returns the counts of the frames it wrote, with no ``quarantined``
+    entry (nothing reads that half, so its count would never fill)."""
+    target = str(tmp_path / "orders_t")
+    m = _run_job_within(spark, {
+        "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "orders"},
+        "quarantine": {"good_predicate": "o_totalprice > 1000"},
+        "load": {"path": target, "mode": "overwrite"},
+    })
+    orders = read_table(spark, sf_dir, "orders")
+    n_good = orders.filter("o_totalprice > 1000").count()
+    assert spark.read.parquet(target).count() == n_good
+    assert m["good"]["rows"] == n_good
+    assert m["extracted"]["rows"] == orders.count()
+    assert "quarantined" not in m
+
+
+def test_quarantine_with_only_bad_sink_returns(spark, sf_dir, tmp_path):
+    """The mirror: a ``bad_path`` and no sink or load writes only the
+    quarantined rows and returns their count, with no ``good`` entry."""
+    bad = str(tmp_path / "bad")
+    m = _run_job_within(spark, {
+        "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "orders"},
+        "quarantine": {"good_predicate": "o_totalprice > 1000", "bad_path": bad},
+    })
+    orders = read_table(spark, sf_dir, "orders")
+    n_bad = orders.count() - orders.filter("o_totalprice > 1000").count()
+    assert spark.read.parquet(bad).count() == n_bad
+    assert m["quarantined"]["rows"] == n_bad
+    assert m["extracted"]["rows"] == orders.count()
+    assert "good" not in m
+
+
+@pytest.mark.parametrize(
+    "orderby, keep",
+    [
+        ("ts DESC", {1: 20, 2: 7, 3: 4}),
+        ("ts", {1: 10, 2: 5, 3: None}),
+        ("ts ASC", {1: 10, 2: 5, 3: None}),
+        ("ts DESC NULLS FIRST", {1: 20, 2: 7, 3: None}),
+        ("ts asc nulls last", {1: 10, 2: 5, 3: 4}),
+    ],
+)
+def test_dedup_orderby_direction(spark, tmp_path, orderby, keep):
+    """A spec ``dedup`` honours a trailing ``ASC|DESC [NULLS FIRST|LAST]``
+    with Spark SQL's defaults (NULLs first under ASC, last under DESC).
+    ``F.expr("ts DESC")`` alone reads as the alias ``ts AS DESC`` and
+    keeps the smallest ``ts``."""
+    rows = [(1, 10), (1, 20), (2, 5), (2, 7), (3, None), (3, 4)]
+    spark.createDataFrame(rows, "k: int, ts: int").write.parquet(
+        str(tmp_path / "events.parquet")
+    )
+    df = build_pipeline(spark, {
+        "extract": {"kind": "parquet", "sf_dir": str(tmp_path), "table": "events"},
+        "transforms": [{"op": "dedup", "keys": ["k"], "orderby": [orderby]}],
+    }).dataframe()
+    assert {r.k: r.ts for r in df.collect()} == keep
 
 
 def test_spec_rejects_unknown_ops(spark, sf_dir):

@@ -1,10 +1,12 @@
 """Shared oracle-comparison helpers for the driver-mimic checkers.
 
-One definition of value canonicalization and DuckDB view setup, used
-by BOTH tools/verify_vanilla.py (full-registry sweep) and
-tools/check_window.py (first-50 freeze gate) — a canonicalization fix
-landing in one but not the other would make the gate and the sweep
-disagree on the same query output.
+One definition of value canonicalization and DuckDB view setup, so
+every check that compares a query with its oracle agrees on the same
+output. Its importers: tools/verify_vanilla.py (the full-registry
+sweep, whose ``sweep`` tools/check_window.py's first-50 freeze gate
+runs), tools/audit_boundaries.py, perfbench/checks.py and
+perfbench/workloads.py, and tests/test_oracle_parity.py,
+tests/test_session_state.py and tests/test_oracle_compare_strict.py.
 
 STRICT by construction (VERDICT r8 ask #2): the r7/r8 rounds shipped
 a red the old gate called green because ``norm`` collapsed tz-aware
