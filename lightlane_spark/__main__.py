@@ -41,11 +41,10 @@ def main(argv: list[str] | None = None) -> int:
     from lightlane_spark.jobspec import build_pipeline
     from lightlane_spark.session import get_spark
 
-    spark = get_spark(
-        app_name=f"lightlane-{args.cmd}",
-        master=args.master,
-        shuffle_partitions=args.shuffle_partitions,
-    )
+    conf = {}
+    if args.shuffle_partitions is not None:
+        conf["spark.sql.shuffle.partitions"] = str(args.shuffle_partitions)
+    spark = get_spark(app_name=f"lightlane-{args.cmd}", master=args.master, extra_conf=conf)
     pipeline = build_pipeline(spark, spec)
     if args.cmd == "lineage":
         from lightlane_spark.plans.lineage import column_lineage

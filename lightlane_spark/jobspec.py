@@ -40,6 +40,9 @@ sink/load):
                "primary_keys": [...], <Loader kwargs>}
     }
 
+A split jdbc extract with no ``bounds`` probes them from its ``table``
+(``Pipeline.extract_jdbc``); a split ``query`` needs ``"bounds"``.
+
 Transforms are a CLOSED registry — a spec is data, so it must not be
 able to smuggle arbitrary callables; anything custom belongs in
 ``Pipeline.transform`` from Python. SQL strings in specs run with the
@@ -56,6 +59,7 @@ from typing import Any
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from lightlane_spark.cache import cache_scope
 from lightlane_spark.catalog import sql_over
 from lightlane_spark.pipeline import Pipeline
 
@@ -224,5 +228,8 @@ def build_pipeline(spark: SparkSession, spec: dict) -> Pipeline:
 
 
 def run_job(spark: SparkSession, spec: dict) -> dict:
-    """Compile and execute a job spec; returns the pipeline metrics."""
-    return build_pipeline(spark, spec).run()
+    """Compile and execute a job spec in one ``cache_scope()``, so what
+    the run persists is released when it ends, also on error; returns
+    the pipeline metrics."""
+    with cache_scope():
+        return build_pipeline(spark, spec).run()

@@ -14,6 +14,7 @@ Hive/Impala over managed tables, ``hive_loader.py:184-201``).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 def write_bucketed_table(
@@ -87,7 +88,7 @@ def merge_bucketed_table(
         )
         return
     target = spark.table(table)
-    merged = merge_upsert(target, staging, primary_keys, broadcast_staging=True)
+    merged = merge_upsert(target, F.broadcast(staging), primary_keys)
     spark.sql(f"DROP TABLE IF EXISTS {reconcile}")
     spark.sql(f"DROP TABLE IF EXISTS {retired}")
     # one file per bucket: route rows to their bucket's task first

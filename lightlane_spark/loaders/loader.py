@@ -23,11 +23,14 @@ Pipeline ordering preserved (``hive_loader.py:184-193``): optional
 dedup of staging happens BEFORE the merge, and pre/post SQL hooks
 bracket the operation.
 
-Scale notes: the anti-join shuffles both sides on the PK unless the
-staging side is small enough to broadcast — we broadcast it below a
-size hint since incremental batches are typically ≪ target. AQE skew
-handling covers hot PKs. For true ACID upserts use Delta's MERGE INTO
-when the runtime has it; this file is the format-agnostic path.
+OP-32: every mode refreshes the target path (APPEND's write recaches
+it, ``_commit`` calls ``refreshByPath``): cached reads see new files.
+
+Scale notes: the anti-join shuffles both sides on the PK unless AQE
+broadcasts a small staging side, or the caller passes
+``F.broadcast(staging)``. AQE skew handling covers hot PKs. For true
+ACID upserts use Delta's MERGE INTO when the runtime has it; this file
+is the format-agnostic path.
 """
 
 from __future__ import annotations
@@ -76,16 +79,15 @@ def merge_upsert(
     target: DataFrame,
     staging: DataFrame,
     primary_keys: list[str],
-    broadcast_staging: bool | None = None,
     schema_evolution: bool = False,
 ) -> DataFrame:
     """OP-27 MERGE semantics: anti-join target on PKs, union staging.
 
     Multi-column PKs form a conjunctive equi-join key
-    (``hive_loader.py:164``). ``broadcast_staging=None`` lets AQE
-    decide; ``True`` forces a broadcast hash anti-join (the common
-    case — a small incremental batch against a huge target avoids
-    shuffling the target entirely).
+    (``hive_loader.py:164``). AQE picks the join strategy; pass
+    ``F.broadcast(staging)`` to force a broadcast hash anti-join (a
+    small incremental batch against a huge target then never shuffles
+    the target).
 
     ``schema_evolution=True`` reconciles drifted schemas first
     (``align_schemas``): columns added to the staging batch appear
@@ -98,8 +100,7 @@ def merge_upsert(
         raise ValueError("MERGE mode requires primary_keys")  # hive_loader.py:67-69
     if schema_evolution:
         target, staging = align_schemas(target, staging)
-    stg = F.broadcast(staging) if broadcast_staging else staging
-    kept = target.join(stg, on=primary_keys, how="left_anti")
+    kept = target.join(staging, on=primary_keys, how="left_anti")
     return kept.unionByName(staging)
 
 
@@ -120,7 +121,8 @@ class Loader:
     become transient DataFrames (OP-29 — no DDL needed), bulk-load
     becomes the write itself (OP-22/23). APPEND is Spark's
     ``mode('append')``; OVERWRITE and MERGE replace the table through
-    one staged write and rename swap (``_commit``).
+    one staged write and rename swap (``_commit``). For a catalog
+    table's statistics, run ANALYZE TABLE in ``post_sql``.
     """
 
     spark: SparkSession
@@ -133,7 +135,6 @@ class Loader:
     dedup_orderby: list[str] = field(default_factory=list)
     pre_sql: list[str] = field(default_factory=list)
     post_sql: list[str] = field(default_factory=list)
-    analyze: bool = False
     schema_evolution: bool = False
     # Sink format for PATH-based writes: parquet/orc/json here; text
     # goes through loaders/text_sinks.py (its own delimiter contract),
@@ -169,8 +170,6 @@ class Loader:
             self._commit(staging, rows)
         for q in self.post_sql:  # OP-31
             self.spark.sql(q)
-        if self.analyze:  # OP-32 — stats for downstream planning
-            self._analyze()
 
     def _write(self, rows: DataFrame, path: str, mode: str) -> None:
         writer = rows.write.mode(mode).format(self.fmt)
@@ -219,13 +218,6 @@ class Loader:
                 fs.rename(old, table)
             raise IOError(f"load commit: could not install {self.table_path}")
         fs.delete(old, True)
-        self.spark.catalog.refreshByPath(self.table_path)
-
-    def _analyze(self) -> None:
-        """OP-32: refresh stats. On a path-backed table the useful
-        equivalent is dropping the cached file listing and any cached
-        data of this path only — the caller's other persisted frames
-        stay; for catalog tables run ANALYZE TABLE instead."""
         self.spark.catalog.refreshByPath(self.table_path)
 
 

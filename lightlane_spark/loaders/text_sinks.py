@@ -44,11 +44,7 @@ def serialize_complex_columns(df: DataFrame) -> DataFrame:
     ('' in CSV cells, the literal string "None" in Hive text,
     ``csv_handler.py:71-78,119-121``); we emit the faithful ``[]`` /
     ``{}`` instead of reproducing that falsy-coercion quirk."""
-    out = df
-    for f in df.schema.fields:
-        if isinstance(f.dataType, (T.ArrayType, T.MapType, T.StructType)):
-            out = out.withColumn(f.name, F.to_json(F.col(f.name)))
-    return out
+    return _rewrite(df, (T.ArrayType, T.MapType, T.StructType), F.to_json)
 
 
 def write_csv(
@@ -114,13 +110,16 @@ def _strip_hive_control_chars(df: DataFrame) -> DataFrame:
     (reference ``utils/escape.py:10-25`` escapes \\0 \\x01 \\n \\r; an
     unquoted text format cannot represent them, so they are removed —
     same effect as the reference's escape-on-write for round-trips)."""
-    out = df
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.StringType):
-            out = out.withColumn(
-                f.name, F.regexp_replace(F.col(f.name), "[\x00\x01\x02\x03\n\r]", " ")
-            )
-    return out
+    return _rewrite(
+        df, T.StringType, lambda c: F.regexp_replace(c, "[\x00\x01\x02\x03\n\r]", " ")
+    )
+
+
+def _rewrite(df: DataFrame, types, fn) -> DataFrame:
+    """``df`` with ``fn`` applied to every column whose type is one of
+    ``types``, in one projection (``df`` itself when none is)."""
+    cols = {f.name: fn(F.col(f.name)) for f in df.schema.fields if isinstance(f.dataType, types)}
+    return df.withColumns(cols) if cols else df
 
 
 def write_hive_text(df: DataFrame, path: str, mode: str = "overwrite") -> None:

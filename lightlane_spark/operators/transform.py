@@ -43,11 +43,11 @@ def json_extract(df: DataFrame, source_col: str, fields: dict[str, str]) -> Data
     ``fields`` maps output column name → JSONPath (``$.a.b``). Uses
     ``get_json_object`` (JVM, codegen) — no schema needed, NULL on
     malformed input rather than failure (PERMISSIVE, OP-17-friendly).
+    Every field reads the original ``source_col``, also when one of
+    them replaces it.
     """
-    out = df
-    for name, path in fields.items():
-        out = out.withColumn(name, F.get_json_object(F.col(source_col), path))
-    return out
+    src = F.col(source_col)
+    return df.withColumns({name: F.get_json_object(src, path) for name, path in fields.items()})
 
 
 def flatten_json_array(

@@ -28,12 +28,13 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from lightlane_spark.cache import tracked_persist
 from lightlane_spark.loaders.loader import Loader
 from lightlane_spark.loaders.text_sinks import write_csv, write_hive_text
 from lightlane_spark.observe import PipelineMetrics
 from lightlane_spark.operators.extract import range_partitioned_read
 from lightlane_spark.operators.transform import fan_out, quarantine
-from lightlane_spark.sources.jdbc import read_jdbc
+from lightlane_spark.sources.jdbc import probe_bounds, read_jdbc
 from lightlane_spark.sources.parquet import read_table
 
 
@@ -64,6 +65,16 @@ class Pipeline:
         return self
 
     def extract_jdbc(self, url: str, **kwargs) -> "Pipeline":
+        """``read_jdbc(**kwargs)``. A split ``table`` read without
+        ``bounds`` probes its min/max first (``dumper/sql.py:59-68``);
+        NULL bounds read serially. A split ``query`` needs ``bounds``."""
+        splitby, table = kwargs.get("splitby"), kwargs.get("table")
+        if splitby and kwargs.get("splits", 1) > 1 and kwargs.get("bounds") is None:
+            if kwargs.get("query") is not None:
+                raise ValueError("a split JDBC extract of a query needs bounds: [lo, hi]")
+            if table is not None:
+                props = kwargs.get("properties")
+                kwargs["bounds"] = probe_bounds(self.spark, url, table, splitby, props)
         self._df = self.metrics.observe_count(
             read_jdbc(self.spark, url, **kwargs), "extracted"
         )
@@ -96,11 +107,14 @@ class Pipeline:
     ) -> "Pipeline":
         """Corpus stage: full fuzzy dedup — MinHash-LSH pairs →
         connected components → keep the min-id canonical doc per
-        near-dup cluster."""
+        near-dup cluster. Three steps read the input, so the stage
+        persists it (a JDBC source is queried once); ``run_job``
+        releases it, and a Python caller runs inside a ``cache_scope()``."""
         from lightlane_spark.operators.clustering import dedup_by_components
         from lightlane_spark.operators.fuzzy_dedup import dedup_minhash
 
         def _stage(df: DataFrame) -> DataFrame:
+            df = tracked_persist(df)
             pairs = dedup_minhash(
                 df, text_col, id_col, threshold=threshold
             ).select("id_a", "id_b")

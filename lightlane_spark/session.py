@@ -7,10 +7,10 @@ UDFs and ``mapInPandas`` use Arrow regardless), the UTC session zone,
 scan-split and broadcast sizing, one BLAS thread per Python worker, a
 generated-class cache that holds the engine's working set (Spark's
 100-entry default evicts and recompiles it on every pass), and a
-shuffle-partition count that callers override per cluster. AQE, its
-partition coalescing and skew-join splitting, runtime Bloom filters and
-parquet pushdown are Spark 4 defaults and are not restated. Local test
-runs use ``local[N]``.
+shuffle-partition count. AQE, its partition coalescing and skew-join
+splitting, runtime Bloom filters and parquet pushdown are Spark 4
+defaults and are not restated. Local test runs use ``local[N]``.
+``extra_conf`` overrides any of them (shuffle partitions: ~2-3× cores).
 """
 
 from __future__ import annotations
@@ -27,6 +27,7 @@ _DEFAULT_CONF = MappingProxyType({
     # OP-05); mapInPandas and pandas UDFs use Arrow regardless of it.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     "spark.sql.session.timeZone": "UTC",
+    "spark.sql.shuffle.partitions": "32",
     # Dimension tables (region/nation/customer at any SF that fits)
     # should broadcast; 32 MB is a safe executor-memory-friendly cap.
     "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
@@ -82,7 +83,6 @@ _DEFAULT_CONF = MappingProxyType({
 def get_spark(
     app_name: str = "lightlane_spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
@@ -94,12 +94,7 @@ def get_spark(
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     builder = SparkSession.builder.appName(app_name).master(master or f"local[{cpus}]")
-    conf = dict(_DEFAULT_CONF)
-    if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
-    conf["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
-    if extra_conf:
-        conf.update(extra_conf)
+    conf = {**_DEFAULT_CONF, **(extra_conf or {})}
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

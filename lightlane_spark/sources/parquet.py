@@ -81,11 +81,3 @@ def read_table(
     if where:
         df = df.filter(where)
     return df
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql use."""
-    for t in TABLES:
-        p = table_path(sf_dir, t)
-        if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(t)

@@ -238,24 +238,11 @@ def stateful_running_counts(
     )
 
 
-def _default_stream_timeout() -> int:
-    """Default wait for test/query streams (seconds). A healthy
-    availableNow micro-batch run at these data sizes finishes in
-    single-digit seconds, so the timeout only bounds pathological
-    hangs — generous is free. 300 s (override:
-    SPARK_GRAFT_STREAM_TIMEOUT) because a contended box has been
-    observed to push a normally-3 s drain past 120 s (r7: a sweep
-    sharing local[32] with a second Spark session false-failed
-    streaming_interval_join at the old 120 s default)."""
-    import os as _os
-
-    return int(_os.environ.get("SPARK_GRAFT_STREAM_TIMEOUT", "300"))
-
-
-def run_to_completion(query, timeout_sec: int | None = None) -> None:
+# The 300 s default only bounds hangs (a healthy run takes seconds):
+# a sweep sharing local[32] with a second session pushed a 3 s drain
+# past 120 s and false-failed streaming_interval_join.
+def run_to_completion(query, timeout_sec: int = 300) -> None:
     """Await an availableNow query; raises on streaming failure."""
-    if timeout_sec is None:
-        timeout_sec = _default_stream_timeout()
     if not query.awaitTermination(timeout_sec):
         query.stop()
         raise TimeoutError(f"streaming query did not finish in {timeout_sec}s")
@@ -288,7 +275,7 @@ def drain_to_frame(
         spark._jsparkSession.sessionState().catalog().dropTempView(name)  # noqa: SLF001
 
 
-def drain_until(query, condition, timeout_sec: int | None = None, poll_sec: float = 1.0) -> None:
+def drain_until(query, condition, timeout_sec: int = 300, poll_sec: float = 1.0) -> None:
     """Run a streaming query until ``condition()`` is truthy, then stop
     it gracefully.
 
@@ -300,8 +287,6 @@ def drain_until(query, condition, timeout_sec: int | None = None, poll_sec: floa
     """
     import time as _time
 
-    if timeout_sec is None:
-        timeout_sec = _default_stream_timeout()
     deadline = _time.monotonic() + timeout_sec
     try:
         while _time.monotonic() < deadline:

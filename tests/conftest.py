@@ -14,7 +14,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="lightlane-tests", shuffle_partitions=8)
+    s = get_spark(
+        app_name="lightlane-tests", extra_conf={"spark.sql.shuffle.partitions": "8"}
+    )
     yield s
 
 

@@ -59,7 +59,7 @@ def test_merge_bucketed_table_keeps_layout(spark, sf_dir, no_broadcast):
     # join against the bucketed scan
     target = spark.table("m_orders")
     mplan = plan_summary(
-        merge_upsert(target, staging, ["o_orderkey"], broadcast_staging=True)
+        merge_upsert(target, F.broadcast(staging), ["o_orderkey"])
     )
     assert mplan.broadcast_joins >= 1, mplan.text[:600]
     assert "Exchange hashpartitioning(o_orderkey" not in mplan.text, mplan.text[:900]

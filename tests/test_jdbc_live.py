@@ -146,3 +146,77 @@ def test_live_incremental_extract_from_derby(spark, sf_dir, derby_url, tmp_path)
     assert {r.o_orderkey for r in lake.collect()} == {
         r.o_orderkey for r in orders.collect()
     }
+
+
+def _write_range(spark, url, table, null_keys=False):
+    """``table`` with a bigint split column ``k`` = 0..999 (all NULL
+    with ``null_keys``) and a payload ``v``."""
+    k = F.lit(None).cast("bigint") if null_keys else F.col("id")
+    df = spark.range(1000).select(k.alias("k"), F.col("id").alias("v"))
+    write_jdbc(df, url, table, mode="overwrite", properties=_PROPS)
+
+
+def _jdbc_extract(spark, url, **extract):
+    from lightlane_spark.jobspec import build_pipeline
+
+    spec = {"extract": {"kind": "jdbc", "url": url, "properties": _PROPS, **extract}}
+    return build_pipeline(spark, spec).dataframe()
+
+
+def test_split_extract_without_bounds_probes_them(spark, derby_url):
+    """A jobspec JDBC extract with ``splits`` and no ``bounds`` probes
+    the split column's min/max (reference ``dumper/sql.py:59-68``) and
+    reads in ``splits`` ranges, not serially."""
+    _write_range(spark, derby_url, "t")
+    df = _jdbc_extract(spark, derby_url, table="t", splitby='"k"', splits=4)
+    assert df.rdd.getNumPartitions() == 4
+    assert sorted(r.v for r in df.collect()) == list(range(1000))
+
+
+def test_split_extract_over_null_bounds_reads_serially(spark, derby_url):
+    """An all-NULL split column probes NULL bounds: one serial read
+    (reference ``dumper/sql.py:135-137``) that keeps every row."""
+    _write_range(spark, derby_url, "t", null_keys=True)
+    df = _jdbc_extract(spark, derby_url, table="t", splitby='"k"', splits=4)
+    assert df.rdd.getNumPartitions() == 1
+    assert sorted(r.v for r in df.collect()) == list(range(1000))
+
+
+def test_split_query_extract_needs_bounds(spark, derby_url):
+    """A ``query`` cannot be probed, so a split query without ``bounds``
+    is refused instead of silently reading serially."""
+    _write_range(spark, derby_url, "t")
+    with pytest.raises(ValueError, match="bounds"):
+        _jdbc_extract(spark, derby_url, query="SELECT * FROM t", splitby='"k"', splits=4)
+
+
+def test_dedup_fuzzy_reads_jdbc_source_once(spark, sf_dir, derby_url, tmp_path):
+    """The fuzzy-dedup stage reads its input three times (signatures,
+    verifier, components); it persists it, so a JDBC extract scans the
+    source once per run. Each scan runs the ``sessionInitStatement``,
+    which here counts itself into ``scans``. The run releases what it
+    persisted and keeps the rows of the same stage over parquet."""
+    from lightlane_spark import cache
+    from lightlane_spark.jobspec import run_job
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    write_jdbc(docs, derby_url, "docs", mode="overwrite", properties=_PROPS)
+    jvm_sql_executor(spark, derby_url)(["CREATE TABLE scans (n INT)"])
+    props = {**_PROPS, "sessionInitStatement": "INSERT INTO scans VALUES (1)"}
+    jdbc_out, parquet_out = str(tmp_path / "jdbc"), str(tmp_path / "parquet")
+    tracked = len(cache._TRACKED)
+    run_job(spark, {
+        "extract": {"kind": "jdbc", "url": derby_url, "table": "docs", "properties": props},
+        "transforms": [{"op": "dedup_fuzzy"}],
+        "sinks": [{"kind": "parquet", "path": jdbc_out}],
+    })
+    assert len(cache._TRACKED) == tracked
+    assert read_jdbc(spark, derby_url, table="scans", properties=_PROPS).count() == 1
+    run_job(spark, {
+        "extract": {"kind": "parquet", "sf_dir": sf_dir, "table": "documents",
+                    "columns": ["doc_id", "text"]},
+        "transforms": [{"op": "dedup_fuzzy"}],
+        "sinks": [{"kind": "parquet", "path": parquet_out}],
+    })
+    rows = lambda p: sorted(tuple(r) for r in spark.read.parquet(p).collect())  # noqa: E731
+    assert rows(jdbc_out) == rows(parquet_out)

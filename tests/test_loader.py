@@ -114,12 +114,30 @@ def test_analyze_keeps_callers_cache(spark, tmp_path):
     try:
         assert mine.count() == 100 and target.count() == 3
         level = mine.storageLevel
-        Loader(spark, path, "overwrite", analyze=True).execute(spark.range(5))
+        Loader(spark, path, "overwrite").execute(spark.range(5))
         assert mine.storageLevel == level
         assert mine.is_cached and target.is_cached
         assert target.count() == 5
     finally:
         mine.unpersist()
+        target.unpersist()
+
+
+@pytest.mark.parametrize("mode", ["append", "overwrite", "merge"])
+def test_cached_read_of_target_sees_the_load(spark, tmp_path, mode):
+    """OP-32: every mode refreshes the target path, so a persisted read
+    of the table sees the loaded rows."""
+    path = str(tmp_path / "t")
+    Loader(spark, path, "overwrite").execute(spark.range(3))
+    target = spark.read.parquet(path).persist()
+    try:
+        assert target.count() == 3
+        Loader(spark, path, mode, primary_keys=["id"] if mode == "merge" else []).execute(
+            spark.range(2, 6)
+        )
+        expected = {"append": 7, "overwrite": 4, "merge": 6}[mode]
+        assert target.count() == expected
+    finally:
         target.unpersist()
 
 

@@ -90,6 +90,7 @@ def test_pipeline_dedup_fuzzy_end_to_end(spark, sf_dir, tmp_path):
     fluent chain. Exact dups (verbatim copies) must collapse."""
     from pyspark.sql import functions as F
 
+    from lightlane_spark.cache import cache_scope
     from lightlane_spark.pipeline import Pipeline
     from lightlane_spark.sources.parquet import read_table
 
@@ -99,13 +100,8 @@ def test_pipeline_dedup_fuzzy_end_to_end(spark, sf_dir, tmp_path):
     )
     corpus = docs.unionByName(dups)
     out_path = str(tmp_path / "deduped")
-    (
-        Pipeline(spark)
-        .extract_df(corpus)
-        .dedup_fuzzy()
-        .to_parquet(out_path)
-        .run()
-    )
+    with cache_scope():  # releases the stage's persisted input
+        Pipeline(spark).extract_df(corpus).dedup_fuzzy().to_parquet(out_path).run()
     kept = spark.read.parquet(out_path)
     kept_ids = {r.doc_id for r in kept.collect()}
     # every injected verbatim dup must be gone (its base doc has min id)

@@ -17,7 +17,7 @@ def test_merge_broadcasts_small_staging(spark, sf_dir):
     small staging side — never shuffling the (huge) target."""
     target = read_table(spark, sf_dir, "orders")
     staging = target.filter("o_orderkey % 50 = 0")
-    merged = merge_upsert(target, staging, ["o_orderkey"], broadcast_staging=True)
+    merged = merge_upsert(target, F.broadcast(staging), ["o_orderkey"])
     ps = plan_summary(merged)
     assert "BroadcastHashJoin" in ps.text and "LeftAnti" in ps.text
     assert ps.sortmerge_joins == 0

@@ -24,6 +24,14 @@ def test_json_extract_with_malformed(spark):
     assert out[1].b is None and out[2].b is None  # malformed/null → NULL, no failure
 
 
+def test_json_extract_fields_read_the_original_column(spark):
+    """A field named like the source column replaces it, and the other
+    fields still read the original JSON, not the replaced value."""
+    df = spark.createDataFrame([('{"a": "x", "b": "y"}',)], "props: string")
+    row = json_extract(df, "props", {"props": "$.a", "b": "$.b"}).first()
+    assert (row.props, row.b) == ("x", "y")
+
+
 def test_flatten_json_array(spark):
     df = spark.createDataFrame(
         [
